@@ -69,8 +69,11 @@ private[graft] object MetaIO {
     */
   def readGroups(conf: Configuration, path: String): Seq[Group] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    dataFiles(fs, p).flatMap { f =>
+    val files = dataFiles(p.getFileSystem(conf), p)
+    // An object with no data file is partial or foreign, not "zero rows";
+    // the Spark read this replaced failed on it too (no schema to infer).
+    if (files.isEmpty) throw new IllegalStateException(s"MetaIO: no *.parquet data file under $path")
+    files.flatMap { f =>
       val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
       finally reader.close()

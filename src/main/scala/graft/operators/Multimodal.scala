@@ -78,7 +78,8 @@ object Multimodal {
     * formats reuse the thread-local reader (same reader class the
     * registry walk would pick — the JDK ships exactly one reader per
     * sniffed format); anything else falls back to the full `ImageIO.read`
-    * dispatch, so the total-function contract is unchanged.
+    * dispatch, so the total-function contract is unchanged. The stream is
+    * closed once: `ImageIO.read` closes it itself, and a second close throws.
     */
   private[graft] def decodeImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
     val iis = memIn(bytes)
@@ -88,10 +89,9 @@ object Multimodal {
       else {
         val r = readerFor(fmt)
         try { r.setInput(iis, true, true); r.read(0) }
-        finally r.reset()
+        finally { r.reset(); iis.close() }
       }
     } catch { case scala.util.control.NonFatal(_) => null }
-    finally iis.close()
   }
 
   /** One media row: opaque payload + typed metadata. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-measure combine — parser2's three-way join + per-date zip with
@@ -13,18 +13,20 @@ import org.apache.spark.sql.functions._
   * `src/parser2.py:35-46`); dates absent from a matched deaths/recovered row
   * default to 0; deaths/recovered-only dates are dropped.
   *
-  * Spark mapping: left-outer equi-joins of the WIDE tables on the composite
-  * key, then a zip-projection over the driving table's date columns with
-  * `coalesce(col, 0)`. The reference's O(N²·M) rescan loop becomes one or two
-  * broadcast/shuffle hash joins; the per-date merge is a projection (no
-  * shuffle, order-exact). At scale: measures partitioned the same way join
-  * shuffle-free; AQE downgrades to broadcast when a side is small.
+  * Spark mapping: each table's date tail is reduced to ONE `array<int>`,
+  * aligned by name to the driver's dates ([[Unpivot.dateArray]]), before the
+  * left-outer equi-joins, so a join carries the keys plus one array per
+  * measure. `time_series` is one `arrays_zip` ([[Unpivot.timeSeries]]), so
+  * plan size does not grow with the date count.
   */
 object Combine {
 
   /** J2+R2: join `measures` (name -> wide table) onto `driver` by `keyCols`,
     * then nest `array<struct<date, <measure1>, <measure2>, …>>` over the
     * driver's date columns, zero-filling missing sides/cells.
+    *
+    * Cells are cast before the join: under ANSI mode a junk cell fails the
+    * action (E4) even in a measure row no driver row matches.
     *
     * Precondition: `keyCols` are unique within each measure table (true for
     * the reference's data, SURVEY §2.4-J2). With duplicate keys a left-outer
@@ -40,36 +42,14 @@ object Combine {
       keyCols: Seq[String],
   ): DataFrame = {
     val cls = Normalize.classify(driver.columns.toSeq)
-    val dateCols = cls.dateCols
-
-    // Prefix each measure table's date columns so the join output is unambiguous.
-    val measureDates: Map[String, Set[String]] = measures.map { case (name, m) =>
-      name -> Normalize.classify(m.columns.toSeq).dateCols.toSet
-    }.toMap
-    val joined = measures.foldLeft(driver) { case (acc, (name, m)) =>
-      val mcls = Normalize.classify(m.columns.toSeq)
-      val proj = m.select(
-        (keyCols.map(col) ++ mcls.dateCols.map(c => col(c).as(s"__${name}__$c"))): _*
-      )
-      acc.join(proj, keyCols, "left_outer")
+    val keep = (cls.other ++ cls.latLong).map(col)
+    def series(name: String, df: DataFrame) = Unpivot.dateArray(df, cls.dateCols, "int", zeroFill = true).as(s"__$name")
+    val joined = measures.foldLeft(driver.select(keep :+ series(driverMeasure, driver): _*)) { case (acc, (name, m)) =>
+      acc.join(m.select(keyCols.map(col) :+ series(name, m): _*), keyCols, "left_outer")
     }
-
-    val elems: Seq[Column] = dateCols.map { d =>
-      struct(
-        lit(Normalize.normalizeDateName(d)).as("date") +:
-          (coalesce(col(d).cast("int"), lit(0)).as(driverMeasure) +:
-            measures.map { case (name, _) =>
-              // A date column absent from a measure's SCHEMA contributes 0,
-              // same as a missing row (reference src/parser2.py:35-46).
-              val src =
-                if (measureDates(name)(d)) coalesce(col(s"__${name}__$d").cast("int"), lit(0))
-                else lit(0)
-              src.as(name)
-            }): _*
-      )
-    }
-
-    val keep = (cls.other ++ cls.latLong).filterNot(dateCols.contains).map(col)
-    joined.select((array(elems: _*).as("time_series") +: keep.toSeq): _*)
+    // An unmatched measure row is a null array: every date contributes 0.
+    val zeros = typedLit(Seq.fill(cls.dateCols.size)(0))
+    val fields = (driverMeasure -> col(s"__$driverMeasure")) +: measures.map { case (n, _) => n -> coalesce(col(s"__$n"), zeros) }
+    joined.select(Unpivot.timeSeries(cls.dateCols, fields, "int").as("time_series") +: keep: _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 
 /** Wide→nested / wide→long reshape — the reference's signature operator
   * (R1, reference `src/parser.py:28-41`; SURVEY §2.3).
@@ -22,20 +23,38 @@ import org.apache.spark.sql.functions._
   */
 object Unpivot {
 
-  /** R1 nest: `time_series` = array(struct(dateLiteral, cast(col, int))).
-    * `dateCols` must be in chronological order (CSV column order); each
-    * element's `date` is the driver-normalized literal (P4), so Catalyst
-    * constant-folds it — per row only the int casts execute.
+  /** R1 nest: `time_series: array<struct<date, value>>` in `dateCols`
+    * (= CSV column = chronological) order, zipped by [[timeSeries]] from one
+    * array of casts, so the plan holds no struct per date and per row only
+    * the casts execute.
     */
   def nest(df: DataFrame, dateCols: Seq[String], valueType: String = "int"): DataFrame = {
-    val elems: Seq[Column] = dateCols.map { c =>
-      struct(
-        lit(Normalize.normalizeDateName(c)).as("date"),
-        col(c).cast(valueType).as("value"),
-      )
-    }
-    val keep = df.columns.filterNot(dateCols.contains).map(col)
-    df.select((array(elems: _*).as("time_series") +: keep.toSeq): _*)
+    val series = timeSeries(dateCols, Seq("value" -> dateArray(df, dateCols, valueType, zeroFill = false)), valueType)
+    df.select(series.as("time_series") +: df.columns.filterNot(dateCols.contains).map(col).toSeq: _*)
+  }
+
+  /** `df`'s cells for `dates` as one array, aligned by column NAME. With
+    * `zeroFill` a null cell, or a date absent from `df`'s schema, is 0 (E2);
+    * a junk cell still fails the cast under ANSI mode (E4).
+    */
+  private[ops] def dateArray(df: DataFrame, dates: Seq[String], valueType: String, zeroFill: Boolean): Column = {
+    val (have, zero) = (df.columns.toSet, lit(0).cast(valueType))
+    array(dates.map {
+      case d if !zeroFill => col(d).cast(valueType)
+      case d if have(d)   => coalesce(col(d).cast(valueType), zero)
+      case _              => zero
+    }: _*)
+  }
+
+  /** `array<struct<date, <field>…>>`: `arrays_zip` of the normalized `dates`
+    * literal (P4) and equally long field arrays, cast to name the fields.
+    * Never derive the field arrays with `transform`/`zip_with` lambdas over
+    * an inline `array(...)`: Catalyst inlines it into the lambda, and every
+    * element rebuilds the whole array (O(dates²)).
+    */
+  private[ops] def timeSeries(dates: Seq[String], fields: Seq[(String, Column)], valueType: String): Column = {
+    val elem = StructType(StructField("date", StringType) +: fields.map(f => StructField(f._1, DataType.fromDDL(valueType))))
+    arrays_zip(typedLit(dates.map(Normalize.normalizeDateName)) +: fields.map(_._2): _*).cast(ArrayType(elem))
   }
 
   /** Long form: one row per (id, variable, value). Spark's native `unpivot`

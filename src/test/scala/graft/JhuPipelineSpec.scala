@@ -2,6 +2,7 @@ package graft
 
 import graft.ops._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** Golden-output tests for the parser/parser2 pipeline equivalents against
   * the reference's exact JSON shape (FIXTURES.md A3/A4): field order, absent
@@ -70,6 +71,37 @@ class JhuPipelineSpec extends SparkSpec {
         """"province/state":"North","country/region":"Sylvania","lat":1.0,"long":2.0,"iso2":"SY"}""")
     // Atlantis: no lookup match -> iso2 absent.
     assert(!out("Atlantis").contains("iso2"))
+  }
+
+  test("parser2: measures align by date NAME, and a deaths-only date is dropped (R2)") {
+    // deaths lists its dates in another order than confirmed, plus 1/21/20,
+    // which only deaths has
+    val reordered = Seq(("", "Freedonia", "10.5", "-20.25", "7", "9", "1"))
+      .toDF("Province/State", "Country/Region", "Lat", "Long", "1/23/20", "1/21/20", "1/22/20")
+    val out = jsonOf(Pipelines.parser2(confirmed, reordered, recovered, lookup))
+    assert(out("Freedonia") ==
+      """{"time_series":[{"date":"2020-01-22 00:00:00","confirmed":1,"deaths":1,"recovered":0},""" +
+        """{"date":"2020-01-23 00:00:00","confirmed":2,"deaths":7,"recovered":0}],""" +
+        """"province/state":"","country/region":"Freedonia","lat":10.5,"long":-20.25,"iso2":"FD"}""")
+  }
+
+  test("parser2: a junk date cell in confirmed or deaths fails the action under ANSI mode (E4)") {
+    def withCell(df: DataFrame, country: String, cell: String): DataFrame =
+      df.withColumn("1/23/20", when(col("Country/Region") === country, lit(cell)).otherwise(col("1/23/20")))
+    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      for (junk <- Seq("abc", "1.5", "")) {
+        val inConfirmed = Pipelines.parser2(withCell(confirmed, "Sylvania", junk), deaths, recovered, lookup)
+        val inDeaths = Pipelines.parser2(confirmed, withCell(deaths, "Freedonia", junk), recovered, lookup)
+        for (df <- Seq(inConfirmed, inDeaths)) {
+          // never zero-filled: the array form casts, and coalesces only nulls
+          val e = intercept[Exception](Pipelines.toJsonRecords(df).collect())
+          assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT")), s"'$junk': $e")
+        }
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
   test("record key synthesis: empty province drops the dash (P5/P6)") {

@@ -84,4 +84,13 @@ class MetaIOSpec extends SparkSpec {
     val g = MetaIO.readGroups(conf, dir).head
     intercept[IllegalArgumentException] { MetaIO.str(g, "nope") }
   }
+
+  test("readGroups on a directory with no *.parquet data file fails loudly, not as zero rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_empty")
+    intercept[IllegalStateException](MetaIO.readGroups(conf, dir.toString))
+    // a commit marker alone is no data file either
+    java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
+    val e = intercept[IllegalStateException](MetaIO.readGroups(conf, dir.toString))
+    assert(e.getMessage.contains("no *.parquet data file"), e.getMessage)
+  }
 }

@@ -198,6 +198,20 @@ class MultimodalSpec extends SparkSpec {
     img
   }
 
+  test("decodeImage: unsniffed BMP, WBMP and TIFF payloads decode through ImageIO.read and do not throw") {
+    import java.awt.image.BufferedImage
+    val formats = Seq("bmp" -> BufferedImage.TYPE_INT_RGB, "wbmp" -> BufferedImage.TYPE_BYTE_BINARY, "tiff" -> BufferedImage.TYPE_INT_RGB)
+    for ((fmt, imageType) <- formats) {
+      val src = new BufferedImage(8, 6, imageType)
+      src.setRGB(1, 1, 0xffffff)
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(src, fmt, bos), fmt)
+      val img = Multimodal.decodeImage(bos.toByteArray)
+      assert(img != null && img.getWidth == 8 && img.getHeight == 6, fmt)
+      assert((img.getRGB(1, 1) & 0xffffff) == 0xffffff && (img.getRGB(0, 0) & 0xffffff) == 0, fmt)
+    }
+  }
+
   test("imageAHash: closed-form half-black/half-white hash, undecodable totality") {
     import graft.operators.Multimodal.MediaRecord
     val ds = Seq(

@@ -45,6 +45,51 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"nest must not shuffle:\n$p")
   }
 
+  test("parser2 plan does not grow with the date columns: one array per measure, one arrays_zip") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{ArraysZip, CreateArray, CreateNamedStruct, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LeafNode, LogicalPlan}
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+    import spark.implicits._
+    // RDD-backed frames: over a local relation the optimizer would evaluate
+    // the date projections away (ConvertToLocalRelation)
+    def wide(dates: Int): DataFrame = {
+      val names = Seq("Province/State", "Country/Region", "Lat", "Long") ++
+        (0 until dates).map(i => java.time.LocalDate.of(2020, 1, 22).plusDays(i))
+          .map(d => s"${d.getMonthValue}/${d.getDayOfMonth}/${d.getYear % 100}")
+      val row = Row.fromSeq(Seq("", "Freedonia", "1.0", "2.0") ++ Seq.fill(dates)("3"))
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), StructType(names.map(StructField(_, StringType))))
+    }
+    val lookup = graft.ops.Enrich.withFileOrder(Seq(("Freedonia", "FD", "1.0", "2.0")).toDF("Country_Region", "iso2", "Lat", "Long_"))
+    def exprs(p: LogicalPlan): Seq[Expression] = p.collect { case n if !n.isInstanceOf[LeafNode] => n.expressions }.flatten
+    // every node, a date array counted as one: what must not grow with width
+    def size(e: Expression): Int = e match {
+      case _: CreateArray => 1
+      case _              => 1 + e.children.map(size).sum
+    }
+    def optimized(dates: Int): LogicalPlan =
+      Pipelines.parser2(wide(dates), wide(dates), wide(dates), lookup).queryExecution.optimizedPlan
+
+    val sizes = Seq(20, 400).map { dates =>
+      val p = optimized(dates)
+      val all = exprs(p).flatMap(_.collect { case e => e })
+      assert(!all.exists(_.isInstanceOf[CreateNamedStruct]), s"per-date struct at $dates dates:\n$p")
+      assert(all.count(_.isInstanceOf[ArraysZip]) == 1, s"time_series must be one arrays_zip:\n$p")
+      assert(all.collect { case a: CreateArray => a.children.size } == Seq.fill(3)(dates), p)
+      val joins = p.collect { case j: Join => j }
+      val measureJoins = joins.filter(_.right.output.exists(_.dataType.isInstanceOf[ArrayType]))
+      assert(measureJoins.size == 2, p)
+      for (j <- measureJoins) {
+        val (arrays, rest) = j.right.output.partition(_.dataType.isInstanceOf[ArrayType])
+        assert(arrays.size == 1 && rest.map(_.name).toSet == Set("Country/Region", "Province/State"), j.right.output)
+      }
+      for (j <- joins; a <- j.left.output ++ j.right.output)
+        assert(!a.name.matches(graft.ops.Normalize.DateColPattern), s"date column ${a.name} crosses a join:\n$p")
+      p.collect { case n if !n.isInstanceOf[LeafNode] => 1 }.sum + exprs(p).map(size).sum
+    }
+    assert(sizes.distinct.size == 1, s"plan nodes outside the date arrays: $sizes for 20 vs 400 dates")
+  }
+
   test("q09 melt (native unpivot) stays shuffle-free") {
     val p = plan(
       Unpivot.melt(
