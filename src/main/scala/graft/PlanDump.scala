@@ -25,13 +25,6 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_DUMP_FULL=1: disable lineage truncation so the dump
-    // shows the subtrees a checkpoint boundary would hide (the pair-build
-    // side of the banding family reads as one `Scan ExistingRDD` line
-    // otherwise). Tag such dumps differently — the full tree is NOT the
-    // executed plan shape (truncation is load-bearing in real runs).
-    if (sys.env.contains("SPARK_GRAFT_DUMP_FULL"))
-      spark.conf.set(graft.operators.Lineage.DumpFullPlansKey, "true")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -18,16 +18,6 @@ object Lineage {
 
   val ConfKey = "spark.graft.reliableCheckpoints"
 
-  /** DEV-ONLY (PlanDump): `spark.graft.dumpFullPlans=true` makes truncate
-    * a PASS-THROUGH so `explain` shows the whole operator tree. A
-    * checkpoint boundary hides everything below it from every plan dump
-    * (the pair-build subtree of the banding family reads as one
-    * `Scan ExistingRDD` line), which made several rounds' committed plan
-    * evidence vacuous. Never set this in a real run: truncation is
-    * load-bearing (plan-growth bounds, materialize-once contracts).
-    */
-  val DumpFullPlansKey = "spark.graft.dumpFullPlans"
-
   /** Truncate `df`'s lineage. `eager = false` defers materialization to the
     * caller's next action (used by the iterative CC operators so the
     * convergence aggregation doubles as the materializer — one job per
@@ -35,8 +25,6 @@ object Lineage {
     * parameter override the session conf.
     */
   def truncate(df: DataFrame, eager: Boolean = true, forceReliable: Boolean = false): DataFrame = {
-    if (df.sparkSession.conf.getOption(DumpFullPlansKey).exists(_.trim.equalsIgnoreCase("true")))
-      return df
     val reliable = forceReliable || df.sparkSession.conf.getOption(ConfKey).exists { v =>
       // accept the common truthy/falsy spellings; anything else names the
       // key instead of throwing toBoolean's bare "For input string" error

@@ -72,9 +72,10 @@ object Pin {
     * work that compounds on the composition paths) and read the PRE-AQE
     * partition count, silently no-op'ing behind any upstream shuffle.
     * Spread protects MAP work over scan-rooted (or checkpoint-rooted)
-    * inputs; a plan with its own shuffle boundary (join/aggregate/window/
-    * repartition) below the spread point already runs its map work at the
-    * session's shuffle parallelism, so it no-ops there by design.
+    * inputs; a plan with its own shuffle boundary (join/aggregate/dedup/
+    * set operation/typed grouping/window/sort/repartition/rebalance) below
+    * the spread point already runs its map work at the session's shuffle
+    * parallelism, so it no-ops there by design.
     *
     * Threshold: repartition only when the input cannot reach HALF the
     * configured parallelism — an input with n-1 splits should not pay a
@@ -97,8 +98,10 @@ object Pin {
   private def scanParallelism(df: DataFrame): Option[Long] = {
     val plan = df.queryExecution.analyzed
     val shuffling = plan.exists {
-      case _: Join | _: Aggregate | _: Distinct | _: Window | _: Sort => true
-      case _: RepartitionOperation => true
+      case _: Join | _: Aggregate | _: Distinct | _: Deduplicate | _: Window | _: Sort => true
+      case _: Intersect | _: Except => true
+      case _: MapGroups | _: FlatMapGroupsWithState | _: CoGroup => true
+      case _: RepartitionOperation | _: RebalancePartitions => true
       case _ => false
     }
     if (shuffling) None

@@ -14,20 +14,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *    fetched body via `spark.read.csv(Dataset[String])`. Driver-side fetch
   *    is inherently single-node; only for small dimension files (the ~4k-row
   *    lookup), never the fact path.
-  *  - [[Fetcher]] — seam for the HTTP GET (zero-egress here, so production
-  *    would plug `urlopen`-equivalent; tests plug a file reader).
   */
 object Csv {
-
-  trait Fetcher extends Serializable {
-    def fetch(url: String): String
-  }
-
-  /** Local-file Fetcher (test double for HTTP; same one-big-string shape). */
-  final class FileFetcher extends Fetcher {
-    def fetch(url: String): String =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(url)), "UTF-8")
-  }
 
   /** S2 — header'd CSV scan, all columns StringType (DictReader parity). */
   def readCsv(spark: SparkSession, path: String): DataFrame =
@@ -62,10 +50,6 @@ object Csv {
     val lines: Dataset[String] = spark.createDataset(body.split("\n", -1).toIndexedSeq)
     spark.read.option("header", "true").option("inferSchema", "false").csv(lines)
   }
-
-  /** S1+S2 — fetch then parse (the reference's `fetch_data` + DictReader). */
-  def fetchCsv(spark: SparkSession, url: String, fetcher: Fetcher): DataFrame =
-    fromString(spark, fetcher.fetch(url))
 
   /** S4 — the reference's fixed multi-URL manifest (one CSV per category,
     * reference `src/parser.py:88-91`) as ONE scan: read all paths together

@@ -85,23 +85,38 @@ class JhuPipelineSpec extends SparkSpec {
         """"province/state":"","country/region":"Freedonia","lat":10.5,"long":-20.25,"iso2":"FD"}""")
   }
 
-  test("parser2: a junk date cell in confirmed or deaths fails the action under ANSI mode (E4)") {
-    def withCell(df: DataFrame, country: String, cell: String): DataFrame =
-      df.withColumn("1/23/20", when(col("Country/Region") === country, lit(cell)).otherwise(col("1/23/20")))
-    def causes(t: Throwable): Seq[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+  private def withCell(df: DataFrame, country: String, cell: String): DataFrame =
+    df.withColumn("1/23/20", when(col("Country/Region") === country, lit(cell)).otherwise(col("1/23/20")))
+
+  /** Runs `body` under ANSI mode, with each junk cell the reference's
+    * `int(...)` rejects.
+    */
+  private def forEachJunkUnderAnsi(body: String => Unit): Unit = {
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     try {
       spark.conf.set("spark.sql.ansi.enabled", "true")
-      for (junk <- Seq("abc", "1.5", "")) {
-        val inConfirmed = Pipelines.parser2(withCell(confirmed, "Sylvania", junk), deaths, recovered, lookup)
-        val inDeaths = Pipelines.parser2(confirmed, withCell(deaths, "Freedonia", junk), recovered, lookup)
-        for (df <- Seq(inConfirmed, inDeaths)) {
-          // never zero-filled: the array form casts, and coalesces only nulls
-          val e = intercept[Exception](Pipelines.toJsonRecords(df).collect())
-          assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT")), s"'$junk': $e")
-        }
-      }
+      Seq("abc", "1.5", "").foreach(body)
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  private def assertCastFails(df: DataFrame, junk: String): Unit = {
+    val e = intercept[Exception](Pipelines.toJsonRecords(df).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT")), s"'$junk': $e")
+  }
+
+  test("parser2: a junk date cell in confirmed or deaths fails the action under ANSI mode (E4)") {
+    forEachJunkUnderAnsi { junk =>
+      // never zero-filled: the array form casts, and coalesces only nulls
+      assertCastFails(Pipelines.parser2(withCell(confirmed, "Sylvania", junk), deaths, recovered, lookup), junk)
+      assertCastFails(Pipelines.parser2(confirmed, withCell(deaths, "Freedonia", junk), recovered, lookup), junk)
+    }
+  }
+
+  test("parser: a junk date cell fails the action under ANSI mode (E4)") {
+    forEachJunkUnderAnsi { junk =>
+      assertCastFails(Pipelines.parser(withCell(confirmed, "Sylvania", junk), lookup), junk)
+    }
   }
 
   test("record key synthesis: empty province drops the dash (P5/P6)") {

@@ -2,6 +2,8 @@ package graft
 
 import graft.ops.Unpivot
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions — the "would this survive a 100× scale-up"
@@ -45,37 +47,57 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"nest must not shuffle:\n$p")
   }
 
-  test("parser2 plan does not grow with the date columns: one array per measure, one arrays_zip") {
+  // RDD-backed JHU-shaped frame, every cell a string: over a local relation
+  // the optimizer would evaluate the date projections away
+  // (ConvertToLocalRelation)
+  private def wideJhu(dates: Int): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.expressions.{ArraysZip, CreateArray, CreateNamedStruct, Expression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LeafNode, LogicalPlan}
-    import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val names = Seq("Province/State", "Country/Region", "Lat", "Long") ++
+      (0 until dates).map(i => java.time.LocalDate.of(2020, 1, 22).plusDays(i))
+        .map(d => s"${d.getMonthValue}/${d.getDayOfMonth}/${d.getYear % 100}")
+    val row = Row.fromSeq(Seq("", "Freedonia", "1.0", "2.0") ++ Seq.fill(dates)("3"))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), StructType(names.map(StructField(_, StringType))))
+  }
+
+  private def jhuLookup: DataFrame = {
     import spark.implicits._
-    // RDD-backed frames: over a local relation the optimizer would evaluate
-    // the date projections away (ConvertToLocalRelation)
-    def wide(dates: Int): DataFrame = {
-      val names = Seq("Province/State", "Country/Region", "Lat", "Long") ++
-        (0 until dates).map(i => java.time.LocalDate.of(2020, 1, 22).plusDays(i))
-          .map(d => s"${d.getMonthValue}/${d.getDayOfMonth}/${d.getYear % 100}")
-      val row = Row.fromSeq(Seq("", "Freedonia", "1.0", "2.0") ++ Seq.fill(dates)("3"))
-      spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), StructType(names.map(StructField(_, StringType))))
-    }
-    val lookup = graft.ops.Enrich.withFileOrder(Seq(("Freedonia", "FD", "1.0", "2.0")).toDF("Country_Region", "iso2", "Lat", "Long_"))
-    def exprs(p: LogicalPlan): Seq[Expression] = p.collect { case n if !n.isInstanceOf[LeafNode] => n.expressions }.flatten
+    graft.ops.Enrich.withFileOrder(Seq(("Freedonia", "FD", "1.0", "2.0")).toDF("Country_Region", "iso2", "Lat", "Long_"))
+  }
+
+  /** The expressions of `p`'s operators. */
+  private def exprs(p: LogicalPlan): Seq[Expression] = p.collect { case n if !n.isInstanceOf[LeafNode] => n.expressions }.flatten
+
+  /** Every expression node of `p`'s operators, lambda bodies included. */
+  private def allExprs(p: LogicalPlan): Seq[Expression] = exprs(p).flatMap(_.collect { case e => e })
+
+  /** (ArrayTransform, Cast, Coalesce) node counts of `p`. */
+  private def castCounts(p: LogicalPlan): (Int, Int, Int) = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Cast, Coalesce}
+    val all = allExprs(p)
+    (all.count(_.isInstanceOf[ArrayTransform]), all.count(_.isInstanceOf[Cast]), all.count(_.isInstanceOf[Coalesce]))
+  }
+
+  test("parser2 plan does not grow with the date columns: one array per measure, one arrays_zip") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraysZip, CreateArray, CreateNamedStruct}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types.ArrayType
     // every node, a date array counted as one: what must not grow with width
     def size(e: Expression): Int = e match {
       case _: CreateArray => 1
       case _              => 1 + e.children.map(size).sum
     }
     def optimized(dates: Int): LogicalPlan =
-      Pipelines.parser2(wide(dates), wide(dates), wide(dates), lookup).queryExecution.optimizedPlan
+      Pipelines.parser2(wideJhu(dates), wideJhu(dates), wideJhu(dates), jhuLookup).queryExecution.optimizedPlan
 
     val sizes = Seq(20, 400).map { dates =>
       val p = optimized(dates)
-      val all = exprs(p).flatMap(_.collect { case e => e })
+      val all = allExprs(p)
       assert(!all.exists(_.isInstanceOf[CreateNamedStruct]), s"per-date struct at $dates dates:\n$p")
       assert(all.count(_.isInstanceOf[ArraysZip]) == 1, s"time_series must be one arrays_zip:\n$p")
       assert(all.collect { case a: CreateArray => a.children.size } == Seq.fill(3)(dates), p)
+      val counts = castCounts(p)
+      assert(counts._1 == 3, s"one cast lambda per measure at $dates dates:\n$p")
       val joins = p.collect { case j: Join => j }
       val measureJoins = joins.filter(_.right.output.exists(_.dataType.isInstanceOf[ArrayType]))
       assert(measureJoins.size == 2, p)
@@ -85,9 +107,18 @@ class PlanSpec extends SparkSpec {
       }
       for (j <- joins; a <- j.left.output ++ j.right.output)
         assert(!a.name.matches(graft.ops.Normalize.DateColPattern), s"date column ${a.name} crosses a join:\n$p")
-      p.collect { case n if !n.isInstanceOf[LeafNode] => 1 }.sum + exprs(p).map(size).sum
+      (p.collect { case n if !n.isInstanceOf[LeafNode] => 1 }.sum + exprs(p).map(size).sum, counts)
     }
-    assert(sizes.distinct.size == 1, s"plan nodes outside the date arrays: $sizes for 20 vs 400 dates")
+    assert(sizes.distinct.size == 1, s"(plan nodes outside the date arrays, (transforms, casts, coalesces)): $sizes for 20 vs 400 dates")
+  }
+
+  test("parser (nest) plan: one cast lambda, no cast per date") {
+    val counts = Seq(20, 400).map { dates =>
+      val p = Pipelines.parser(wideJhu(dates), jhuLookup).queryExecution.optimizedPlan
+      assert(castCounts(p)._1 == 1, s"one ArrayTransform at $dates dates:\n$p")
+      castCounts(p)
+    }
+    assert(counts.distinct.size == 1, s"(transforms, casts, coalesces): $counts for 20 vs 400 dates")
   }
 
   test("q09 melt (native unpivot) stays shuffle-free") {
@@ -312,6 +343,21 @@ class PlanSpec extends SparkSpec {
     )
     val pF = plan(Quality.filterFunnel(docs, Seq("nonempty" -> (length(col("text")) > 0))))
     assert("Exchange".r.findAllIn(pF).length == 1, s"funnel must be one agg exchange:\n$pF")
+  }
+
+  test("Pin.spread adds no repartition after dropDuplicates or typed grouping (their own shuffle)") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    Seq(("a", 1), ("a", 1), ("b", 2)).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(dir)
+    val oneFile = spark.read.parquet(dir)
+    def repartitions(df: DataFrame): Int =
+      graft.operators.Pin.spread(df, col("k")).queryExecution.analyzed.collect { case r: RepartitionByExpression => r }.size
+    // control: the bare single-file scan is narrow enough to spread
+    assert(repartitions(oneFile) == 1)
+    assert(repartitions(oneFile.dropDuplicates("k")) == 0)
+    val grouped = oneFile.as[(String, Int)].groupByKey(_._1).mapGroups((k, rows) => (k, rows.map(_._2).sum)).toDF("k", "v")
+    assert(repartitions(grouped) == 0)
   }
 
   test("statePeriods: ONE key-partitioned exchange carries windows, groupBy, and the closing lead") {

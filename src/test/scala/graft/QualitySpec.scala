@@ -215,6 +215,18 @@ class QualitySpec extends SparkSpec {
     } finally spark.conf.set(graft.operators.Lineage.ConfKey, "false")
   }
 
+  test("Lineage.truncate always checkpoints: no session conf turns it into a pass-through") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the retired plan-dump switch; a stray setting must not change execution
+    val key = "spark.graft.dumpFullPlans"
+    spark.conf.set(key, "true")
+    try {
+      val cut = graft.operators.Lineage.truncate(spark.range(10).toDF("id"))
+      assert(cut.queryExecution.analyzed.isInstanceOf[LogicalRDD], cut.queryExecution.analyzed)
+      assert(cut.count() == 10)
+    } finally spark.conf.unset(key)
+  }
+
   test("chunkDocuments: window/overlap arithmetic, short docs, full coverage") {
     val docs = Seq(
       (1L, (1 to 10).map(i => s"t$i").mkString(" ")), // 10 tokens, chunk=4, overlap=1 -> stride 3 -> 3 chunks
