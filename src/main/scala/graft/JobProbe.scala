@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev harness: per-JOB wall-time attribution for one or more
   * [[SparkEntry.queries]] entries (`runMain graft.JobProbe <sfDir> <query>
-  * [query...]`) — the missing grain between [[Probe]] (whole-query seconds)
-  * and [[PlanProbe]] (one executed plan). A composed lifecycle query is a
+  * [query...]`) — the missing grain between [[Bench]] (whole-query seconds)
+  * and [[PlanDump]] (executed plans). A composed lifecycle query is a
   * SEQUENCE of Spark actions (train collects, landing writes, manifest
   * commits, the final serve): optimizing it requires knowing which ACTION
   * owns the seconds, and the callSite each job carries is exactly that

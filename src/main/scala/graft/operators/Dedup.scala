@@ -171,40 +171,8 @@ object Dedup {
         (col("l.bk.band") === b) && earlierNoMatch
       }
       .reduce(_ || _)
-    // MERGE-hinted: the banding self-join must NEVER be broadcast-planned.
-    // Its cost is the quadratic-in-bucket pair EMISSION plus the per-pair
-    // verify riding the same stage — work the planner's BYTE estimates
-    // cannot see (input bytes are tiny whenever the corpus is; output
-    // rows are not). Measured (r20 ScaleBench, stage profile): at the 16×
-    // tier the size estimate stayed under the broadcast threshold, the
-    // join chain collapsed into ONE task (119 s wall, pure CPU, zero
-    // shuffle) — while the 2× bigger 32× tier crossed the threshold,
-    // planned the shuffle join, and ran the same logical work 4× FASTER
-    // on 14 post-shuffle tasks (~2 µs/pair at both tiers; the anomaly was
-    // parallelism, never per-pair cost). Broadcast is never the right
-    // plan here: a banded side small enough to broadcast makes the
-    // shuffle cheap too, and the sides are same-sized by construction.
-    //
-    // REPARTITION_BY_NUM-pinned: the r20 merge hint stopped the broadcast
-    // collapse, but AQE's byte-based partition COALESCING re-serialized
-    // the same stage one planner path later — with parallelismFirst's
-    // target clamped at minPartitionSize (1 MB), a banded side of a few
-    // MB coalesces the join's reduce stage to ONE post-shuffle partition,
-    // and the quadratic pair emission + the verify fused behind it run on
-    // one core (measured r21, stage profile: the q209 pair build was one
-    // 7.0 s task with 6.97 s of CPU; 31 cores idle). Same root cause as
-    // r20, different planner path: output rows are invisible to byte
-    // estimates. The [[Pin.byKey]] repartition is a user-specified shuffle
-    // AQE never coalesces, it satisfies the join's clustering requirement
-    // (no extra exchange — it REPLACES the join's own), and its
-    // parallelism follows the session's configured shuffle partitions,
-    // not this tier's byte census. Post-fix: 32 tasks, 3.5 s wall on the
-    // same build (bounded by the largest bucket).
-    val pinned = Pin.byKey(banded, col("bk"))
-    pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), col("l.bk") === col("r.bk") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(banded, Seq("bk"), col("l.id") < col("r.id"))
       .filter(firstBandOnly)
   }
 
@@ -301,18 +269,8 @@ object Dedup {
         )
     )
     val inter = SortedIntersectCount.sortedIntersectCount(col("l.toks"), col("r.toks"))
-    // [[Pin.byKey]]: structural reduce parallelism for the within-block
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinnedToks = Pin.byKey(toks, col("block"))
-    // MERGE-hinted like the banding self-join: at SFs where the byte
-    // estimate admits a broadcast, the pinned build side paid a full
-    // REPARTITION_BY_NUM shuffle whose partitioning the BroadcastExchange
-    // then discarded; merge keeps ONE pinned exchange, reused by both
-    // sides (broadcast is never right for a same-sized self-join).
-    pinnedToks
-      .as("l")
-      .hint("merge")
-      .join(pinnedToks.as("r").hint("merge"), col("l.block") === col("r.block") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(toks, Seq("block"), col("l.id") < col("r.id"))
       .withColumn("__i", inter)
       .filter(size(col("l.toks")) > 0 && size(col("r.toks")) > 0)
       .withColumn("cont_a", col("__i").cast("double") / size(col("l.toks")))
@@ -514,20 +472,14 @@ object Dedup {
     }
     // Materialized once (the containmentPairs stance): the projection feeds
     // BOTH self-join sides, and Spark does not CSE DataFrame branches — the
-    // per-doc tokenize+hash+sort must not run twice. Then [[Pin.byKey]]:
-    // structural reduce parallelism for the within-block pairing.
+    // per-doc tokenize+hash+sort must not run twice.
     val toks = Lineage.truncate(
       Pin
         .spread(df.select(col(idCol).as("id"), col(blockCol).as("block"), col(textCol).as("__txt")), col("id"))
         .select(col("id"), col("block"), TextAnalysis.hashedTokenSet(col("__txt")).as("toks"))
     )
-    val pinned = Pin.byKey(toks, col("block"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), col("l.block") === col("r.block") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(toks, Seq("block"), col("l.id") < col("r.id"))
       .filter(sizeRatioOk(size(col("l.toks")), size(col("r.toks")), threshold))
       .withColumn("jaccard", jaccardHashed(col("l.toks"), col("r.toks")))
       .filter(col("jaccard") >= threshold)
@@ -616,16 +568,8 @@ object Dedup {
           s"its candidate bucket would enumerate ~${n * n / 2} pairs — the corpus is too self-similar for " +
           "exact prefix filtering at this threshold. Use minhashNearDupPairs, or raise the limit deliberately.",
     )
-    // [[Pin.byKey]]: structural reduce parallelism for the per-prefix-token
-    // candidate pairing (AQE byte-coalescing collapses it to one task
-    // otherwise).
-    val pinnedPrefix = Pin.byKey(prefix, col("tok"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    val cand = pinnedPrefix
-      .as("l")
-      .hint("merge")
-      .join(pinnedPrefix.as("r").hint("merge"), col("l.tok") === col("r.tok") && col("l.id") < col("r.id"))
+    val cand = Pin
+      .selfJoin(prefix, Seq("tok"), col("l.id") < col("r.id"))
       .filter(sizeRatioOk(col("l.sz"), col("r.sz"), threshold))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
@@ -1168,14 +1112,8 @@ object Dedup {
           s"the within-bucket pairing would enumerate ~${n * n / 2} pairs. Raise prefixBits " +
           "(more, smaller buckets) or raise maxBucketRows deliberately.",
     )
-    // [[Pin.byKey]]: structural reduce parallelism for the within-bucket
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(bucketed, col("bucket"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    val l = pinned.as("l").hint("merge")
-    val r = pinned.as("r").hint("merge")
-    l.join(r, col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(bucketed, Seq("bucket"), col("l.id") < col("r.id"))
       .withColumn("dist", Hashing.hammingDistance(col("l.sim"), col("r.sim")))
       .filter(col("dist") <= maxDist)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"), col("dist"))
@@ -1239,15 +1177,8 @@ object Dedup {
         (col("l.rb.rot") === r) && earlierNoMatch
       }
       .reduce(_ || _)
-    // [[Pin.byKey]]: structural reduce parallelism for the within-bucket
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(banded, col("rb"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), col("l.rb") === col("r.rb") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(banded, Seq("rb"), col("l.id") < col("r.id"))
       .filter(firstRotationOnly)
       .withColumn("dist", Hashing.hammingDistance(col("l.sim"), col("r.sim")))
       .filter(col("dist") <= maxDist)
@@ -1301,15 +1232,8 @@ object Dedup {
           s"the within-bucket pairing would enumerate ~${n * n / 2} pairs. Raise prefixBits " +
           "(more, smaller buckets) or raise maxBucketRows deliberately.",
     )
-    // [[Pin.byKey]]: the within-bucket pairing's reduce parallelism must be
-    // structural — byte-based AQE coalescing serializes it to one task on
-    // tiny inputs (see Pin's scaladoc for the measured history).
-    val pinned = Pin.byKey(bucketed, col("bucket"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    val l = pinned.as("l").hint("merge")
-    val r = pinned.as("r").hint("merge")
-    l.join(r, col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(bucketed, Seq("bucket"), col("l.id") < col("r.id"))
       .withColumn("dist", Hashing.hammingDistance(col("l.sim"), col("r.sim")))
       .filter(col("dist") <= maxDist)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"), col("dist"))
@@ -1371,15 +1295,8 @@ object Dedup {
         (col("l.rb.rot") === r) && earlierNoMatch
       }
       .reduce(_ || _)
-    // [[Pin.byKey]]: structural reduce parallelism for the within-bucket
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(exploded, col("rb"))
-    // MERGE-hinted — see containmentPairs: one pinned exchange, reused by
-    // both sides; no build-side shuffle discarded under a toy-SF broadcast.
-    pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), col("l.rb") === col("r.rb") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(exploded, Seq("rb"), col("l.id") < col("r.id"))
       .filter(firstRotationOnly)
       .withColumn("dist", Hashing.hammingDistance(col("l.sim"), col("r.sim")))
       .filter(col("dist") <= maxDist)
@@ -1732,10 +1649,11 @@ object Dedup {
   private def sigRefs(refs: Seq[(String, String, Long)]): Seq[(String, Long)] =
     refs.collect { case ("sig", name, bytes) => (name, bytes) }
 
-  // The generation object's parquet schema — what the Spark writer
-  // produced here before the direct MetaIO staging (optional fields,
-  // UTF8 strings), so pre- and post-change generations are
-  // indistinguishable to every reader.
+  // The generation object's parquet schema: the Spark writer's column
+  // names, types and UTF8 strings from before the direct MetaIO staging,
+  // so pre- and post-change generations are read-compatible. They are not
+  // byte-identical: every field here is optional, where the Spark writer
+  // marked its non-null fields required.
   private val DedupManifestSchema =
     """message spark_schema {
       |  optional binary kind (UTF8);

@@ -56,18 +56,8 @@ object Graph {
           "maxBucketRows deliberately."
       )
     }
-    val joinCond = bucketCols.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _) &&
-      col(s"l.$itemCol") < col(s"r.$itemCol")
-    // [[Pin.byKey]]: structural reduce parallelism for the within-bucket
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(b, bucketCols.map(col): _*)
-    // MERGE-hinted like the banding self-join: one pinned exchange reused
-    // by both sides; no build-side shuffle discarded under a toy-SF
-    // broadcast (broadcast is never right for a same-sized self-join).
-    pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), joinCond)
+    Pin
+      .selfJoin(b, bucketCols, col(s"l.$itemCol") < col(s"r.$itemCol"))
       .groupBy(col(s"l.$itemCol").as("a"), col(s"r.$itemCol").as("b"))
       .agg(count(lit(1)).as("sup"))
       .filter(col("sup") >= minSupport)
@@ -309,18 +299,11 @@ object Graph {
     )
     // Wedge (x→v, x→w) with v ≺ w in the orientation order closes iff the
     // oriented edge v→w exists (v ≺ w fixes the closing edge's direction).
-    // [[Pin.byKey]]: the wedge self-join's output is quadratic in the
-    // per-x out-neighborhood — structural reduce parallelism, the bucket
-    // self-join rule.
-    val pinnedOriented = Pin.byKey(oriented, col("x"))
-    // MERGE-hinted — see cooccurrence pairing above: one pinned exchange,
-    // reused by both sides; no build-side shuffle discarded under a
-    // broadcast.
-    val triangles = pinnedOriented
-      .as("o1")
-      .hint("merge")
-      .join(pinnedOriented.as("o2").hint("merge"), col("o1.x") === col("o2.x") && col("o1.yk") < col("o2.yk"))
-      .select(col("o1.x").as("ta"), col("o1.yk.n").as("tb"), col("o2.yk.n").as("tc"))
+    // The wedge self-join's output is quadratic in the per-x
+    // out-neighborhood: a bucket self-join on x.
+    val triangles = Pin
+      .selfJoin(oriented, Seq("x"), col("l.yk") < col("r.yk"))
+      .select(col("l.x").as("ta"), col("l.yk.n").as("tb"), col("r.yk.n").as("tc"))
       .join(
         oriented.select(col("x").as("tb"), col("yk.n").as("tc")),
         Seq("tb", "tc"),

@@ -1404,10 +1404,11 @@ object IvfIndex {
   // artifacts of the save and need no versioning.
   private[graft] case class AdcRef(kind: String, cell: Int, name: String, bytes: Long)
 
-  // The generation object's parquet schema — what the Spark writer
-  // produced here before the direct MetaIO staging (optional fields,
-  // UTF8 strings), so pre- and post-change generations are
-  // indistinguishable to every reader.
+  // The generation object's parquet schema: the Spark writer's column
+  // names, types and UTF8 strings from before the direct MetaIO staging,
+  // so pre- and post-change generations are read-compatible. They are not
+  // byte-identical: every field here is optional, where the Spark writer
+  // marked its non-null fields required.
   private val AdcManifestSchema =
     """message spark_schema {
       |  optional binary kind (UTF8);

@@ -766,24 +766,18 @@ object Multimodal {
       hiCol: String = "ahash_hi",
       loCol: String = "ahash_lo",
   ): DataFrame = {
-    val sigs = frameHashes
-      .select(
-        col("media_id"),
-        shiftleft(col(hiCol), 32).bitwiseOR(col(loCol)).as("sig"),
-      )
-      .distinct()
+    // Pinned before the per-signature count, not after it: see [[Pin.byKey]].
+    val sigs = Pin.byKey(
+      frameHashes
+        .select(col("media_id").as("id"), shiftleft(col(hiCol), 32).bitwiseOR(col(loCol)).as("sig"))
+        .distinct(),
+      col("sig"),
+    )
     val freq = sigs.groupBy(col("sig")).agg(count(lit(1)).as("__nvids"))
-    // [[Pin.byKey]]: structural reduce parallelism for the per-signature
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val keep = Pin.byKey(sigs.join(freq.filter(col("__nvids") <= maxVideosPerSig), "sig"), col("sig"))
-    // MERGE-hinted like the banding self-join: one pinned exchange reused
-    // by both sides; no build-side shuffle discarded under a toy-SF
-    // broadcast (broadcast is never right for a same-sized self-join).
-    val a = keep.select(col("sig"), col("media_id").as("id_a")).hint("merge")
-    val b = keep.select(col("sig"), col("media_id").as("id_b")).hint("merge")
-    a.join(b, Seq("sig"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
+    val keep = sigs.join(freq.filter(col("__nvids") <= maxVideosPerSig), "sig")
+    Pin
+      .selfJoin(keep, Seq("sig"), col("l.id") < col("r.id"))
+      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }

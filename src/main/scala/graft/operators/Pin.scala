@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -8,15 +9,23 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 /** Structural parallelism pin for quadratic bucket self-joins.
   *
   * Every bucket-local pairing operator in the engine (LSH banding, SimHash /
-  * Hamming prefix buckets, block-scoped Jaccard, fingerprint overlap) has the
-  * same cost shape: INPUT bytes tiny, OUTPUT rows (and the per-pair verify
-  * fused behind the join) quadratic in bucket size. That cost is invisible to
-  * every byte-based planner decision, and it has now bitten twice:
+  * Hamming prefix buckets, block-scoped Jaccard, co-occurrence, triangle
+  * wedges, fingerprint overlap) has the same cost shape: INPUT bytes tiny,
+  * OUTPUT rows (and the per-pair verify fused behind the join) quadratic in
+  * bucket size. That cost is invisible to every byte-based planner
+  * decision, and it has now bitten twice:
   *
   *  - r20 (ScaleBench 16×): the size estimate stayed under the broadcast
   *    threshold, the join chain was broadcast-planned, and a whole tier's
-  *    pair emission fused into ONE task (119 s of single-core CPU). Fixed
-  *    with merge hints on both sides.
+  *    pair emission fused into ONE task (119 s of single-core CPU). The 2×
+  *    bigger 32× tier crossed the threshold, planned the shuffle join, and
+  *    ran the same logical work 4× faster on 14 post-shuffle tasks (~2 µs
+  *    per pair at both tiers: the anomaly was parallelism, never per-pair
+  *    cost). Fixed with merge hints on both sides: broadcast is never the
+  *    right plan for a self-join, whose sides are same-sized by
+  *    construction (a side small enough to broadcast makes the shuffle
+  *    cheap too), and a broadcast build side would also discard the pinned
+  *    exchange's partitioning after paying for it.
   *  - r21 (bench sf0.1, stage profile): with the merge join planned, AQE's
   *    partition COALESCING re-serialized the same stage one planner path
   *    later — parallelismFirst computes its target from map-output bytes,
@@ -34,7 +43,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * requirement exactly, so it REPLACES the join's own exchange instead of
   * adding one. Parallelism follows `spark.sql.shuffle.partitions` (the knob
   * every deployment already sizes to its cluster), never a constant and
-  * never this tier's byte census.
+  * never this tier's byte census. [[selfJoin]] is the one place the whole
+  * rule (pin, both sides from the one pinned frame, merge hints) is written.
   *
   * Trade-off, stated: pinning opts this one exchange out of AQE's skew
   * SPLITTING too — irrelevant here because a bucket is indivisible anyway
@@ -45,11 +55,26 @@ object Pin {
 
   /** Repartition `df` by `keys` into the session's configured shuffle
     * parallelism — hash-clustered (all rows of one bucket colocate), AQE
-    * coalescing-proof. Both sides of a bucket self-join should come from
-    * the SAME pinned frame.
+    * coalescing-proof. The planner drops the repartition when `df` is
+    * already hash-partitioned on `keys` into that many partitions (by a
+    * join or aggregate on the same key), leaving in charge an upstream
+    * exchange that AQE may coalesce. So key-grained work that must precede
+    * a [[selfJoin]], such as a per-bucket count filter, runs on a `byKey` of
+    * its input, and the self-join's own repartition folds into that pin.
     */
   def byKey(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+
+  /** The bucket self-join: `df` pinned [[byKey]] `keys`, joined to itself
+    * as `l` and `r` on equal keys and `cond`, both sides merge-hinted. One
+    * pinned exchange feeds both sides; the reduce stage runs at the
+    * session's shuffle parallelism whatever the byte estimates say.
+    */
+  def selfJoin(df: DataFrame, keys: Seq[String], cond: Column): DataFrame = {
+    val pinned = byKey(df, keys.map(col): _*)
+    val onKeys = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    pinned.as("l").hint("merge").join(pinned.as("r").hint("merge"), onKeys && cond)
+  }
 
   /** Conditional spread for HEAVY PER-ROW MAP work upstream of the first
     * shuffle (media synthesis/decode, per-token md5 signatures): scan

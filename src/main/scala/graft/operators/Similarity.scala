@@ -451,15 +451,8 @@ object Similarity {
       )
     }
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"), col(blockCol).as("block"))
-    // [[Pin.byKey]]: structural reduce parallelism for the within-block
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(v, col("block"))
-    // MERGE-hinted like the banding self-join: one pinned exchange reused
-    // by both sides; no build-side shuffle discarded under a toy-SF
-    // broadcast (broadcast is never right for a same-sized self-join).
-    val l = pinned.as("l").hint("merge")
-    val r = pinned.as("r").hint("merge")
-    l.join(r, col("l.block") === col("r.block") && col("l.id") < col("r.id"))
+    Pin
+      .selfJoin(v, Seq("block"), col("l.id") < col("r.id"))
       .withColumn("sim", cosine(col("l.vec"), col("r.vec")))
       .filter(col("sim") >= threshold)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"), col("sim"))
@@ -577,18 +570,8 @@ object Similarity {
           "codebook (more centroids), or raise maxBlockRows deliberately."
       )
     }
-    // [[Pin.byKey]]: structural reduce parallelism for the within-cluster
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinnedAssigned = Pin.byKey(assigned, col("centroid_id"))
-    // MERGE-hinted — see cosineNearDupPairs: one pinned exchange, reused
-    // by both sides; no build-side shuffle discarded under a broadcast.
-    pinnedAssigned
-      .as("l")
-      .hint("merge")
-      .join(
-        pinnedAssigned.as("r").hint("merge"),
-        col("l.centroid_id") === col("r.centroid_id") && col("l.label") =!= col("r.label"),
-      )
+    Pin
+      .selfJoin(assigned, Seq("centroid_id"), col("l.label") =!= col("r.label"))
       .withColumn("sim", cosine(col("l.vec"), col("r.vec")))
       .withColumn(
         "__rn",
@@ -642,15 +625,8 @@ object Similarity {
         (col("l.tb.tbl") === t) && earlierNoMatch
       }
       .reduce(_ || _)
-    // [[Pin.byKey]]: structural reduce parallelism for the within-bucket
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val pinned = Pin.byKey(banded, col("tb"))
-    // MERGE-hinted — see cosineNearDupPairs: one pinned exchange, reused
-    // by both sides; no build-side shuffle discarded under a broadcast.
-    val cand = pinned
-      .as("l")
-      .hint("merge")
-      .join(pinned.as("r").hint("merge"), col("l.tb") === col("r.tb") && col("l.id") < col("r.id"))
+    val cand = Pin
+      .selfJoin(banded, Seq("tb"), col("l.id") < col("r.id"))
       .filter(firstTableOnly)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
     val vecs = df.select(col(idCol).as("vid"), col(vecCol).as("v"))

@@ -96,8 +96,8 @@ object Winnow {
     * go quadratic (the drop is the algorithm here, not a loud-fail guard,
     * because commonness is a semantic filter for matching).
     *
-    * Scale design: the doc-frequency table and the filtered posting list
-    * both key on fp_hash (one exchange, reused by the self-join); the
+    * Scale design: the doc-frequency table, the filtered posting list and
+    * the self-join all key on fp_hash and ride one pinned exchange; the
     * pair aggregation keys on (id_a, id_b).
     */
   def overlapPairs(
@@ -109,21 +109,16 @@ object Winnow {
       minShared: Int = 2,
       maxDocsPerFp: Int = 20,
   ): DataFrame = {
-    val fp = fingerprints(docs, idCol, textCol, k, w)
-      .select(col(idCol), col("fp_hash"))
-      .distinct()
+    // Pinned before the doc-frequency count, not after it: see [[Pin.byKey]].
+    val fp = Pin.byKey(
+      fingerprints(docs, idCol, textCol, k, w).select(col(idCol).as("id"), col("fp_hash")).distinct(),
+      col("fp_hash"),
+    )
     val freq = fp.groupBy(col("fp_hash")).agg(count(lit(1)).as("__ndocs"))
-    // [[Pin.byKey]]: structural reduce parallelism for the per-fingerprint
-    // pairing (AQE byte-coalescing collapses it to one task otherwise).
-    val keep = Pin.byKey(fp.join(freq.filter(col("__ndocs") <= maxDocsPerFp), "fp_hash"), col("fp_hash"))
-    // MERGE-hinted like the banding self-join: one pinned exchange reused
-    // by both sides; no build-side shuffle discarded under a toy-SF
-    // broadcast (broadcast is never right for a same-sized self-join).
-    val a = keep.select(col("fp_hash"), col(idCol).as("id_a")).hint("merge")
-    val b = keep.select(col("fp_hash"), col(idCol).as("id_b")).hint("merge")
-    a.join(b, Seq("fp_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
+    val keep = fp.join(freq.filter(col("__ndocs") <= maxDocsPerFp), "fp_hash")
+    Pin
+      .selfJoin(keep, Seq("fp_hash"), col("l.id") < col("r.id"))
+      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }

@@ -10,6 +10,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *  - [[readCsv]] — files already landed (S3/local): header=true,
   *    inferSchema=false so every column is `StringType`, exactly DictReader's
   *    contract. This is the scale path — parallel splittable reads.
+  *  - [[readCsvStrict]] — a typed scan that fails on the first malformed
+  *    cell, the reference's crash-on-bad-input (E1/E4). There is no
+  *    quarantine mode.
   *  - [[fromString]] — the reference's in-memory-string shape: parse a
   *    fetched body via `spark.read.csv(Dataset[String])`. Driver-side fetch
   *    is inherently single-node; only for small dimension files (the ~4k-row
@@ -22,18 +25,6 @@ object Csv {
     spark.read
       .option("header", "true")
       .option("inferSchema", "false")
-      .csv(path)
-
-  /** S2 variant — lenient scan: malformed lines land in `_corrupt_record`
-    * instead of failing the job (the 100 TB posture: quarantine, don't
-    * crash). The reference's crash-on-bad-input (E1/E4) is [[readCsvStrict]].
-    */
-  def readCsvLenient(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema.add("_corrupt_record", "string"))
       .csv(path)
 
   /** S2 variant — FAILFAST scan (reference crash parity, E1). */

@@ -4,6 +4,11 @@ import graft.ops.Unpivot
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions — the "would this survive a 100× scale-up"
@@ -878,5 +883,90 @@ class PlanSpec extends SparkSpec {
       p.linesIterator.filter(_.contains("Exchange")).forall(l => !l.contains("content")),
       s"payload bytes must not reach a shuffle — hashes leave the decode boundary:\n$p",
     )
+  }
+
+  /** Children of `p`, seen through the AQE root, query stages and reused exchanges. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case _ => p.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+
+  /** The exchanges `p` reads directly: the first one down each path. */
+  private def feeding(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: BroadcastExchangeLike => Nil // replicates a build side; partitioning comes from the stream side
+    case e: Exchange => Seq(e)
+    case _ => kids(p).flatMap(feeding)
+  }
+
+  /** A [[graft.operators.Pin]] shuffle: REPARTITION_BY_NUM, hashed on exactly `keys`. */
+  private def isPin(p: SparkPlan, keys: Set[String]): Boolean = p match {
+    case s: ShuffleExchangeExec =>
+      s.shuffleOrigin == REPARTITION_BY_NUM && (s.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet == keys
+        case _ => false
+      })
+    case _ => false
+  }
+
+  /** Runs `df` and checks its post-AQE plan. The self-join is the topmost
+    * join with a `keys` pin under both sides (a per-bucket filter join
+    * riding the same pin sits below it). It must be a SortMergeJoin whose
+    * sides read that pin directly, with no ENSURE_REQUIREMENTS exchange
+    * stacked on top.
+    */
+  private def assertPinnedSelfJoin(df: DataFrame, keys: Seq[String]): Unit = {
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    val ks = keys.toSet
+    val overPin = nodes(root).collect {
+      case j: BinaryExecNode if j.children.forall(c => nodes(c).exists(isPin(_, ks))) => j
+    }
+    val selfJoins = overPin.filterNot(j => overPin.exists(o => (o ne j) && nodes(o).exists(_ eq j)))
+    assert(selfJoins.nonEmpty, s"no join over a pin on $ks:\n$root")
+    selfJoins.foreach { j =>
+      assert(j.isInstanceOf[SortMergeJoinExec], s"the bucket self-join must sort-merge, got ${j.nodeName}:\n$root")
+      val fed = j.children.flatMap(feeding)
+      assert(fed.nonEmpty && fed.forall(isPin(_, ks)), s"every shuffle feeding the self-join must be a $ks pin:\n$root")
+    }
+  }
+
+  test("pinned bucket self-join: every pairing operator sort-merges on its REPARTITION_BY_NUM bucket pin") {
+    import graft.operators.{Dedup, Graph, Multimodal, Similarity, Winnow}
+    import spark.implicits._
+    val docs = spark.read.parquet(sf() + "/documents.parquet")
+    val emb = spark.read.parquet(sf() + "/embeddings.parquet")
+    val cents = emb.orderBy("vec_id").limit(4).collect().toSeq.zipWithIndex
+      .map { case (r, i) => (i, r.getSeq[Float](1)) }.toDF("centroid_id", "centroid")
+    val a = 0x7000000000000001L
+    val c = 0x0123456712345678L
+    val sigs = Seq((1L, a), (2L, a ^ (1L << 62)), (3L, c), (4L, c ^ (1L << 30)), (5L, -1L ^ a)).toDF("id", "sig")
+    val acts = Seq((1L, "A", 1L), (2L, "A", 1L), (3L, "A", 1L), (1L, "B", 2L)).toDF("user", "et", "hr")
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+    val media = Multimodal.synthesizeMjpegAvi(Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("doc_id", "text"), "doc_id")
+    val cases: Seq[(String, () => DataFrame, Seq[String])] = Seq(
+      ("minhashCandidates", () => Dedup.minhashCandidates(docs, "doc_id", "text"), Seq("bk")),
+      ("containmentPairs", () => Dedup.containmentPairs(docs, "doc_id", "text", "source", 0.9), Seq("block")),
+      ("jaccardPairs", () => Dedup.jaccardPairs(docs, "doc_id", "text", "source", 0.5), Seq("block")),
+      ("prefixJaccardJoin", () => Dedup.prefixJaccardJoin(docs, "doc_id", "text", 1, 2, shingleN = 3), Seq("tok")),
+      ("simhashPairs", () => Dedup.simhashPairs(docs, "doc_id", "text"), Seq("bucket")),
+      ("simhashPairsRotated", () => Dedup.simhashPairsRotated(docs, "doc_id", "text", rotations = 2), Seq("rb")),
+      ("hammingPairs", () => Dedup.hammingPairs(sigs, "id", "sig", bits = 64, prefixBits = 8, maxDist = 3), Seq("bucket")),
+      ("hammingPairsRotated", () => Dedup.hammingPairsRotated(sigs, "id", "sig", prefixBits = 12, maxDist = 2), Seq("rb")),
+      ("cosineNearDupPairs", () => Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", "label", 0.9), Seq("block")),
+      ("hardNegatives", () => Similarity.hardNegatives(emb, "vec_id", "embedding", "label", cents), Seq("centroid_id")),
+      ("cosineNearDupPairsLsh", () => Similarity.cosineNearDupPairsLsh(emb, "vec_id", "embedding", 64, 4, 0.35, 2), Seq("tb")),
+      ("cooccurrenceEdges", () => Graph.cooccurrenceEdges(acts, "user", Seq("et", "hr"), minSupport = 1), Seq("et", "hr")),
+      ("triangleCounts", () => Graph.triangleCounts(edges, "src", "dst"), Seq("x")),
+      ("videoNearDupPairs", () => Multimodal.videoNearDupPairs(media), Seq("sig")),
+      ("Winnow.overlapPairs", () => Winnow.overlapPairs(docs, "doc_id", "text"), Seq("fp_hash")),
+    )
+    val failed = cases.flatMap { case (name, run, keys) =>
+      scala.util.Try(assertPinnedSelfJoin(run(), keys)).failed.toOption.map(e => s"$name: ${e.getMessage}")
+    }
+    assert(failed.isEmpty, failed.mkString("\n\n"))
   }
 }

@@ -3,8 +3,10 @@
 row-at-a-time dict pipeline, same O(N^2*M) rescans — network and S3 PUTs
 removed so this measures pure compute), timed at the reference's published
 data scale: 3 fact CSVs of ~289 rows x ~1100 date columns + a ~4300-row
-lookup. Compare with `sbt "runMain graft.JhuBench"` (same synthetic data,
-same output semantics, via graft.Pipelines.parser2).
+lookup. The Spark-side timing of the same job (graft.Pipelines.parser2 plus
+the flat JSON, with an output check) is the jhu-daily workload of jhubench/
+(`python3 jhubench/run.py --workload jhu-daily`; shapes in
+jhubench/WORKLOADS.md).
 
 Usage: reference_model_bench.py [rows] [datecols]
 """
