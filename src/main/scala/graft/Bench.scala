@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
+import org.apache.spark.sql.functions.{col, expr}
 object Bench {
   // HOST-ERA PROBE: a fixed, dependency-free, single-thread CPU loop
   // (~0.2-0.5 s of pure xorshift arithmetic — no allocation, no I/O, no
@@ -26,16 +25,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Explicit UTC: the TIMESTAMP_NTZ→TIMESTAMP cast in Tables.events is
-      // only value-preserving under a UTC session zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // One-line diagnosis on regenerated testdata instead of per-query errors.
     Tables.assertTestdataSchema(spark, sfDir)
     System.err.println(s"[bench] testdata schema probe OK for $sfDir")
@@ -94,18 +84,11 @@ object Bench {
     // microbatches, state store — so most of their seconds are harness
     // materialization proving stream==batch, not plan cost.
     val timed = selected.map { case (name, fn) =>
-      // Reduce every row to a hash and XOR-fold — a bare count() lets
-      // Catalyst prune the projections, so expensive output columns (regex,
-      // JSON, custom expressions) would never execute and the timing would
-      // not measure what the correctness gate verifies. bit_xor (not sum):
-      // summing random 64-bit hashes overflows BIGINT under ANSI mode.
+      // Hash every output column (Harness.hashAll), so the timing measures
+      // what the correctness gate verifies.
       def once(): Double = {
         val t0 = System.nanoTime()
-        val out = fn(spark, sfDir)
-        out
-          .select(xxhash64(struct(out.columns.map(col): _*)).as("__h"))
-          .agg(expr("bit_xor(__h)"))
-          .collect()
+        Harness.hashAll(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       try {

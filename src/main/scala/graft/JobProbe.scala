@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev harness: per-JOB wall-time attribution for one or more
   * [[SparkEntry.queries]] entries (`runMain graft.JobProbe <sfDir> <query>
@@ -25,15 +23,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
@@ -71,8 +61,7 @@ object JobProbe {
       val fn = SparkEntry.queries(name)
       jobs.clear(); order.clear()
       val t0 = System.nanoTime()
-      val out = fn(spark, sfDir)
-      out.select(xxhash64(struct(out.columns.map(col): _*)).as("__h")).agg(expr("bit_xor(__h)")).collect()
+      Harness.hashAll(fn(spark, sfDir))
       val wallMs = (System.nanoTime() - t0) / 1e6
       // The listener bus is async; a short settle keeps the last job's end
       // event from being missed (dev harness — a sleep is fine).

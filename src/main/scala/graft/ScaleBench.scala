@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe: times representative operators at 1×/2×/4×/8× the input
@@ -40,15 +40,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val factors = Seq(1, 2, 4, 8)
     // The pair/CC family probes deeper (16×/32×): component structure —
     // rounds-to-converge, not per-round cost — is its scale risk, and that
@@ -613,25 +605,6 @@ object ScaleBench {
           s""""build_sec":${math.round(tb * 1000) / 1000.0},"rows":${pairs.count()}}"""
       )
       releaseRetainedState()
-      // The EXECUTABLE pick rule, run once per round at the family's
-      // smallest tier (the bounded calibration probe the scaladoc
-      // promises): both policies measured on the same sample, labeling
-      // equality verified inside, the winner-first threshold returned.
-      // Compare its verdict against the 16×/32× rows below — if the
-      // small-tier winner also wins large, the probe is a sufficient
-      // re-tune; if not, that divergence is the round's finding.
-      if (f == ccFactors.min) {
-        val cal = operators.Dedup.ccCalibrate(pairs)
-        println(
-          s"""{"op":"cc_calibrate","factor":$f,"edges":${cal.sampleEdges},""" +
-            s""""lp_sec":${math.round(cal.lpSeconds * 1000) / 1000.0},"lp_rounds":${cal.lpRounds},""" +
-            s""""lp_escaped":${cal.lpEscaped},"star_sec":${math.round(cal.starSeconds * 1000) / 1000.0},""" +
-            s""""star_rounds":${cal.starRounds},"winner":"${cal.winner}","star_threshold":${cal.starThreshold},""" +
-            s""""margin":${math.round(cal.margin * 1000) / 1000.0},""" +
-            s""""recommended_threshold":${cal.recommendedThreshold()}}"""
-        )
-        releaseRetainedState()
-      }
       // Each variant's timed block MATERIALIZES its labeling (parquet write
       // — the same terminal-action cost shape as the old groupBy-count) so
       // the tripwire below can compare full labelings without re-running
@@ -662,55 +635,30 @@ object ScaleBench {
         s"CC variants disagree at factor $f: $diff (id, comp) rows differ between label-prop and star",
       )
       // The dispatch path users actually hit: connectedComponentsAdaptive
-      // (raw pairs in, the exact call-site shape) must choose the branch
-      // its materialized edge count dictates AND reproduce the label-prop
-      // labeling bit-for-bit. Probed at every factor with the production
-      // 20M default so the report records which branch real corpora take —
-      // at 16×/32× tiling (≥47M pairs) this exercises the star branch
-      // through the dispatcher itself, not just via an explicit pin.
+      // (raw pairs in, the exact call-site shape) must reproduce the
+      // label-prop labeling bit-for-bit. Probed at every factor so the
+      // report records which arm real corpora take — at 16×/32× tiling
+      // (≥47M pairs) this exercises the star arm through the dispatcher
+      // itself, not just via an explicit pin.
       val nPairs = pairs.count()
-      val branch = if (nPairs >= 20000000L) "star" else "labelprop"
-      val (ta, aLab) = time {
-        val df = operators.Dedup.connectedComponentsAdaptive(pairs)
+      val (ta, (aLab, arm)) = time {
+        val (df, arm) = operators.Dedup.connectedComponentsAdaptiveArm(pairs)
         df.write.mode("overwrite").parquet(s"$tmp/cc_adaptive_$f")
-        spark.read.parquet(s"$tmp/cc_adaptive_$f")
+        (spark.read.parquet(s"$tmp/cc_adaptive_$f"), arm)
       }
       val adiff = aLab.except(lpLab).count() + lpLab.except(aLab).count()
       require(
         adiff == 0,
-        s"adaptive CC labeling diverged from label-prop at factor $f: $adiff rows differ (branch=$branch)",
+        s"adaptive CC labeling diverged from label-prop at factor $f: $adiff rows differ (arm=$arm)",
       )
-      // "escaped" = the label-prop branch blew its rounds budget and the
+      // "escaped" = the label-prop arm blew its rounds budget and the
       // dispatch fell through to star (the structure-not-size bound the
       // cc family exists to watch) — expected false at every factor here;
       // a true is the report that a tiling's diameter outgrew the budget.
+      val branch = if (arm == "star") "star" else "labelprop"
       println(
         s"""{"op":"cc_adaptive","factor":$f,"sec":${math.round(ta * 1000) / 1000.0},"edges":$nPairs,""" +
-          s""""branch":"$branch","escaped":${operators.Dedup.lastAdaptiveEscaped}}"""
-      )
-      releaseRetainedState()
-      // The OTHER dispatch policy, measured every round so the
-      // machine-era-unstable crossover is re-tunable from DATA instead
-      // of scaladoc archaeology: label-prop-first (starThreshold raised
-      // past the edge count) under the same rounds budget. The budget
-      // bounds label-prop's long-diameter downside (escape -> star), so
-      // running it first is SAFE everywhere; this row says whether it
-      // is FAST here — compare against cc_adaptive's default-dispatch
-      // seconds at 16×/32×, where the default pays for star if
-      // label-prop solo is winning in this era.
-      val (tLpf, lpfLab) = time {
-        val df = operators.Dedup.connectedComponentsAdaptive(pairs, starThreshold = Long.MaxValue)
-        df.write.mode("overwrite").parquet(s"$tmp/cc_lpfirst_$f")
-        spark.read.parquet(s"$tmp/cc_lpfirst_$f")
-      }
-      val lpfDiff = lpfLab.except(lpLab).count() + lpLab.except(lpfLab).count()
-      require(
-        lpfDiff == 0,
-        s"label-prop-first CC labeling diverged from label-prop at factor $f: $lpfDiff rows differ",
-      )
-      println(
-        s"""{"op":"cc_adaptive_lpfirst","factor":$f,"sec":${math.round(tLpf * 1000) / 1000.0},""" +
-          s""""edges":$nPairs,"escaped":${operators.Dedup.lastAdaptiveEscaped}}"""
+          s""""branch":"$branch","escaped":${arm == "escaped"}}"""
       )
       releaseRetainedState()
     }

@@ -672,15 +672,53 @@ object Dedup {
       )
   }
 
-  /** Lineage truncation for the iterative CC operators, always LAZY: the
-    * caller's convergence action (the fused changed-count / fingerprint
-    * aggregation) is the job that materializes the checkpoint, so each round
-    * costs ONE job, not a materialize-then-check pair. Replicated vs
-    * executor-local is [[Lineage.truncate]]'s policy (`reliable = true`
-    * forces replicated regardless of the session conf).
+  /** Size-adaptive connected components — the default at every near-dup /
+    * entity pair-graph site. Both kernels share the `comp = min id`
+    * contract, so the choice is a plan decision, not a semantic one:
+    *
+    *  - at or above `StarMinEdges` (20M) edges, star contraction
+    *    ([[connectedComponentsStar]]), immune to the O(diameter) failure
+    *    mode outright;
+    *  - below it, min-label propagation ([[connectedComponents]]) under a
+    *    `LabelRoundsBudget` of 12 rounds. Its round count is the component
+    *    diameter, which no edge count sees, so a graph that has not
+    *    converged within the budget is a long-diameter graph on the wrong
+    *    kernel: the dispatch escapes to star contraction on the same
+    *    materialized edges, with a stderr report. Real near-dup graphs
+    *    converge in 2–4 rounds.
+    *
+    * The two settings are constants, not parameters. Every caller uses
+    * them, and the dispatch already adapts at run time: first to the
+    * observed edge count, then to the rounds label propagation actually
+    * needs. The large-graph crossover moves with host speed (ScaleBench has
+    * measured either kernel winning at 47M–129M edges), and the budget
+    * bounds label propagation's downside wherever the threshold lands. The
+    * edges are materialized once (the count forces the lazy checkpoint) and
+    * the chosen kernel re-reads them.
     */
-  private def truncateLineage(d: DataFrame, reliable: Boolean): DataFrame =
-    Lineage.truncate(d, eager = false, forceReliable = reliable)
+  def connectedComponentsAdaptive(edges: DataFrame): DataFrame = connectedComponentsAdaptiveArm(edges)._1
+
+  private val StarMinEdges = 20000000L
+  private val LabelRoundsBudget = 12
+
+  /** [[connectedComponentsAdaptive]] plus the arm it took: `"labelprop"`,
+    * `"star"`, or `"escaped"` (label propagation blew its rounds budget and
+    * star contraction produced the labels).
+    */
+  private[graft] def connectedComponentsAdaptiveArm(edges: DataFrame): (DataFrame, String) = {
+    val mat = Lineage.truncate(edges.select(col("src"), col("dst")), eager = false)
+    if (mat.count() >= StarMinEdges) (connectedComponentsStar(mat), "star")
+    else
+      labelPropagation(mat, LabelRoundsBudget) match {
+        case Some((labels, _)) => (labels, "labelprop")
+        case None =>
+          System.err.println(
+            s"[graft] connectedComponentsAdaptive: label propagation blew its $LabelRoundsBudget-round " +
+              s"budget below the $StarMinEdges-edge threshold (long-diameter graph - rounds, not rows) - " +
+              "escaping to star contraction on the same materialized edges.")
+          (connectedComponentsStar(mat), "escaped")
+      }
+  }
 
   /** Connected components over an undirected pair graph (`src`,`dst` long
     * ids) by iterative min-label propagation: every node adopts the minimum
@@ -688,277 +726,62 @@ object Dedup {
     * diameter) rounds — near-dup clusters are dense, so typically 2-3).
     * Returns (id, component) where component = min id in the cluster — the
     * canonical survivor. Each round is one join + partial-aggregated min;
-    * a lazy checkpoint ([[truncateLineage]]) truncates the growing lineage.
-    * The convergence check is fused into the round twice over: the previous
-    * label rides along through the update, and the "did anything change"
-    * count is the SAME job that materializes the round's checkpoint — one
-    * job per round total.
+    * a lazy checkpoint (`Lineage.truncate(_, eager = false)`) truncates the
+    * growing lineage. The convergence check is fused into the round twice
+    * over: the previous label rides along through the update, and the "did
+    * anything change" count is the SAME job that materializes the round's
+    * checkpoint — one job per round total.
     *
     * `maxRounds` bounds the driver loop: min-label propagation is
     * O(diameter), so hitting the cap means the graph is a long chain —
     * fail loudly and point at the fix rather than looping for hours.
     */
-  /** Size-adaptive connected components — the default at every near-dup /
-    * entity pair-graph site. Both variants share the `comp = min id`
-    * contract, so the choice is a PLAN decision, not a semantic one (the
-    * same size-based dispatch Spark applies to join strategies):
-    *
-    *  - below `starThreshold` edges, min-label propagation wins — star's
-    *    two joins + distinct per round cost more than the extra label
-    *    rounds on small graphs (ScaleBench: 14 s vs 17 s at 2.9M pairs,
-    *    25 s vs 34 s at 11.7M);
-    *  - above it, star contraction is the DEFAULT — immune to the
-    *    O(diameter) failure mode outright.
-    *
-    * The large-graph crossover is MACHINE-ERA UNSTABLE, which is why the
-    * threshold is a parameter and not a constant to keep re-tuning: the
-    * r15-era takes had star flat (175 s at both 47M and 129M pairs)
-    * while label propagation doubled (196 s → 408 s); the r17 takes on
-    * the same fixture had label propagation WIN at both sizes
-    * (100 s/116 s vs star's 128 s/219 s — 6 rounds at every factor).
-    * When rounds stay in the near-dup regime the two are within ~2×
-    * either way; the budget escape below bounds label propagation's
-    * downside wherever the dispatch lands, so a caller with a measured
-    * workload can raise `starThreshold` and run label-prop-first safely
-    * (worst case = `labelRoundsBudget` abandoned rounds, then star).
-    * The edge set is materialized once (lazy checkpoint forced by the
-    * count) and the chosen variant re-reads that checkpoint, so the
-    * dispatch adds one count on data the iteration needed materialized
-    * anyway.
-    *
-    * SIZE is not the only thing that can make min-label the wrong pick:
-    * its round count is the component DIAMETER, invisible to an edge
-    * count (ScaleBench's 16× tiling converges in more rounds than its
-    * 32× — structure, not size, dominated the wall clock). So the
-    * label-prop branch runs under `labelRoundsBudget`: a graph that has
-    * not converged within the budget is a long-diameter graph on the
-    * wrong algorithm, and the dispatch ESCAPES to star contraction —
-    * immune to diameter, correct from the same materialized edges (both
-    * variants contract to comp = min id, so the escape is
-    * plan-level, hash-invisible) — with a loud stderr report of the
-    * abandoned rounds. The budget defaults well above the measured
-    * near-dup regime (2–4 rounds) so real corpora never pay the
-    * abandoned work; the escape exists for the chain-shaped tail.
-    */
-  // Test-only observability: did the last adaptive dispatch escape its
-  // label-prop rounds budget? (the OpsSpec escape case pins the path)
-  private[graft] var lastAdaptiveEscaped: Boolean = false
-
-  def connectedComponentsAdaptive(
-      edges: DataFrame,
-      starThreshold: Long = 20000000L,
-      reliable: Boolean = false,
-      labelRoundsBudget: Int = 12,
-  ): DataFrame = {
-    require(labelRoundsBudget >= 1, s"connectedComponentsAdaptive: labelRoundsBudget must be >= 1: $labelRoundsBudget")
-    val mat = truncateLineage(edges.select(col("src"), col("dst")), reliable)
-    lastAdaptiveEscaped = false
-    if (mat.count() >= starThreshold) connectedComponentsStar(mat, reliable = reliable)
-    else
-      try connectedComponents(mat, maxRounds = labelRoundsBudget, reliable = reliable)
-      catch {
-        case e: IllegalStateException if e.getMessage.contains("did not converge") =>
-          lastAdaptiveEscaped = true
-          System.err.println(
-            s"[graft] connectedComponentsAdaptive: label propagation blew its $labelRoundsBudget-round " +
-              s"budget below the $starThreshold-edge threshold (long-diameter graph - rounds, not rows) - " +
-              "escaping to star contraction on the same materialized edges.")
-          connectedComponentsStar(mat, reliable = reliable)
-      }
-  }
-
-  /** A [[ccCalibrate]] run's measured verdict: per-policy wall seconds and
-    * rounds on the caller's sample, the winner, and the `starThreshold` to
-    * hand [[connectedComponentsAdaptive]] so the measured winner runs
-    * FIRST on this workload — `Long.MaxValue` for label-prop-first (its
-    * long-diameter downside stays bounded by the rounds-budget escape to
-    * star, so running it first is safe everywhere), `0` for star-first.
-    * A label-prop run that blew the budget on the sample reports
-    * `lpEscaped = true` with its abandoned seconds — star wins outright.
-    */
-  final case class CcCalibration(
-      sampleEdges: Long,
-      lpSeconds: Double,
-      lpRounds: Int,
-      lpEscaped: Boolean,
-      starSeconds: Double,
-      starRounds: Int,
-      winner: String,
-      starThreshold: Long,
-  ) {
-
-    /** The measured relative margin between the two arms —
-      * `|lp − star| / max(lp, star)` — or 1.0 when label propagation
-      * blew its rounds budget on the sample (star wins outright, no
-      * margin question). This is the tie detector
-      * [[recommendedThreshold]] runs on.
-      */
-    def margin: Double =
-      if (lpEscaped) 1.0
-      else math.abs(lpSeconds - starSeconds) / math.max(lpSeconds, starSeconds)
-
-    /** The threshold to actually DEPLOY, with the measured-margin
-      * tiebreak as API instead of operator prose. A calibration whose
-      * margin is inside `tieBand` is a coin flip — two policies within
-      * measurement noise of each other, exactly what the 16×-tier
-      * crossover measured (winners flipped between a full-suite take
-      * and a solo take at a 6% margin) — and the two sides of that coin
-      * are NOT symmetric: label-prop-first's downside is bounded by the
-      * rounds-budget escape to star (worst case = the abandoned budget
-      * rounds, then star), while star-first's downside on an lp-shaped
-      * workload is unbounded in principle and measured at 1.7× at the
-      * 32× tier. So inside the band this returns the budget-guarded
-      * lp-first threshold (`Long.MaxValue`); outside it, the measured
-      * winner's. A budget-blown sample stays star-first regardless —
-      * the sample itself proved the lp pathology.
-      */
-    def recommendedThreshold(tieBand: Double = 0.20): Long = {
-      require(tieBand >= 0.0 && tieBand < 1.0, s"recommendedThreshold: tieBand must be in [0, 1): $tieBand")
-      if (lpEscaped) 0L
-      else if (margin < tieBand) Long.MaxValue
-      else starThreshold
-    }
-  }
-
-  /** EXECUTABLE RE-TUNE for the CC dispatch crossover. Two consecutive
-    * measurement eras had label propagation WIN at 47M–129M edges while
-    * the era before had it LOSE 2× — the crossover is machine-era
-    * unstable, so the pick rule must be measured, not remembered. This
-    * runs BOTH policies on the caller's bounded sample, verifies their
-    * labelings agree bit-for-bit (the same tripwire the scale probe
-    * rides — both contract to comp = min id), and returns the measured
-    * winner plus the `starThreshold` that makes
-    * [[connectedComponentsAdaptive]] run it first.
-    *
-    * THE SAMPLE IS THE CALLER'S CONTRACT: pass a REPRESENTATIVE bounded
-    * edge set — the workload's smallest tier, one day's pair build, one
-    * shard — sized so both policies finish in seconds. Do NOT uniformly
-    * sample edges out of a much larger graph: thinning edges breaks
-    * components apart and lengthens paths, so the sampled diameter (and
-    * label propagation's round count) stops resembling the real
-    * workload's. Structure, not size, is what the calibration measures.
-    *
-    * The rounds budget bounds the label-prop arm the same way the
-    * adaptive dispatch bounds production runs: a sample that blows it is
-    * a long-diameter graph on the wrong algorithm — star wins without
-    * waiting out the pathology.
-    */
-  def ccCalibrate(
-      sampleEdges: DataFrame,
-      labelRoundsBudget: Int = 12,
-      reliable: Boolean = false,
-  ): CcCalibration = {
-    require(labelRoundsBudget >= 1, s"ccCalibrate: labelRoundsBudget must be >= 1: $labelRoundsBudget")
-    // The calibration returns plain scalars, but BOTH arms checkpoint
-    // every iteration round — blocks that would otherwise stay pinned in
-    // the caller's block manager until GC (cumulative checkpoint
-    // retention in a long-lived driver is a measured OOM cause). Snapshot
-    // the persisted-RDD ids at entry and release everything this probe
-    // created before returning. Assumes no CONCURRENT persists in the
-    // same session during the probe — fine for a calibration, which is a
-    // dedicated bounded measurement by contract.
-    val sc = sampleEdges.sparkSession.sparkContext
-    val preExisting = sc.getPersistentRDDs.keySet
-    try {
-      val mat = truncateLineage(sampleEdges.select(col("src"), col("dst")), reliable)
-      val n = mat.count()
-      require(n > 0, "ccCalibrate: the calibration sample has no edges - nothing to measure")
-      def timed[T](f: => T): (Double, T) = {
-        val t0 = System.nanoTime()
-        val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      // Each arm's timed block MATERIALIZES its labeling (count on the
-      // final checkpoint) — the same terminal-action shape the scale probe
-      // times, so the numbers are comparable run to run.
-      val (lpSec, lpOut) = timed {
-        try {
-          val (df, r) = connectedComponentsCounted(mat, maxRounds = labelRoundsBudget, reliable = reliable)
-          df.count(): Unit
-          Some((df, r))
-        } catch {
-          case e: IllegalStateException if e.getMessage.contains("did not converge") => None
-        }
-      }
-      val (starSec, (starLab, starRounds)) = timed {
-        val (df, r) = connectedComponentsStarCounted(mat, reliable = reliable)
-        df.count(): Unit
-        (df, r)
-      }
-      lpOut.foreach { case (lpLab, _) =>
-        val diff = lpLab.except(starLab).count() + starLab.except(lpLab).count()
-        require(
-          diff == 0,
-          s"ccCalibrate: the two policies disagree on $diff (id, comp) rows over the same sample - a " +
-            "correctness bug in one of them, not a tuning question. Refusing to calibrate on it.")
-      }
-      val lpWins = lpOut.isDefined && lpSec < starSec
-      CcCalibration(
-        sampleEdges = n,
-        lpSeconds = lpSec,
-        lpRounds = lpOut.fold(labelRoundsBudget)(_._2),
-        lpEscaped = lpOut.isEmpty,
-        starSeconds = starSec,
-        starRounds = starRounds,
-        winner = if (lpWins) "labelprop" else "star",
-        starThreshold = if (lpWins) Long.MaxValue else 0L,
-      )
-    } finally {
-      // Release every block this probe created (entry-snapshot diff;
-      // Dataset.unpersist would miss localCheckpoint blocks, which
-      // persist on the RDD, not in the cache manager) — on refusal
-      // paths too. Safe because every frame the probe built is local
-      // to it and already materialized past its last use.
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preExisting(id)) rdd.unpersist(blocking = false)
-      }
-    }
-  }
-
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 100, reliable: Boolean = false): DataFrame =
-    connectedComponentsCounted(edges, maxRounds, reliable)._1
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 100): DataFrame =
+    connectedComponentsCounted(edges, maxRounds)._1
 
   /** [[connectedComponents]] plus its rounds-to-converge — the scale probe
     * ([[graft.ScaleBench]]) reports the round count because it, not the
     * per-round cost, is what grows with component diameter.
     */
-  private[graft] def connectedComponentsCounted(
-      edges: DataFrame,
-      maxRounds: Int = 100,
-      reliable: Boolean = false,
-  ): (DataFrame, Int) = {
-    val und = truncateLineage(
+  private[graft] def connectedComponentsCounted(edges: DataFrame, maxRounds: Int = 100): (DataFrame, Int) =
+    labelPropagation(edges, maxRounds).getOrElse(
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds: component diameter exceeds the " +
+          "cap (long-chain graph). Raise maxRounds, or switch to a star-contraction variant for such graphs."
+      )
+    )
+
+  /** The min-label propagation loop: the labels and the rounds they took,
+    * or None when a label still changed in round `maxRounds`.
+    */
+  private def labelPropagation(edges: DataFrame, maxRounds: Int): Option[(DataFrame, Int)] = {
+    val und = Lineage.truncate(
       edges
         .select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
         .distinct(),
-      reliable,
+      eager = false,
     )
     var labels =
-      truncateLineage(und.select(col("src").as("id")).distinct().withColumn("comp", col("id")), reliable)
+      Lineage.truncate(und.select(col("src").as("id")).distinct().withColumn("comp", col("id")), eager = false)
     var changed = 1L
     var rounds = 0
-    while (changed > 0) {
+    while (changed > 0 && rounds < maxRounds) {
       rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds: component diameter exceeds the " +
-            "cap (long-chain graph). Raise maxRounds, or switch to a star-contraction variant for such graphs."
-        )
       val neighborMin = und
         .join(labels.withColumnRenamed("id", "nid"), col("dst") === col("nid"))
         .groupBy(col("src"))
         .agg(min(col("comp")).as("ncomp"))
-      val next = truncateLineage(
+      val next = Lineage.truncate(
         labels
           .join(neighborMin, labels("id") === neighborMin("src"), "left_outer")
           .select(col("id"), col("comp").as("prev"), least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")),
-        reliable,
+        eager = false,
       )
       changed = next.filter(col("comp") =!= col("prev")).count()
       labels = next.select(col("id"), col("comp"))
     }
-    (labels, rounds)
+    if (changed > 0) None else Some((labels, rounds))
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (the large-star /
@@ -977,36 +800,32 @@ object Dedup {
     * union of stars whose centers are the component minima — the same
     * (id, comp = min id) contract as [[connectedComponents]], so the two are
     * interchangeable. Lineage is truncated per round with a LAZY checkpoint
-    * ([[truncateLineage]]); the fixpoint fingerprint aggregation is the
+    * (`Lineage.truncate(_, eager = false)`); the fixpoint fingerprint aggregation is the
     * action that materializes it, and it runs every SECOND round, so two
     * rounds of contraction plus the convergence check ride one job.
     */
-  def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 50, reliable: Boolean = false): DataFrame =
-    connectedComponentsStarCounted(edges, maxRounds, reliable)._1
+  def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 50): DataFrame =
+    connectedComponentsStarCounted(edges, maxRounds)._1
 
   /** [[connectedComponentsStar]] plus its rounds-to-converge (see
     * [[connectedComponentsCounted]]).
     */
-  private[graft] def connectedComponentsStarCounted(
-      edges: DataFrame,
-      maxRounds: Int = 50,
-      reliable: Boolean = false,
-  ): (DataFrame, Int) = {
-    val nodes = truncateLineage(
+  private[graft] def connectedComponentsStarCounted(edges: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
+    val nodes = Lineage.truncate(
       edges
         .select(col("src").as("id"))
         .unionAll(edges.select(col("dst").as("id")))
         .distinct(),
-      reliable,
+      eager = false,
     )
     // canonical working set: undirected closure, self-loops dropped
-    var e = truncateLineage(
+    var e = Lineage.truncate(
       edges
         .select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct(),
-      reliable,
+      eager = false,
     )
     def minOfNeighborhood(d: DataFrame) =
       d.groupBy(col("src")).agg(least(min(col("dst")), first(col("src"))).as("m"))
@@ -1056,7 +875,7 @@ object Dedup {
         .unionAll(mins.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
-      val ssc = truncateLineage(ss, reliable)
+      val ssc = Lineage.truncate(ss, eager = false)
       if (rounds % 2 == 0 || rounds == maxRounds) {
         val cur = fingerprint(ssc)
         converged = cur == prev

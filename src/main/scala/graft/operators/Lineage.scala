@@ -21,11 +21,11 @@ object Lineage {
   /** Truncate `df`'s lineage. `eager = false` defers materialization to the
     * caller's next action (used by the iterative CC operators so the
     * convergence aggregation doubles as the materializer — one job per
-    * round). `forceReliable` lets call sites with an explicit `reliable`
-    * parameter override the session conf.
+    * round). Replicated or executor-local is the session conf's choice
+    * alone; no operator overrides it.
     */
-  def truncate(df: DataFrame, eager: Boolean = true, forceReliable: Boolean = false): DataFrame = {
-    val reliable = forceReliable || df.sparkSession.conf.getOption(ConfKey).exists { v =>
+  def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val reliable = df.sparkSession.conf.getOption(ConfKey).exists { v =>
       // accept the common truthy/falsy spellings; anything else names the
       // key instead of throwing toBoolean's bare "For input string" error
       v.trim.toLowerCase match {

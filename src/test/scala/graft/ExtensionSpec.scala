@@ -144,7 +144,7 @@ class ExtensionSpec extends SparkSpec {
   test("compactAdcIndexCodes: appends splinter cells, compaction repairs files, serving content unchanged") {
     import graft.operators.IvfIndex
     val centroids = IvfIndex.train(emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nlist = 4, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_compact").toString
+    val dir = SparkSpec.tempDir("graft_spec_compact").toString
     IvfIndex.saveAdcIndex(emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.appendToAdcIndex(spark, dir, emb.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", m = 4)
@@ -172,7 +172,6 @@ class ExtensionSpec extends SparkSpec {
       .as[(Int, Long, Long, Long, Long)].collect().toSeq
     assert(again.forall(c => c._2 == 1L && c._3 == 1L && c._4 == c._5),
       s"an already-compacted layout must be left untouched: $again")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("appendToAdcIndex: a batch-keyed append replayed twice lands the identical final state") {
@@ -183,7 +182,7 @@ class ExtensionSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val inc  = emb.filter(col("vec_id") % 2 === 1)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 4, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_replay").toString
+    val dir = SparkSpec.tempDir("graft_spec_replay").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4, batchId = Some(7L))
@@ -204,7 +203,6 @@ class ExtensionSpec extends SparkSpec {
     val cellDirs = new java.io.File(s"$dir/codes").listFiles().filter(_.getName.startsWith("centroid_id="))
     val batchFiles = cellDirs.flatMap(_.listFiles()).filter(_.getName.startsWith("batch7-"))
     assert(batchFiles.nonEmpty, "batch-keyed landings must carry their batch id in the file name")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("repairDriftedIndexCells: flagged cells re-center + re-encode, quiet cells byte-identical, recall recovers") {
@@ -220,7 +218,7 @@ class ExtensionSpec extends SparkSpec {
     )
     val merged = base.unionAll(inc)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_repair").toString
+    val dir = SparkSpec.tempDir("graft_spec_repair").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir, variant = "residual")
     IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4)
@@ -276,7 +274,6 @@ class ExtensionSpec extends SparkSpec {
       f"per-cell repair must recover recall in the drifted regime: $recallBefore%.3f -> $recallAfter%.3f")
     // idempotent no-op: an empty flagged set repairs nothing
     assert(IvfIndex.repairDriftedIndexCells(spark, dir, merged, "vec_id", "embedding", m = 4, Nil).count() == 0)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("repairDriftedIndexCells composes: sequential disjoint repairs equal one repair of the union") {
@@ -295,11 +292,10 @@ class ExtensionSpec extends SparkSpec {
     val merged = base.unionAll(inc)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
     def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_spec_repair2").toString
+      val dir = SparkSpec.tempDir("graft_spec_repair2").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir, variant = "residual")
       IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       dir
     }
     val flagged = IvfIndex
@@ -343,7 +339,7 @@ class ExtensionSpec extends SparkSpec {
     val inc0 = emb.filter(col("vec_id") % 4 === 1)
     val inc1 = emb.filter(col("vec_id") % 4 === 3)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 4, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_wm").toString
+    val dir = SparkSpec.tempDir("graft_spec_wm").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.appendToAdcIndex(spark, dir, inc0, "vec_id", "embedding", m = 4, batchId = Some(0L))
@@ -383,7 +379,6 @@ class ExtensionSpec extends SparkSpec {
     IvfIndex.compactAdcIndexCodes(spark, dir, targetBytes = 128L << 20, minRetainedBatchId = Some(2L))
     assert(!files().exists(_.startsWith("batch")), "a watermark above every batch compacts all landings")
     assert(serve() == serveBefore)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("appendToAdcIndex: landing sweep is bounded by touched cells; replay falls back to the full sweep") {
@@ -391,7 +386,7 @@ class ExtensionSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val inc = emb.filter(col("vec_id") % 2 === 1)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_sweep").toString
+    val dir = SparkSpec.tempDir("graft_spec_sweep").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     val nCells = new java.io.File(s"$dir/codes").listFiles().count(_.getName.startsWith("centroid_id="))
@@ -424,7 +419,6 @@ class ExtensionSpec extends SparkSpec {
     assert(stale.mkdirs())
     IvfIndex.compactAdcIndexCodes(spark, dir, targetBytes = 128L << 20, minRetainedBatchId = Some(4L))
     assert(!stale.exists(), "a maintenance entry must sweep crashed landings' scratch dirs")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("maintainAdcIndexManifest: idle tick commits nothing; over-bound tick compacts content-invisibly") {
@@ -432,7 +426,7 @@ class ExtensionSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val inc = emb.filter(col("vec_id") % 2 === 1)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 4, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_maint").toString
+    val dir = SparkSpec.tempDir("graft_spec_maint").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.writeAdcManifest(spark, dir) // gen 0
@@ -479,7 +473,7 @@ class ExtensionSpec extends SparkSpec {
     val inc4 = emb.filter(col("vec_id") % 4 === 1)
     val inc9 = emb.filter(col("vec_id") % 4 === 3)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 4, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_manifest").toString
+    val dir = SparkSpec.tempDir("graft_spec_manifest").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     assert(IvfIndex.writeAdcManifest(spark, dir) == 0L)
@@ -505,7 +499,7 @@ class ExtensionSpec extends SparkSpec {
     // snapshot == rename-mode serving over the same content (a TWIN
     // index: live-tree reads on the manifest dir itself are refused —
     // between a manifest compaction and cleanup the tree double-counts)
-    val twin = java.nio.file.Files.createTempDirectory("graft_spec_manifest_twin").toString
+    val twin = SparkSpec.tempDir("graft_spec_manifest_twin").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = twin)
     IvfIndex.appendToAdcIndex(spark, twin, inc4, "vec_id", "embedding", m = 4)
@@ -516,7 +510,6 @@ class ExtensionSpec extends SparkSpec {
       .collect()
       .toSeq
     assert(serveG1 == live, "snapshot serving must be hash-identical to the rename-mode path")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(twin))
     val exLive = intercept[IllegalArgumentException] {
       IvfIndex.adcTopKFromIndex(spark, dir, emb, queries, "vec_id", "embedding",
         m = 4, nprobe = 2, candK = 8, k = 3)
@@ -600,7 +593,6 @@ class ExtensionSpec extends SparkSpec {
       .toString
     assert(p.contains("dynamicpruning"),
       s"the snapshot codes scan must stay dynamically partition-pruned:\n$p")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("manifest drift repair: one atomic commit, pre-repair generation keeps serving the old index") {
@@ -612,7 +604,7 @@ class ExtensionSpec extends SparkSpec {
     )
     val merged = base.unionAll(inc)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_mrepair").toString
+    val dir = SparkSpec.tempDir("graft_spec_mrepair").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir, variant = "residual")
     IvfIndex.writeAdcManifest(spark, dir)
@@ -667,7 +659,7 @@ class ExtensionSpec extends SparkSpec {
       "the batch commit's added set must be exactly the batch")
     // the repaired world == the rename-mode repair's world: rebuild the
     // same index rename-style and compare served content
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_spec_mrepair_ref").toString
+    val dir2 = SparkSpec.tempDir("graft_spec_mrepair_ref").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir2, variant = "residual")
     IvfIndex.appendToAdcIndex(spark, dir2, inc, "vec_id", "embedding", m = 4)
@@ -684,13 +676,11 @@ class ExtensionSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/centroids").exists() ||
       serveSnap(None) == serveAfter, "cleanup must not change the retained generation")
     assert(serveSnap(None) == serveAfter)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir2))
   }
 
   test("commitAdcGen: a stale-parent committer refuses loudly; a PUT-overwritten commit is detected") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_commitguard").toString
+    val dir = SparkSpec.tempDir("graft_spec_commitguard").toString
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val refs = Seq(IvfIndex.AdcRef("codes", 0, "part-spec.parquet", 1L))
     IvfIndex.commitAdcGen(spark, fs, dir, 0L, refs, expectedParent = None)
@@ -722,18 +712,17 @@ class ExtensionSpec extends SparkSpec {
       IvfIndex.requireGenCommitWon(spark, dir, 1L, "not-the-winning-token")
     }
     assert(ex3.getMessage.contains("ANOTHER writer"), ex3.getMessage)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("cross-artifact coverage: a one-side crash is detected loudly; re-landing the missing batch heals it") {
     import graft.operators.{Consistency, IvfIndex}
     val docs = (1L to 60L).map(i => (i, s"document number $i with shared filler words")).toDF("doc_id", "text")
-    val dedupPath = java.nio.file.Files.createTempDirectory("graft_xart_spec").resolve("dedup").toString
+    val dedupPath = SparkSpec.tempDir("graft_xart_spec").resolve("dedup").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 30), "doc_id", "text"), dedupPath)
     Dedup.writeDedupManifest(spark, dedupPath) // dedup gen 0
     val annBase = emb.filter(col("vec_id") % 2 === 0)
     val centroids = IvfIndex.train(annBase, "vec_id", "embedding", nlist = 4, iters = 0)
-    val annDir = java.nio.file.Files.createTempDirectory("graft_xart_spec_ann").toString
+    val annDir = SparkSpec.tempDir("graft_xart_spec_ann").toString
     IvfIndex.saveAdcIndex(annBase, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = annDir)
     IvfIndex.writeAdcManifest(spark, annDir) // ann gen 0
@@ -779,20 +768,17 @@ class ExtensionSpec extends SparkSpec {
     assert(spark.read.parquet(s"$annDir/codes").count() ==
       annBase.count() + emb.filter(col("vec_id") % 4 === 1).count() + emb.filter(col("vec_id") % 4 === 3).count(),
       "the remediation replay must not double the crashed landing's rows")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
-    graft.streaming.EventStream.registerDeleteOnExit(
-      new java.io.File(dedupPath).getParentFile)
   }
 
   test("coverage-gated compaction: folding a batch the other artifact never covered refuses; fold watermarks keep the census sound") {
     import graft.operators.{Consistency, Dedup, IvfIndex}
     val docs = (1L to 60L).map(i => (i, s"gate document number $i with shared filler words")).toDF("doc_id", "text")
-    val dedupPath = java.nio.file.Files.createTempDirectory("graft_foldgate_spec").resolve("dedup").toString
+    val dedupPath = SparkSpec.tempDir("graft_foldgate_spec").resolve("dedup").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 30), "doc_id", "text"), dedupPath)
     Dedup.writeDedupManifest(spark, dedupPath) // dedup gen 0
     val annBase = emb.filter(col("vec_id") % 2 === 0)
     val centroids = IvfIndex.train(annBase, "vec_id", "embedding", nlist = 4, iters = 0)
-    val annDir = java.nio.file.Files.createTempDirectory("graft_foldgate_spec_ann").toString
+    val annDir = SparkSpec.tempDir("graft_foldgate_spec_ann").toString
     IvfIndex.saveAdcIndex(annBase, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = annDir)
     IvfIndex.writeAdcManifest(spark, annDir) // ann gen 0
@@ -863,8 +849,6 @@ class ExtensionSpec extends SparkSpec {
     assert(IvfIndex.adcFoldWatermark(spark, annDir).contains(1L))
     // both batches verify through the two fold watermarks + the live refs
     Consistency.requireCoverage(spark, dedupPath, annDir, Seq(0L, 1L))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dedupPath).getParentFile)
   }
 
   test("fold coverage is an exact id set: a gap under the watermark cannot mask a one-sided batch") {
@@ -878,12 +862,12 @@ class ExtensionSpec extends SparkSpec {
     // batch 2 stays a loud divergence until it is actually re-landed.
     import graft.operators.{Consistency, Dedup, IvfIndex}
     val docs = (1L to 80L).map(i => (i, s"foldgap document number $i with shared filler words")).toDF("doc_id", "text")
-    val dedupPath = java.nio.file.Files.createTempDirectory("graft_foldgap_spec").resolve("dedup").toString
+    val dedupPath = SparkSpec.tempDir("graft_foldgap_spec").resolve("dedup").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 20), "doc_id", "text"), dedupPath)
     Dedup.writeDedupManifest(spark, dedupPath)
     val annBase = emb.filter(col("vec_id") % 2 === 0)
     val centroids = IvfIndex.train(annBase, "vec_id", "embedding", nlist = 4, iters = 0)
-    val annDir = java.nio.file.Files.createTempDirectory("graft_foldgap_spec_ann").toString
+    val annDir = SparkSpec.tempDir("graft_foldgap_spec_ann").toString
     IvfIndex.saveAdcIndex(annBase, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = annDir)
     IvfIndex.writeAdcManifest(spark, annDir)
@@ -937,8 +921,6 @@ class ExtensionSpec extends SparkSpec {
     assert(IvfIndex.adcFoldedBatches(spark, annDir).contains(2L))
     assert(Consistency.crossArtifactCoverage(spark, dedupPath, annDir)
       .filter(col("status") =!= "both").isEmpty, "post-remediation census is clean")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dedupPath).getParentFile)
   }
 
   test("planCodesCompaction: a fully watermark-retained census is a no-op, not a failure") {
@@ -956,7 +938,7 @@ class ExtensionSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val base = emb.select(col("vec_id"), col("embedding"))
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_mplain").toString
+    val dir = SparkSpec.tempDir("graft_spec_mplain").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.writeAdcManifest(spark, dir)
@@ -971,7 +953,6 @@ class ExtensionSpec extends SparkSpec {
     // and the batch-keyed landing is accepted as before
     val cells = IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4, batchId = Some(0L))
     assert(cells.nonEmpty)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("cleanupAdcGenerations: sweeps crashed-op orphans the chain passed, spares in-flight gens") {
@@ -979,7 +960,7 @@ class ExtensionSpec extends SparkSpec {
     val base = emb.select(col("vec_id"), col("embedding"))
     val inc = base.select((col("vec_id") + lit(1000000L)).as("vec_id"), col("embedding"))
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_orphans").toString
+    val dir = SparkSpec.tempDir("graft_spec_orphans").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.writeAdcManifest(spark, dir) // gen 0
@@ -1013,7 +994,6 @@ class ExtensionSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/centroids_g1")), "passed-gen centroids orphan swept")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/centroids_g2")), "ahead-of-head centroids spared")
     assert(serve() == beforeServe, "the orphan sweep must not change what the head generation serves")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("repairDriftedIndexCells: refuses while any unfenced batch landing exists") {
@@ -1025,7 +1005,7 @@ class ExtensionSpec extends SparkSpec {
     )
     val merged = base.unionAll(inc)
     val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 8, iters = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spec_fence").toString
+    val dir = SparkSpec.tempDir("graft_spec_fence").toString
     IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir, variant = "residual")
     IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4, batchId = Some(5L))
@@ -1049,7 +1029,6 @@ class ExtensionSpec extends SparkSpec {
     val census = IvfIndex.repairDriftedIndexCells(
       spark, dir, merged, "vec_id", "embedding", m = 4, flagged, minRetainedBatchId = Some(6L))
     assert(census.count() == flagged.size.toLong)
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("cosineNearDupPairsLsh: exactly-once pairs, subset of exhaustive, sims exact") {
@@ -1534,7 +1513,7 @@ class ExtensionSpec extends SparkSpec {
     val b = emb.filter(col("vec_id") % 3 === 1)
     val c = emb.filter(col("vec_id") % 3 === 2)
     val centroids = IvfIndex.train(a, "vec_id", "embedding", nlist = 8, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_append_spec").toString
+    val dir = SparkSpec.tempDir("graft_append_spec").toString
     IvfIndex.saveAdcIndex(a, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = dir)
     IvfIndex.appendToAdcIndex(spark, dir, b, "vec_id", "embedding", m = 4)
@@ -1549,7 +1528,6 @@ class ExtensionSpec extends SparkSpec {
       .as[(Long, Int, Seq[Int])].collect().toSet
     assert(stored == expected, "incremental appends must land the exact union encode")
     assert(stored.size == emb.count(), "every vector present exactly once")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("Winnow.overlapPairs: common-fingerprint drop suppresses ubiquitous grams") {
@@ -1887,17 +1865,6 @@ class ExtensionSpec extends SparkSpec {
     // opposite sides of the dominant axis; per-label min == max (identical vectors)
     assert(l0._5.sign == -l1._5.sign && l0._5 != 0.0)
     assert(l0._3 == l0._4 && l1._3 == l1._4)
-  }
-
-  test("connectedComponentsAdaptive: both dispatch arms label identically across the threshold") {
-    // two components: a triangle {1,2,3} and an edge {10,11}
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)).toDF("src", "dst")
-    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // threshold above the edge count -> label propagation; below -> star
-    assert(labels(Dedup.connectedComponentsAdaptive(edges, starThreshold = 100L)) == expect)
-    assert(labels(Dedup.connectedComponentsAdaptive(edges, starThreshold = 1L)) == expect)
   }
 
   test("neardupKeepBest: longest member survives, doc-id breaks ties, dropped census") {

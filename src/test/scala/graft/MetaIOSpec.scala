@@ -15,7 +15,7 @@ class MetaIOSpec extends SparkSpec {
 
   test("readGroups reads a Spark-written object: strings, ints, longs, float arrays, ordering-free") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_rt").toString
+    val dir = SparkSpec.tempDir("graft_metaio_rt").toString
     val df = Seq(
       ("codes", 3, "part-a.parquet", 101L, Seq(1.5f, -2.25f)),
       ("fold", 0, "7", 0L, Seq.empty[Float]),
@@ -36,7 +36,7 @@ class MetaIOSpec extends SparkSpec {
   }
 
   test("writeRows output is read back identically by Spark (the manifest interchange contract)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_w").toString
+    val dir = SparkSpec.tempDir("graft_metaio_w").toString
     val schema =
       """message spark_schema {
         |  optional binary kind (UTF8);
@@ -59,7 +59,7 @@ class MetaIOSpec extends SparkSpec {
 
   test("rowCount matches Spark's count over a partitioned tree with underscore partition dirs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_pc").toString
+    val dir = SparkSpec.tempDir("graft_metaio_pc").toString
     // __bin starts with '_': Spark's hidden-path rule exempts names with
     // '=', and MetaIO must match or compaction row gates read 0 (the
     // exact regression this spec pins).
@@ -79,14 +79,14 @@ class MetaIOSpec extends SparkSpec {
       MetaIO.readGroups(conf, "/tmp/graft_metaio_definitely_missing_12345")
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_nf").toString
+    val dir = SparkSpec.tempDir("graft_metaio_nf").toString
     Seq(("a", 1)).toDF("kind", "n").coalesce(1).write.mode("overwrite").parquet(dir)
     val g = MetaIO.readGroups(conf, dir).head
     intercept[IllegalArgumentException] { MetaIO.str(g, "nope") }
   }
 
   test("readGroups on a directory with no *.parquet data file fails loudly, not as zero rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_metaio_empty")
+    val dir = SparkSpec.tempDir("graft_metaio_empty")
     intercept[IllegalStateException](MetaIO.readGroups(conf, dir.toString))
     // a commit marker alone is no data file either
     java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))

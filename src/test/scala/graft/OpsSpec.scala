@@ -56,7 +56,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("Sink.partitionedJson writes Hive-style type= layout; nulls omitted") {
-    val dir = Files.createTempDirectory("graft_sink").toString
+    val dir = SparkSpec.tempDir("graft_sink").toString
     val df = Seq(("x", Some(1)), ("y", None)).toDF("name", "opt")
     Sink.partitionedJson(df, "confirmed", dir)
     val typeDir = new java.io.File(s"$dir/type=confirmed")
@@ -71,7 +71,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("Sink.writePerRecord: data-derived filenames via foreachPartition") {
-    val dir = Files.createTempDirectory("graft_rec").toString
+    val dir = SparkSpec.tempDir("graft_rec").toString
     val df = Seq(("Freedonia", ""), ("Sylvania", "North"))
       .toDF("country/region", "province/state")
       .withColumn("key", Pipelines.recordKey("confirmed"))
@@ -84,7 +84,7 @@ class OpsSpec extends SparkSpec {
 
   test("Lake: explicit schema skips inference; partition column still discovered") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_lake_schema").toString
+    val dir = SparkSpec.tempDir("graft_lake_schema").toString
     Seq(("a", 1, "confirmed"), ("b", 2, "deaths"))
       .toDF("name", "v", "type")
       .write.partitionBy("type").mode("overwrite").json(dir)
@@ -104,7 +104,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("Lake: partition discovery recovers type column; SQL surface works") {
-    val dir = Files.createTempDirectory("graft_lake").toString
+    val dir = SparkSpec.tempDir("graft_lake").toString
     // dynamic partition overwrite: per-category writes must NOT truncate
     // each other (K3 idempotent daily re-run is per category)
     Sink.partitionedJson(Seq(("a", 1), ("b", 2)).toDF("name", "v"), "confirmed", dir)
@@ -128,7 +128,7 @@ class OpsSpec extends SparkSpec {
       (12L, "sphinx of black quartz judge my vow"), // novel
     ).toDF("doc_id", "text")
     val idx = Dedup.buildDedupIndex(ex, "doc_id", "text")
-    val dir = Files.createTempDirectory("graft_dedup_idx").resolve("index").toString
+    val dir = SparkSpec.tempDir("graft_dedup_idx").resolve("index").toString
     Dedup.saveDedupIndex(idx, dir)
     val loaded = Dedup.loadDedupIndex(spark, dir)
     assert(loaded.collect().toSet == idx.collect().toSet) // parquet round-trip is lossless
@@ -141,7 +141,7 @@ class OpsSpec extends SparkSpec {
     val eK = intercept[IllegalArgumentException](Dedup.loadDedupIndex(spark, dir, k = 16))
     assert(eK.getMessage.contains("mh8"), eK.getMessage)
     // extra columns are rejected too (the downstream union is positional)
-    val dirX = Files.createTempDirectory("graft_dedup_idx_x").resolve("index").toString
+    val dirX = SparkSpec.tempDir("graft_dedup_idx_x").resolve("index").toString
     Dedup.saveDedupIndex(idx.withColumn("junk", lit(1)), dirX)
     val eX = intercept[IllegalArgumentException](Dedup.loadDedupIndex(spark, dirX))
     assert(eX.getMessage.contains("junk"), eX.getMessage)
@@ -170,7 +170,7 @@ class OpsSpec extends SparkSpec {
       (101L, "document number 7 with shared filler words"), // near/exact dup of 7
       (102L, "an entirely novel zebra sentence"),
     ).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_dedup_cmp").resolve("index").toString
+    val dir = SparkSpec.tempDir("graft_dedup_cmp").resolve("index").toString
     // ten appended batches -> many small files
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 4), "doc_id", "text"), dir)
     (1 to 9).foreach { b =>
@@ -199,7 +199,7 @@ class OpsSpec extends SparkSpec {
   test("dedup index batch landings: replay converges, watermark splits compaction, unfenced refusal") {
     import graft.operators.Dedup
     val docs = (1L to 40L).map(i => (i, s"document number $i with shared filler words")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_dedup_batch").resolve("index").toString
+    val dir = SparkSpec.tempDir("graft_dedup_batch").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 20), "doc_id", "text"), dir)
     val b0 = Dedup.buildDedupIndex(docs.filter($"doc_id" > 20 && $"doc_id" <= 30), "doc_id", "text")
     val b1 = Dedup.buildDedupIndex(docs.filter($"doc_id" > 30), "doc_id", "text")
@@ -227,7 +227,7 @@ class OpsSpec extends SparkSpec {
     Dedup.appendDedupIndex(b1, dir, batchId = Some(1L))
     assert(Dedup.loadDedupIndex(spark, dir).collect().toSet == full)
     // an ALL-retained index is a legal nightly state: the compactor no-ops
-    val dir2 = Files.createTempDirectory("graft_dedup_batch2").resolve("index").toString
+    val dir2 = SparkSpec.tempDir("graft_dedup_batch2").resolve("index").toString
     Dedup.appendDedupIndex(b0, dir2, batchId = Some(5L))
     val pre2 = Dedup.loadDedupIndex(spark, dir2).collect().toSet
     Dedup.compactDedupIndex(spark, dir2, targetFiles = 1, minRetainedBatchId = Some(5L))
@@ -239,7 +239,7 @@ class OpsSpec extends SparkSpec {
   test("dedup manifest: lifecycle, snapshot isolation, mode-twin refusals, post-compaction replay") {
     import graft.operators.Dedup
     val docs = (1L to 40L).map(i => (i, s"document number $i with shared filler words")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_dedup_manifest").resolve("index").toString
+    val dir = SparkSpec.tempDir("graft_dedup_manifest").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 20), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     val eB = intercept[IllegalArgumentException](Dedup.writeDedupManifest(spark, dir))
@@ -264,7 +264,7 @@ class OpsSpec extends SparkSpec {
     val eC = intercept[IllegalArgumentException](Dedup.compactDedupIndex(spark, dir, targetFiles = 1))
     assert(eC.getMessage.contains("MANIFEST"), eC.getMessage)
     val eM = intercept[IllegalArgumentException](
-      Dedup.compactDedupIndexManifest(spark, Files.createTempDirectory("graft_nomanifest").toString))
+      Dedup.compactDedupIndexManifest(spark, SparkSpec.tempDir("graft_nomanifest").toString))
     assert(eM.getMessage.contains("bootstrap"), eM.getMessage)
     // unfenced manifest compaction refuses; the watermark splits batches
     val eU = intercept[IllegalArgumentException](
@@ -287,7 +287,7 @@ class OpsSpec extends SparkSpec {
 
   test("dedup manifest: commit guard refuses a stale parent; orphan sweep spares in-flight gens") {
     import graft.operators.Dedup
-    val dir = Files.createTempDirectory("graft_dedup_guard").toString
+    val dir = SparkSpec.tempDir("graft_dedup_guard").toString
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val refs = Seq(("sig", "part-spec.parquet", 1L))
     Dedup.commitDedupGen(spark, fs, dir, 0L, refs, expectedParent = None)
@@ -308,7 +308,7 @@ class OpsSpec extends SparkSpec {
     assert(exPut.getMessage.contains("ANOTHER writer"), exPut.getMessage)
     // orphan sweep on a real index: passed-gen orphans die, ahead-of-head spared
     val docs = (1L to 10L).map(i => (i, s"document number $i with shared filler words")).toDF("doc_id", "text")
-    val idx = Files.createTempDirectory("graft_dedup_orphans").resolve("index").toString
+    val idx = SparkSpec.tempDir("graft_dedup_orphans").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs, "doc_id", "text"), idx)
     Dedup.writeDedupManifest(spark, idx) // gen 0 = the head
     fs.create(new org.apache.hadoop.fs.Path(s"$idx/m0bin-orphan.parquet")).close()
@@ -339,7 +339,7 @@ class OpsSpec extends SparkSpec {
     // pre-tick head (retention widens by its own commits); the next
     // tick retires the superseded world; content identical throughout.
     val mDocs = (1L to 12L).map(i => (i, s"maintenance doc number $i sharing filler words")).toDF("doc_id", "text")
-    val mIdx = Files.createTempDirectory("graft_dedup_maint").resolve("index").toString
+    val mIdx = SparkSpec.tempDir("graft_dedup_maint").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(mDocs.filter($"doc_id" <= 6), "doc_id", "text"), mIdx)
     Dedup.writeDedupManifest(spark, mIdx) // gen 0
     Dedup.appendDedupIndex(
@@ -375,7 +375,7 @@ class OpsSpec extends SparkSpec {
   test("dedupChainDiff: batch = added; backward diff = removed; compaction and identity invisible") {
     import graft.operators.Dedup
     val docs = (1L to 20L).map(i => (i, s"chain diff document $i with filler words")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft_chain_diff").resolve("index").toString
+    val dir = SparkSpec.tempDir("graft_chain_diff").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" <= 12), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     Dedup.appendDedupIndex(
@@ -404,71 +404,18 @@ class OpsSpec extends SparkSpec {
   test("connectedComponentsAdaptive: a long-diameter graph escapes the rounds budget to star") {
     import graft.operators.Dedup
     // a 64-node path: diameter 63 — min-label propagation moves the min
-    // one hop per round, so a 4-round budget must trip the escape
+    // one hop per round, so the 12-round budget must trip the escape
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-    val out = Dedup.connectedComponentsAdaptive(chain, labelRoundsBudget = 4)
+    val (out, arm) = Dedup.connectedComponentsAdaptiveArm(chain)
     val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Dedup.lastAdaptiveEscaped, "the 4-round budget must trip on a diameter-63 path")
+    assert(arm == "escaped", s"the 12-round budget must trip on a diameter-63 path: $arm")
     assert(got == (0L to 63L).map(i => (i, 0L)).toSet,
       "the star escape must still label the whole chain comp = min id")
-    // the dense near-dup regime (diameter 2) never escapes under the default
+    // the dense near-dup regime (diameter 2) never escapes
     val dense = (1L to 20L).map(i => (0L, i)).toDF("src", "dst")
-    val out2 = Dedup.connectedComponentsAdaptive(dense)
+    val (out2, arm2) = Dedup.connectedComponentsAdaptiveArm(dense)
     val got2 = out2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!Dedup.lastAdaptiveEscaped, "a star graph converges inside the default budget")
+    assert(arm2 == "labelprop", s"a star graph converges inside the budget: $arm2")
     assert(got2 == (0L to 20L).map(i => (i, 0L)).toSet)
-  }
-
-  test("ccCalibrate: measures both policies, verifies labeling equality, returns the winner-first threshold") {
-    import graft.operators.Dedup
-    // two dense components + a short tail — converges fast on both arms
-    val edges = ((1L to 15L).map(i => (0L, i)) ++ (101L to 110L).map(i => (100L, i)) ++
-      Seq((15L, 16L), (16L, 17L))).toDF("src", "dst")
-    val cal = Dedup.ccCalibrate(edges)
-    assert(cal.sampleEdges == 27L)
-    assert(cal.lpSeconds > 0 && cal.starSeconds > 0)
-    assert(!cal.lpEscaped, "a diameter-3 sample must converge inside the default budget")
-    assert(Set("labelprop", "star")(cal.winner))
-    // the threshold ENCODES the winner: MaxValue = label-prop-first (the
-    // budget escape bounds its tail), 0 = star-first
-    assert(cal.starThreshold == (if (cal.winner == "labelprop") Long.MaxValue else 0L))
-    assert((cal.winner == "labelprop") == (cal.lpSeconds < cal.starSeconds))
-    // the calibration is EXECUTABLE: dispatching with the returned
-    // threshold reproduces the same labeling either way
-    val expect = (0L to 17L).map(i => (i, 0L)).toSet ++ (100L to 110L).map(i => (i, 100L)).toSet
-    val labeled = Dedup.connectedComponentsAdaptive(edges, starThreshold = cal.starThreshold)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(labeled == expect)
-    // a long-diameter sample: the lp arm blows its budget and star wins
-    // outright — the report says so instead of waiting out the pathology
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-    val cal2 = Dedup.ccCalibrate(chain, labelRoundsBudget = 4)
-    assert(cal2.lpEscaped && cal2.winner == "star" && cal2.starThreshold == 0L,
-      s"a budget-blowing sample must calibrate star-first: $cal2")
-    // the measured margin and the tiebreak are part of the report's API
-    assert(cal2.margin == 1.0 && cal2.recommendedThreshold(0.99) == 0L,
-      "a budget-blown sample stays star-first at ANY tie band - the sample proved the lp pathology")
-    assert(cal.recommendedThreshold(0.0) == cal.starThreshold,
-      "a zero tie band is the raw measured winner")
-  }
-
-  test("CcCalibration.recommendedThreshold: a margin inside the tie band deploys budget-guarded lp-first") {
-    import graft.operators.Dedup.CcCalibration
-    // the 16x-tier shape: star nominally wins by 6% - a coin flip, and
-    // the asymmetric downside rule must override the raw winner (lp's
-    // tail is rounds-budget-bounded; star's loss was measured 1.7x)
-    val coinFlip = CcCalibration(1000L, 10.6, 3, lpEscaped = false, 10.0, 5, "star", 0L)
-    assert(math.abs(coinFlip.margin - 0.6 / 10.6) < 1e-12)
-    assert(coinFlip.recommendedThreshold() == Long.MaxValue,
-      "inside the default 20% band the safe tiebreak is lp-first, whatever the raw winner")
-    assert(coinFlip.recommendedThreshold(tieBand = 0.01) == 0L,
-      "outside the band the measured winner deploys")
-    // a decisive star win is never overridden
-    val starBig = CcCalibration(1000L, 20.0, 3, lpEscaped = false, 10.0, 5, "star", 0L)
-    assert(starBig.margin == 0.5 && starBig.recommendedThreshold() == 0L)
-    // a decisive lp win deploys lp-first both ways
-    val lpBig = CcCalibration(1000L, 10.0, 3, lpEscaped = false, 20.0, 5, "labelprop", Long.MaxValue)
-    assert(lpBig.recommendedThreshold() == Long.MaxValue)
-    intercept[IllegalArgumentException](lpBig.recommendedThreshold(1.0))
   }
 }

@@ -140,7 +140,7 @@ class PlanSpec extends SparkSpec {
 
   test("JSON lake: type= partition pruning reaches the file index (Athena parity)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = SparkSpec.tempDir("graft_prune").toString
     Seq(("a", 1, "confirmed"), ("b", 2, "deaths"), ("c", 3, "recovered"))
       .toDF("name", "v", "type")
       .write
@@ -353,7 +353,7 @@ class PlanSpec extends SparkSpec {
   test("Pin.spread adds no repartition after dropDuplicates or typed grouping (their own shuffle)") {
     import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val dir = SparkSpec.tempDir("graft_spread").toString
     Seq(("a", 1), ("a", 1), ("b", 2)).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(dir)
     val oneFile = spark.read.parquet(dir)
     def repartitions(df: DataFrame): Int =
@@ -621,7 +621,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: a selective dim filter prunes the partitioned fact scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = SparkSpec.tempDir("graft_dpp").toString
     Tables
       .events(spark, sf())
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))

@@ -181,17 +181,20 @@ class QualitySpec extends SparkSpec {
   }
 
   test("connected components: reliable checkpointing matches local, both operators") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = SparkSpec.tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
     val local = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    val rel = Dedup.connectedComponents(edges, reliable = true).as[(Long, Long)].collect().toMap
-    val relStar = Dedup.connectedComponentsStar(edges, reliable = true).as[(Long, Long)].collect().toMap
-    assert(rel == local && relStar == local, s"local=$local rel=$rel star=$relStar")
+    spark.conf.set(graft.operators.Lineage.ConfKey, "true")
+    try {
+      val rel = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
+      val relStar = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
+      assert(rel == local && relStar == local, s"local=$local rel=$rel star=$relStar")
+    } finally spark.conf.set(graft.operators.Lineage.ConfKey, "false")
   }
 
   test("spark.graft.reliableCheckpoints=true flips every operator to replicated checkpoints") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toString
+    val dir = SparkSpec.tempDir("graft-ckpt-conf").toString
     spark.sparkContext.setCheckpointDir(dir)
     val docs = spark.read.parquet(sf() + "/documents.parquet").select($"doc_id", $"text")
     val before = Dedup

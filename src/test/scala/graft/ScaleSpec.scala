@@ -168,7 +168,7 @@ class ScaleSpec extends SparkSpec {
   test("publishDedupServeTables stamps the served generation; staleness is observable") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pubserve").toString
+    val dir = SparkSpec.tempDir("graft_pubserve").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 2 === 0), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     assert(Dedup.publishDedupServeTables(spark, dir, "graft_pub_t", buckets = 2) == 0L)
@@ -193,7 +193,7 @@ class ScaleSpec extends SparkSpec {
   test("refreshDedupServe: corpus rewrite only at the staleness bound, no-op below it") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_refresh").toString
+    val dir = SparkSpec.tempDir("graft_refresh").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 0), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     // never-published -> always refresh
@@ -229,7 +229,7 @@ class ScaleSpec extends SparkSpec {
   test("refreshDedupServe: a fresh LEGACY headless layout no-ops; its plain tables retire after a versioned publish supersedes them") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacyserve").toString
+    val dir = SparkSpec.tempDir("graft_legacyserve").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 0), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     // The PRE-HEAD protocol: plain tables + the servedGeneration stamp on
@@ -288,7 +288,7 @@ class ScaleSpec extends SparkSpec {
     // A FOREIGN table that merely collides with the plain name carries no
     // ownership stamp: the vacuum must spare it (bucketize's refusal rule).
     spark.range(5).toDF("id").write.saveAsTable("graft_foreignp_t_sigs")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_legacyserve2").toString
+    val dir2 = SparkSpec.tempDir("graft_legacyserve2").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 2), "doc_id", "text"), dir2)
     Dedup.writeDedupManifest(spark, dir2)
     Dedup.publishDedupServeTables(spark, dir2, "graft_foreignp_t", buckets = 2)
@@ -302,7 +302,7 @@ class ScaleSpec extends SparkSpec {
     // publishedBy alone would destroy any bucketized table that merely
     // collides with the plain serve name.
     graft.ops.Lake.bucketize(spark.range(7).toDF("id"), "graft_foreignb_t_sigs", Seq("id"), 2)
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_legacyserve3").toString
+    val dir3 = SparkSpec.tempDir("graft_legacyserve3").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 2), "doc_id", "text"), dir3)
     Dedup.writeDedupManifest(spark, dir3)
     Dedup.publishDedupServeTables(spark, dir3, "graft_foreignb_t", buckets = 2)
@@ -312,7 +312,7 @@ class ScaleSpec extends SparkSpec {
       "a bucketize-published foreign table colliding with the plain serve name must survive the vacuum")
     // a RAW headless layout (no legacy generation stamp at all) still
     // retires through the serve-layout stamp its own save writes
-    val dir4 = java.nio.file.Files.createTempDirectory("graft_legacyserve4").toString
+    val dir4 = SparkSpec.tempDir("graft_legacyserve4").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 1), "doc_id", "text"), dir4)
     Dedup.writeDedupManifest(spark, dir4)
     Dedup.saveDedupServeTables(Dedup.loadDedupIndexSnapshot(spark, dir4), "graft_rawplain_t", buckets = 2)
@@ -325,15 +325,11 @@ class ScaleSpec extends SparkSpec {
     Dedup.vacuumServePublishes(spark, "graft_rawplain_t")
     assert(!spark.catalog.tableExists("graft_rawplain_t_sigs"),
       "a superseded RAW plain layout must retire via its serve-layout stamp once the anchor ages")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir2))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir3))
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir4))
   }
 
   test("readServeHead: the legacy since fallback anchors on the versioned-name tail, immune to a _ts token inside the prefix") {
     import graft.operators.Dedup
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sincetrap")
+    val tmp = SparkSpec.tempDir("graft_sincetrap")
     val headDir = new org.apache.hadoop.fs.Path(tmp.toString, "heads")
     val fs = headDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(headDir)
@@ -362,12 +358,11 @@ class ScaleSpec extends SparkSpec {
       "a present parent head forwards its anchor")
     assert(Dedup.firstSwingAnchor(fs, headDir, None, 777L) == 777L,
       "the very first publish stamps the anchor")
-    graft.streaming.EventStream.registerDeleteOnExit(tmp.toFile)
   }
 
   test("AtomicHead: a cleanup IO failure is suppressed onto the protocol refusal, never replacing it") {
     import graft.operators.AtomicHead
-    val tmp = java.nio.file.Files.createTempDirectory("graft_athead")
+    val tmp = SparkSpec.tempDir("graft_athead")
     val raw = new org.apache.hadoop.fs.Path(tmp.toString)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = new org.apache.hadoop.fs.Path(tmp.toString, "staged.obj")
@@ -419,13 +414,12 @@ class ScaleSpec extends SparkSpec {
       requireCommitWon = () => (),
     )
     assert(raw.exists(target2), "the success-path commit must stand despite the failed scratch delete")
-    graft.streaming.EventStream.registerDeleteOnExit(tmp.toFile)
   }
 
   test("vacuumServePublishes: the inline shallow vacuum skips the warehouse listing; deep maintenance reclaims cross-session dir orphans") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shallowvac").toString
+    val dir = SparkSpec.tempDir("graft_shallowvac").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 3 === 0), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     Dedup.publishDedupServeTables(spark, dir, "graft_shvac_t", buckets = 2)
@@ -454,14 +448,13 @@ class ScaleSpec extends SparkSpec {
     // The standalone DEEP vacuum reclaims it.
     Dedup.vacuumServePublishes(spark, "graft_shvac_t")
     assert(!fs.exists(orphanLoc), "the deep maintenance vacuum must reclaim the cross-session dir orphan")
-    graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
   }
 
   test("atomic serve publish: wholly-old-or-wholly-new, torn publish refuses, head fences, orphan vacuum") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
     val b = graft.functions.Hashing.hash64(concat(lit("upd:"), col("text"))) % 10
-    val dir = java.nio.file.Files.createTempDirectory("graft_atomicpub").toString
+    val dir = SparkSpec.tempDir("graft_atomicpub").toString
     val inc = docs.filter(b >= 8)
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter(b < 5), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
@@ -531,7 +524,7 @@ class ScaleSpec extends SparkSpec {
   test("dedupServeDiff: clean publish is empty; stale probes and doctored tables surface rows") {
     import graft.operators.Dedup
     val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdiff").toString
+    val dir = SparkSpec.tempDir("graft_sdiff").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter($"doc_id" % 2 === 0), "doc_id", "text"), dir)
     Dedup.writeDedupManifest(spark, dir) // gen 0
     Dedup.publishDedupServeTables(spark, dir, "graft_sdiff_t", buckets = 2)
@@ -557,7 +550,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("readManifest: one scan over N category files, category derived from path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest")
+    val dir = SparkSpec.tempDir("graft_manifest")
     def write(name: String, rows: String): String = {
       val p = dir.resolve(name)
       java.nio.file.Files.writeString(p, s"Country/Region,1/22/20\n$rows")
@@ -576,7 +569,7 @@ class ScaleSpec extends SparkSpec {
 
   test("strict CSV: a malformed cell fails the scan (E1 parity)") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_badcsv")
+    val dir = SparkSpec.tempDir("graft_badcsv")
     val p = dir.resolve("bad.csv")
     java.nio.file.Files.writeString(p, "id,v\n1,10\nnot_an_int,20\n3,30\n")
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("v", IntegerType)))
@@ -621,15 +614,27 @@ class ScaleSpec extends SparkSpec {
     val labels = Dedup.connectedComponentsStar(chain).as[(Long, Long)].collect()
     assert(labels.length == 1000)
     assert(labels.forall(_._2 == 0L), s"single chain must collapse to component 0: ${labels.filter(_._2 != 0L).take(3)}")
-    // multiple components + equivalence with min-label on a small graph
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)).toDF("src", "dst")
-    val star = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
-    val label = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(star == label, s"star=$star label=$label")
+    // multiple components: star, min-label and the adaptive dispatch (its
+    // label-prop arm at this size) all give the hand-computed min labels
+    val graphs = Seq(
+      Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)) ->
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L),
+      // a triangle and an edge
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)) -> Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L),
+    )
+    for ((pairs, want) <- graphs) {
+      val edges = pairs.toDF("src", "dst")
+      val star = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
+      val label = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
+      val (adaptiveDf, arm) = Dedup.connectedComponentsAdaptiveArm(edges)
+      val adaptive = adaptiveDf.as[(Long, Long)].collect().toMap
+      assert(star == want && label == want, s"star=$star label=$label")
+      assert(arm == "labelprop" && adaptive == want, s"adaptive ($arm)=$adaptive")
+    }
   }
 
   test("writeBloomFiltered: footer carries a bloom filter for the keyed column only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = SparkSpec.tempDir("graft_bloom").toString
     val docs = spark.read.parquet(sf() + "/documents.parquet").select($"doc_id", $"source", $"text")
     Lake.writeBloomFiltered(docs, dir, Map("doc_id" -> 500L))
     // footer-level proof, not just a round trip: the column chunk metadata
@@ -665,7 +670,7 @@ class ScaleSpec extends SparkSpec {
     // whole key range (min/max prunes nothing), force many small row groups,
     // then count row groups whose bloom filter admits a probe key — the
     // exact set a footer-reading scan visits.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_skip").toString
+    val dir = SparkSpec.tempDir("graft_bloom_skip").toString
     val docs = spark.read.parquet(sf("sf0.01") + "/documents.parquet")
       .select($"doc_id", $"text")
       .orderBy(xxhash64($"doc_id")) // deterministic scramble, kills range pruning
@@ -716,23 +721,6 @@ class ScaleSpec extends SparkSpec {
         s"bloom should skip at least half the row groups: $bloomHits of ${blocks.size}",
       )
     } finally reader.close()
-  }
-
-  test("adaptive CC dispatches on edge count and both branches label identically") {
-    import graft.operators.Dedup
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("src", "dst")
-    // threshold above the edge count -> label-prop branch; below -> star
-    // branch; the (id, comp = min id) contract must make both labelings
-    // identical, and equal to the hand-computed min labels
-    val viaLabel = Dedup.connectedComponentsAdaptive(edges, starThreshold = 1000000L)
-      .as[(Long, Long)].collect().toMap
-    val viaStar = Dedup.connectedComponentsAdaptive(edges, starThreshold = 1L)
-      .as[(Long, Long)].collect().toMap
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L)
-    assert(viaLabel == want, s"label branch: $viaLabel")
-    assert(viaStar == want, s"star branch: $viaStar")
   }
 
   test("jaccardPairs: oversized block fails loudly instead of running N² silently") {

@@ -12,6 +12,18 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A fresh directory under `java.io.tmpdir`, deleted recursively, with
+    * whatever was written into it later, when the test JVM exits.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession
       .builder()
@@ -20,7 +32,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

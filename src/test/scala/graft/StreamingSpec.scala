@@ -385,10 +385,9 @@ class StreamingSpec extends SparkSpec {
     // (c) with a batchId-keyed idempotent sink, leave every input row in
     // the output exactly once. The crash is injected at the worst point —
     // AFTER the sink write, BEFORE the checkpoint commit.
-    import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_ckpt_in").toString
-    val out = Files.createTempDirectory("graft_ckpt_out").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt_log").toString
+    val in = SparkSpec.tempDir("graft_ckpt_in").toString
+    val out = SparkSpec.tempDir("graft_ckpt_out").toString
+    val ckpt = SparkSpec.tempDir("graft_ckpt_log").toString
     // three input files -> three microbatches under maxFilesPerTrigger=1
     (0 until 3).foreach { f =>
       spark.range(f * 10, f * 10 + 10).selectExpr("id", s"$f as file_id")

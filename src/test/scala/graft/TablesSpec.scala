@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 class TablesSpec extends SparkSpec {
 
   private def tmpSf(): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft_tables_spec")
+    val dir = SparkSpec.tempDir("graft_tables_spec")
     // Start from a full copy of the real sf0.001 tables so the probe's
     // whole-catalog walk succeeds, then perturb individual files per test.
     val src = Paths.get(sf())
