@@ -44,7 +44,7 @@ object Bench {
       import org.apache.spark.sql.streaming.Trigger
       val tiny = spark.range(10).selectExpr(
         "timestamp_seconds(1700000000 + id * 60) as ts", "id % 3 as k", "id as v")
-      val dir = java.nio.file.Files.createTempDirectory("graft_bench_warm")
+      val dir = Harness.tempDir("graft_bench_warm")
       tiny.write.mode("overwrite").parquet(dir.toString)
       val q = spark.readStream.schema(tiny.schema).parquet(dir.toString)
         .withWatermark("ts", "1 minute")

@@ -777,44 +777,18 @@ object ExtensionQueries {
     s"len(list_filter(toks, t -> t IN ($words)))"
   }
 
-  /** Unique temp dir for a query's persisted-index round-trip, with a
-    * recursive JVM-exit cleanup — repeated gate/bench runs must not
-    * accumulate index parquet in /tmp (the EventStream.writeTemp stance).
-    * ONE shutdown hook drains a concurrent queue: registering a hook per
-    * invocation would leak a live Thread per gate-loop iteration.
-    */
-  private val tempIndexDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val tempIndexCleanup: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      tempIndexDirs.forEach(p => rm(p.toFile))
-    }))
-  }
-
-  /** One temp dir PER PREFIX, reused across invocations: a gate loop
-    * re-running the index queries in one JVM would otherwise accumulate a
-    * fresh index parquet dir per round until shutdown. Reuse is safe
-    * because every user starts with a mode("overwrite") save; the shutdown
-    * hook stays as the backstop cleanup.
+  /** One temp dir PER PREFIX for a query's persisted-index round-trip
+    * ([[Harness.tempDir]]: deleted recursively at JVM exit), reused across
+    * invocations: a gate loop re-running the index queries in one JVM would
+    * otherwise accumulate a fresh index parquet dir per round until
+    * shutdown. Reuse is safe because every user starts with a
+    * mode("overwrite") save.
     */
   private val tempIndexDirByPrefix =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  private def tempIndexDir(prefix: String): String = {
-    tempIndexCleanup
-    val dir = tempIndexDirByPrefix.computeIfAbsent(
-      prefix,
-      _ => {
-        val d = java.nio.file.Files.createTempDirectory(prefix)
-        tempIndexDirs.add(d)
-        d
-      },
-    )
-    dir.resolve("index").toString
-  }
+  private def tempIndexDir(prefix: String): String =
+    tempIndexDirByPrefix.computeIfAbsent(prefix, p => Harness.tempDir(p)).resolve("index").toString
 
   /** Per-label mean centroids over the embeddings table (float-cast means —
     * the q60 cross-engine avg rule): the deterministic codebook the
@@ -1622,7 +1596,7 @@ object ExtensionQueries {
     "q31_csv_roundtrip" -> ((s, d) => {
       // fresh dir per invocation: concurrent Verify/Bench runs must not
       // overwrite each other's intermediate files mid-read
-      val dir = java.nio.file.Files.createTempDirectory("graft_csv_roundtrip").toString
+      val dir = Harness.tempDir("graft_csv_roundtrip").toString
       t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
         .write
@@ -1642,7 +1616,7 @@ object ExtensionQueries {
 
     // ---- K1+Lake: partitioned JSON lake write→partition-discovered read ----
     "q32_json_lake" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_json_lake").toString
+      val dir = Harness.tempDir("graft_json_lake").toString
       Tables
         .events(s, d)
         .select(col("event_type"), col("user_id"), col("value"))
@@ -4136,7 +4110,7 @@ object ExtensionQueries {
     //      The correctness contract is q32's: what was written is what the
     //      probe reads back ----
     "q252_bloom_lookup" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bloom_lake").toString
+      val dir = Harness.tempDir("graft_bloom_lake").toString
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("source"), length(col("text")).as("n_chars"))
         .orderBy(xxhash64(col("doc_id")))
@@ -4151,10 +4125,6 @@ object ExtensionQueries {
           "parquet.block.size.row.check.max" -> "20",
         ),
       )
-      // Harness scratch, same cleanup rule as the streaming temp parquet:
-      // registered for exit-time deletion so repeated correctness/bench
-      // runs don't leak a lake per invocation in the JVM temp dir.
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       s.read
         .parquet(dir)
         .filter(col("doc_id").isin(0L, 7L, 123L, 444L))
@@ -4224,10 +4194,9 @@ object ExtensionQueries {
       val emb       = t(s, d, "embeddings")
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(emb, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_index").toString
+      val dir = Harness.tempDir("graft_ann_index").toString
       IvfIndex.saveAdcIndex(emb, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4246,11 +4215,10 @@ object ExtensionQueries {
       val inc       = emb.filter(col("vec_id") % 2 === 1)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_stream").toString
+      val dir = Harness.tempDir("graft_ann_stream").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       EventStream.indexIngestOneShot(s, inc, dir, "vec_id", "embedding", m = PqM, "graft_q262")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4281,11 +4249,10 @@ object ExtensionQueries {
       val emb       = t(s, d, "embeddings")
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(emb, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_res_index").toString
+      val dir = Harness.tempDir("graft_ann_res_index").toString
       IvfIndex.saveAdcIndex(emb, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4303,12 +4270,11 @@ object ExtensionQueries {
       val inc       = emb.filter(col("vec_id") % 2 === 1)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_res_append").toString
+      val dir = Harness.tempDir("graft_ann_res_append").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
       IvfIndex.appendToAdcIndex(s, dir, inc, "vec_id", "embedding", m = PqM)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4338,11 +4304,10 @@ object ExtensionQueries {
       val inc       = emb.filter(col("vec_id") % 2 === 1)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_append").toString
+      val dir = Harness.tempDir("graft_ann_append").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.appendToAdcIndex(s, dir, inc, "vec_id", "embedding", m = PqM)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4362,7 +4327,7 @@ object ExtensionQueries {
       val inc2      = emb.filter(col("vec_id") % 4 === 3)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_compact").toString
+      val dir = Harness.tempDir("graft_ann_compact").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.appendToAdcIndex(s, dir, inc1, "vec_id", "embedding", m = PqM)
@@ -4374,7 +4339,6 @@ object ExtensionQueries {
       val worst = census.agg(max(col("files_before")), max(col("files_after"))).head()
       require(worst.getLong(0) > 1L, s"q265: expected multi-file cells after two appends, got ${worst.getLong(0)}")
       require(worst.getLong(1) == 1L, s"q265: compaction left ${worst.getLong(1)} files in a cell")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4481,7 +4445,7 @@ object ExtensionQueries {
         IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = TrainedIters,
           sampleFraction = TrainedSampleMicro / 1e6)
       )
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_trained").toString
+      val dir = Harness.tempDir("graft_ann_trained").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.appendToAdcIndex(s, dir, inc1, "vec_id", "embedding", m = PqM, batchId = Some(0L))
@@ -4489,7 +4453,6 @@ object ExtensionQueries {
       // the checkpoint committed past both batches: watermark above them
       // fences the replays and lets compaction bin the landings
       IvfIndex.compactAdcIndexCodes(s, dir, targetBytes = 128L << 20, minRetainedBatchId = Some(2L))
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4514,7 +4477,7 @@ object ExtensionQueries {
         IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = TrainedIters,
           sampleFraction = TrainedSampleMicro / 1e6)
       )
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_wm").toString
+      val dir = Harness.tempDir("graft_ann_wm").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.appendToAdcIndex(s, dir, inc1, "vec_id", "embedding", m = PqM, batchId = Some(0L))
@@ -4542,7 +4505,6 @@ object ExtensionQueries {
       IvfIndex.appendToAdcIndex(s, dir, inc2, "vec_id", "embedding", m = PqM, batchId = Some(1L))
       require(s.read.parquet(s"$dir/codes").count() == rowsBeforeReplay,
         "q273: a replay after watermarked compaction must not double its rows")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4566,7 +4528,7 @@ object ExtensionQueries {
       val inc2      = emb.filter(col("vec_id") % 4 === 3)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_manifest").toString
+      val dir = Harness.tempDir("graft_ann_manifest").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.writeAdcManifest(s, dir) // gen 0: the base snapshot
@@ -4582,7 +4544,6 @@ object ExtensionQueries {
       // files are de-referenced and must actually die (loud fixture gate)
       require(IvfIndex.cleanupAdcGenerations(s, dir, keepGens = 1) > 0L,
         "q275: the compaction must have de-referenced the pre-bin files")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromSnapshot(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4598,7 +4559,7 @@ object ExtensionQueries {
       val base = emb.filter(col("vec_id") % 2 === 0)
       val inc1 = emb.filter(col("vec_id") % 4 === 1)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_diff").toString
+      val dir = Harness.tempDir("graft_ann_diff").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.writeAdcManifest(s, dir) // gen 0
@@ -4611,10 +4572,8 @@ object ExtensionQueries {
       // files) and commit nothing — the invisibility claim holds either
       // way and the gate must not turn that data-dependent no-op into a
       // missing-generation crash.
-      val fsQ = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sessionState.newHadoopConf())
-      require(IvfIndex.adcChainDiff(s, dir, 1L, IvfIndex.listAdcGens(fsQ, dir).max).isEmpty,
+      require(IvfIndex.adcChainDiff(s, dir, 1L, IvfIndex.manifest(s, dir).gens.max).isEmpty,
         "q286: manifest maintenance must be id-invisible to the chain diff")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcChainDiff(s, dir, 0L, 1L)
         .filter(col("op") === "added")
@@ -4634,12 +4593,11 @@ object ExtensionQueries {
       val inc       = emb.filter(col("vec_id") % 2 === 1)
       val queriesDf = emb.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_mstream").toString
+      val dir = Harness.tempDir("graft_ann_mstream").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.writeAdcManifest(s, dir) // gen 0: the base snapshot
       EventStream.indexIngestOneShotManifest(s, inc, dir, "vec_id", "embedding", m = PqM, "graft_q276")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromSnapshot(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4664,7 +4622,7 @@ object ExtensionQueries {
       val merged    = base.unionAll(inc)
       val queriesDf = merged.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_maint").toString
+      val dir = Harness.tempDir("graft_ann_maint").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
@@ -4672,14 +4630,14 @@ object ExtensionQueries {
       val cells = IvfIndex.appendToAdcIndex(s, dir, inc, "vec_id", "embedding", m = PqM,
         batchId = Some(0L))
       IvfIndex.commitAdcBatchToManifest(s, dir, 0L, Some(cells)) // gen 1
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sessionState.newHadoopConf())
+      val chain = IvfIndex.manifest(s, dir)
       // an IDLE tick (census below the bound, nothing flagged) pulls no
       // levers and must not grow the chain
       val idle = IvfIndex.maintainAdcIndexManifest(s, dir, merged, "vec_id", "embedding", m = PqM,
         minRetainedBatchId = Some(1L), maxFilesPerCell = 1000)
       require(!idle.compacted && idle.repairedCells.isEmpty && idle.maxCellFilesBefore >= 1L,
         "q289: a below-bound tick must pull no levers")
-      require(IvfIndex.listAdcGens(fs, dir).max == 1L, "q289: an idle tick must not grow the chain")
+      require(chain.gens.max == 1L, "q289: an idle tick must not grow the chain")
       val flagged = IvfIndex
         .oodDriftGate(base, inc, "vec_id", "embedding", centroids, DriftThresholdQ, DriftGateMilli)
         .filter(col("reencode"))
@@ -4699,12 +4657,11 @@ object ExtensionQueries {
         minRetainedBatchId = Some(1L), maxFilesPerCell = 2, flaggedCells = flagged)
       require(tick.compacted, "q289: the over-bound census must trigger a committed compaction")
       require(tick.repairedCells == flagged, s"q289: the repair census must cover the flagged cells: ${tick.repairedCells}")
-      require(IvfIndex.listAdcGens(fs, dir).min <= 1L,
+      require(chain.gens.min <= 1L,
         "q289: the committing tick must spare the pre-tick head for in-flight readers")
       val next = IvfIndex.maintainAdcIndexManifest(s, dir, merged, "vec_id", "embedding", m = PqM,
         minRetainedBatchId = Some(1L), maxFilesPerCell = 1000)
       require(next.sweptFiles > 0L, "q289: the NEXT tick retires the superseded world after the grace")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromSnapshot(s, dir, merged, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4726,7 +4683,7 @@ object ExtensionQueries {
       val merged    = base.unionAll(inc)
       val queriesDf = merged.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_mrepair").toString
+      val dir = Harness.tempDir("graft_ann_mrepair").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
@@ -4747,7 +4704,6 @@ object ExtensionQueries {
       // the checkpoint committed past batch 0: the repair's replay fence opens
       IvfIndex.repairDriftedIndexCellsManifest(s, dir, merged, "vec_id", "embedding", m = PqM,
         flaggedCells = flagged, minRetainedBatchId = Some(1L)) // gen 2
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromSnapshot(s, dir, merged, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4770,7 +4726,7 @@ object ExtensionQueries {
         IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = TrainedIters,
           sampleFraction = TrainedSampleMicro / 1e6)
       )
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_mtrained").toString
+      val dir = Harness.tempDir("graft_ann_mtrained").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir)
       IvfIndex.writeAdcManifest(s, dir) // gen 0: the base snapshot
@@ -4785,7 +4741,6 @@ object ExtensionQueries {
         minRetainedBatchId = Some(2L)) // gen 3
       require(IvfIndex.cleanupAdcGenerations(s, dir, keepGens = 1) > 0L,
         "q278: the compaction must have de-referenced the pre-bin files")
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromSnapshot(s, dir, emb, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -4959,8 +4914,7 @@ object ExtensionQueries {
       // the nightly loop body: a batch streams in and commits its generation(s)
       EventStream.dedupIndexIngestOneShotManifest(s, docs.filter(b >= 5 && b < 8), path,
         "doc_id", "text", "graft_q287")
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(s.sessionState.newHadoopConf())
-      val head = Dedup.listDedupGens(fs, path).max
+      val head = Dedup.manifest(s, path).gens.max
       require(head > 0L, "q287: the streaming ingest must have advanced the chain")
       // staleness reached the bound -> the refresh republishes at the head...
       require(Dedup.refreshDedupServe(s, path, "graft_q287", buckets = 8).contains(head),
@@ -5017,13 +4971,13 @@ object ExtensionQueries {
       Dedup.writeDedupManifest(s, path) // gen 0
       EventStream.dedupIndexIngestOneShotManifest(s, docs.filter(b >= 5 && b < 8), path,
         "doc_id", "text", "graft_q290")
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(s.sessionState.newHadoopConf())
-      val headAfterIngest = Dedup.listDedupGens(fs, path).max
+      val chain = Dedup.manifest(s, path)
+      val headAfterIngest = chain.gens.max
       require(headAfterIngest > 0L, "q290: the streaming ingest must have advanced the chain")
       // an IDLE tick (census below the bound) pulls no lever, chain unchanged
       val idle = Dedup.maintainDedupIndexManifest(s, path, maxFiles = 1000,
         minRetainedBatchId = Some(1000000L))
-      require(!idle.compacted && Dedup.listDedupGens(fs, path).max == headAfterIngest,
+      require(!idle.compacted && chain.gens.max == headAfterIngest,
         "q290: a below-bound tick must not grow the chain")
       // the COMMITTING tick: over-bound census -> compact to one bin,
       // sparing the pre-tick head (in-flight snapshot readers' grace)
@@ -5031,7 +4985,7 @@ object ExtensionQueries {
         minRetainedBatchId = Some(1000000L))
       require(tick.compacted && tick.filesAfter <= tick.filesBefore,
         s"q290: the over-bound tick must commit a compaction: $tick")
-      require(Dedup.listDedupGens(fs, path).min <= headAfterIngest,
+      require(chain.gens.min <= headAfterIngest,
         "q290: the committing tick must spare the pre-tick head")
       // the NEXT tick retires the superseded world after the grace
       val next = Dedup.maintainDedupIndexManifest(s, path, maxFiles = 1000, keepGens = 1,
@@ -5039,7 +4993,7 @@ object ExtensionQueries {
       require(next.sweptFiles > 0L, "q290: the next tick retires the superseded pre-bin files")
       // the serving layout catches up behind the staleness bound...
       require(Dedup.refreshDedupServe(s, path, "graft_q290", buckets = 8)
-        .contains(Dedup.listDedupGens(fs, path).max),
+        .contains(chain.gens.max),
         "q290: the refresh must republish at the maintained chain head")
       // ...and the batch dedups against the fresh co-located layout
       Dedup
@@ -5090,7 +5044,7 @@ object ExtensionQueries {
       val merged    = base.unionAll(inc)
       val queriesDf = merged.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_repair2").toString
+      val dir = Harness.tempDir("graft_ann_repair2").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
@@ -5110,7 +5064,6 @@ object ExtensionQueries {
         flaggedCells = night1)
       IvfIndex.repairDriftedIndexCells(s, dir, merged, "vec_id", "embedding", m = PqM,
         flaggedCells = night2)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, merged, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -5134,7 +5087,7 @@ object ExtensionQueries {
       val merged    = base.unionAll(inc)
       val queriesDf = merged.filter(col("vec_id") % 100 === 0)
       val centroids = IvfIndex.train(base, "vec_id", "embedding", nlist = 16, iters = 0)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_repair").toString
+      val dir = Harness.tempDir("graft_ann_repair").toString
       IvfIndex.saveAdcIndex(base, "vec_id", "embedding", centroids,
         m = PqM, subDim = EmbDim / PqM, pqNlist = PqNlist, pqIters = PqIters, dir = dir,
         variant = "residual")
@@ -5154,7 +5107,6 @@ object ExtensionQueries {
       require(flagged.size < 16, s"q271: the gate flagged every cell: $flagged")
       IvfIndex.repairDriftedIndexCells(s, dir, merged, "vec_id", "embedding", m = PqM,
         flaggedCells = flagged)
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(dir))
       IvfIndex
         .adcTopKFromIndex(s, dir, merged, queriesDf, "vec_id", "embedding",
           m = PqM, nprobe = AnnNprobe, candK = AdcCandK, k = AnnK)
@@ -5338,10 +5290,7 @@ object ExtensionQueries {
       // one logical corpus: doc_id-aligned text + vector per row
       val joined = docs.join(emb, col("doc_id") === col("vec_id"))
       val dedupPath = tempIndexDir("graft_xart_dedup")
-      val annDir = java.nio.file.Files.createTempDirectory("graft_xart_ann").toString
-      // register for cleanup BEFORE any gate can refuse - a refusal must
-      // not leak the corpus-bearing temp dir past JVM exit
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
+      val annDir = Harness.tempDir("graft_xart_ann").toString
       // bootstrap BOTH artifacts of record from the same base slice
       Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter(b < 5), "doc_id", "text"), dedupPath)
       Dedup.writeDedupManifest(s, dedupPath) // dedup gen 0
@@ -5381,8 +5330,7 @@ object ExtensionQueries {
       val b = Hashing.hash64(concat(lit("upd:"), col("text"))) % 10
       val joined = docs.join(emb, col("doc_id") === col("vec_id"))
       val dedupPath = tempIndexDir("graft_dual_dedup")
-      val annDir = java.nio.file.Files.createTempDirectory("graft_dual_ann").toString
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
+      val annDir = Harness.tempDir("graft_dual_ann").toString
       Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter(b < 5), "doc_id", "text"), dedupPath)
       Dedup.writeDedupManifest(s, dedupPath) // dedup gen 0
       val annBase = joined.filter(b < 5).select(col("vec_id"), col("embedding"))
@@ -5421,8 +5369,7 @@ object ExtensionQueries {
       val b = Hashing.hash64(concat(lit("upd:"), col("text"))) % 10
       val joined = docs.join(emb, col("doc_id") === col("vec_id"))
       val dedupPath = tempIndexDir("graft_nightly_dedup")
-      val annDir = java.nio.file.Files.createTempDirectory("graft_nightly_ann").toString
-      graft.streaming.EventStream.registerDeleteOnExit(new java.io.File(annDir))
+      val annDir = Harness.tempDir("graft_nightly_ann").toString
       Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs.filter(b < 5), "doc_id", "text"), dedupPath)
       Dedup.writeDedupManifest(s, dedupPath) // dedup gen 0
       val annBase = joined.filter(b < 5).select(col("vec_id"), col("embedding"))
@@ -5441,18 +5388,17 @@ object ExtensionQueries {
       val dTick = Dedup.maintainDedupIndexManifest(s, dedupPath, maxFiles = 2, targetFiles = 1,
         minRetainedBatchId = Some(fence), coverageGuard = Some(annDir))
       require(dTick.compacted, s"q293: the dedup tick must commit a compaction: $dTick")
-      require(Dedup.dedupFoldWatermark(s, dedupPath).contains(bids.max),
+      require(Dedup.manifest(s, dedupPath).foldWatermark.contains(bids.max),
         "q293: the dedup fold must persist its watermark at the folded batches' max")
       val aTick = IvfIndex.maintainAdcIndexManifest(s, annDir,
         joined.select(col("vec_id"), col("embedding")), "vec_id", "embedding", m = PqM,
         minRetainedBatchId = Some(fence), maxFilesPerCell = 2, coverageGuard = Some(dedupPath))
       require(aTick.compacted, s"q293: the ANN tick must commit a compaction: $aTick")
-      require(IvfIndex.adcFoldWatermark(s, annDir).contains(bids.max),
+      require(IvfIndex.manifest(s, annDir).foldWatermark.contains(bids.max),
         "q293: the ANN fold must persist its watermark at the folded batches' max")
       // (3) the serve refresh republishes at the maintained chain head
-      val fs = new org.apache.hadoop.fs.Path(dedupPath).getFileSystem(s.sessionState.newHadoopConf())
       require(Dedup.refreshDedupServe(s, dedupPath, "graft_q293", buckets = 8)
-        .contains(Dedup.listDedupGens(fs, dedupPath).max),
+        .contains(Dedup.manifest(s, dedupPath).gens.max),
         "q293: the refresh must republish at the maintained chain head")
       // (4) the census stays clean ACROSS both folds: the batch names are
       // gone from both heads' refs, but both fold watermarks cover them

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
-/** The session and the hash action the mains ([[Bench]], [[ScaleBench]],
-  * [[Verify]], [[Smoke]], [[PlanDump]], [[JobProbe]]) share.
+/** The session, the temp directories and the hash action the mains
+  * ([[Bench]], [[ScaleBench]], [[Verify]], [[Smoke]], [[PlanDump]],
+  * [[JobProbe]]) and the test suites share.
   */
 object Harness {
 
@@ -25,6 +26,23 @@ object Harness {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** A fresh directory under `base` (default: `java.io.tmpdir`), deleted
+    * recursively, with whatever was written into it later, when the JVM
+    * exits. One shutdown hook drains a queue, so a gate loop calling this
+    * per iteration registers no thread per call.
+    */
+  def tempDir(prefix: String, base: Option[java.nio.file.Path] = None): java.nio.file.Path = {
+    tempDirCleanup
+    val dir = base.fold(java.nio.file.Files.createTempDirectory(prefix))(
+      java.nio.file.Files.createTempDirectory(_, prefix))
+    tempDirs.add(dir.toFile)
+    dir
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private lazy val tempDirCleanup: Unit =
+    sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))): Unit
 
   /** Run `df` to completion by reducing every row to a hash and XOR-folding.
     * A bare count() lets Catalyst prune the projections, so expensive output

@@ -56,7 +56,7 @@ object ScaleBench {
       .get("SPARK_GRAFT_SCALE_FAMILIES")
       .map(_.split(',').map(_.trim).toSet)
       .getOrElse(Set("ops", "media", "cc", "stream", "rocksdb", "ann", "dedupidx"))
-    val tmp     = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    val tmp     = Harness.tempDir("graft_scale").toString
 
     // OPT-IN per-stage profile (SPARK_GRAFT_SCALE_PROFILE=1): one JSON
     // line per completed stage — stage id, task count, summed run/cpu

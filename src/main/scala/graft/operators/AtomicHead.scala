@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The single-object head commit every chain in the engine shares — the ANN
-  * manifest generations ([[IvfIndex.commitAdcGen]]), the dedup manifest
-  * generations ([[Dedup.commitDedupGen]]), and the dedup serve-head pointer
-  * ([[Dedup.commitServeHead]]) all publish by making ONE small object
-  * visible, under the same two concurrent-committer fences. Three
+/** The single-object head commit every chain in the engine shares — the
+  * manifest generations of both persisted indexes ([[Manifest.Chain.commit]])
+  * and the dedup serve-head pointer ([[Dedup.commitServeHead]]) publish by
+  * making ONE small object visible, under the same two
+  * concurrent-committer fences. Three
   * hand-rolled copies of that skeleton existed; a staged-object leak on
   * exactly one copy's refusal paths was a real prior finding — the bug
   * class the duplication breeds — so the ORDER of operations and the
@@ -40,7 +40,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * removed on success too — the payload object was renamed away); only a
   * driver crash can leave scratch behind, and each chain's vacuum ages
   * that out by the wall-clock stamp its scratch NAME embeds
-  * ([[IvfIndex.scratchName]]).
+  * ([[Manifest.scratchName]]).
   */
 private[graft] object AtomicHead {
 

@@ -20,13 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * WINDOWED BY DESIGN, WITH THE WINDOW'S EDGE PERSISTED: coverage is
   * read from the batch ids the head generations' file refs still carry
-  * (the `batch<id>-…` landing names, [[IvfIndex.batchIdOfLanding]]). A
+  * (the `batch<id>-…` landing names, [[Manifest.batchIdOfLanding]]). A
   * manifest COMPACTION folds landings at or below its watermark into
   * `m<gen>bin-…` / bin files, making their batch ids unobservable from
   * refs — and it records EVERY batch id it ever folded as `fold` refs in
   * the generation it commits (the chain's FOLDED-ID SET,
-  * [[Dedup.dedupFoldedBatches]] / [[IvfIndex.adcFoldedBatches]]; one
-  * metadata row per id). The census and the gates treat a batch IN a
+  * [[Manifest.Chain.foldedBatches]]; one metadata row per id). The census and the gates treat a batch IN a
   * chain's folded-id set as covered THERE — exact membership, never
   * `<= max(folded)`: the max form masked any batch never landed in the
   * chain that sat in a gap below a later folded id, flipping a real
@@ -56,8 +55,8 @@ object Consistency {
     * head still references at or above `sinceBatchId`, with
     * `status ∈ both | dedup_only | ann_only`. `in_dedup` / `in_ann`
     * report name-OBSERVABILITY (the head's refs); `status` reports
-    * COVERAGE — observable, or at/below that chain's persisted fold
-    * watermark (folded into bins by a compactor; see the object doc) —
+    * COVERAGE — observable, or in that chain's persisted folded-id set
+    * (folded into bins by a compactor; see the object doc) —
     * so a batch one chain has compacted while the other still holds its
     * landing reads `both`, not a divergence. Empty means the window is
     * covered identically (including the trivially-consistent case where
@@ -72,65 +71,39 @@ object Consistency {
       sinceBatchId: Long = 0L,
   ): DataFrame = {
     import spark.implicits._
-    val dedupB = dedupCoveredBatches(spark, dedupIndexPath, sinceBatchId)
-    val annB = annCoveredBatches(spark, annIndexDir, sinceBatchId)
-    // MEMBERSHIP in the persisted folded-id set, never `<= max`: a max
-    // treated as dense-range coverage flipped any one-sided batch sitting
-    // in a gap below a later folded id to 'both' — the divergence the
-    // census exists to report (r20 VERDICT #1, closed this round).
-    val dedupFold = Dedup.dedupFoldedBatches(spark, dedupIndexPath)
-    val annFold = IvfIndex.adcFoldedBatches(spark, annIndexDir)
-    def dedupCovers(b: Long) = dedupB(b) || dedupFold(b)
-    def annCovers(b: Long) = annB(b) || annFold(b)
-    (dedupB ++ annB).toSeq.sorted
+    val op = "crossArtifactCoverage"
+    val dedup = coverage(op, Dedup.manifest(spark, dedupIndexPath), sinceBatchId)
+    val ann = coverage(op, IvfIndex.manifest(spark, annIndexDir), sinceBatchId)
+    (dedup.observed ++ ann.observed).toSeq.sorted
       .map { b =>
         val status =
-          if (dedupCovers(b) && annCovers(b)) "both"
-          else if (dedupCovers(b)) "dedup_only"
+          if (dedup.covers(b) && ann.covers(b)) "both"
+          else if (dedup.covers(b)) "dedup_only"
           else "ann_only"
-        (b, dedupB(b), annB(b), status)
+        (b, dedup.observed(b), ann.observed(b), status)
       }
       .toDF("batch_id", "in_dedup", "in_ann", "status")
   }
 
-  /** The batch ids the dedup chain HEAD still references in the window. */
-  private[graft] def dedupCoveredBatches(
-      spark: SparkSession,
-      dedupIndexPath: String,
-      sinceBatchId: Long,
-  ): Set[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(dedupIndexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = Dedup.listDedupGens(fs, dedupIndexPath)
-    require(
-      gens.nonEmpty,
-      s"crossArtifactCoverage: no dedup manifest at $dedupIndexPath - bootstrap with writeDedupManifest")
-    Dedup
-      .readDedupManifestRefs(spark, dedupIndexPath, gens.max)
-      .collect { case ("sig", name, _) => name }
-      .flatMap(IvfIndex.batchIdOfLanding)
-      .filter(_ >= sinceBatchId)
-      .toSet
+  /** One chain head's coverage: the batch ids its data refs still name in
+    * the window (`observed`), and its whole folded-id set (`folded`).
+    * A batch is covered by MEMBERSHIP in either, never by `<= max(folded)`:
+    * a max treated as dense-range coverage flipped any one-sided batch
+    * sitting in a gap below a later folded id to covered — under that
+    * form a chain folding around a batch it never landed let the OTHER
+    * chain's gate fold it too, and the divergence became permanently
+    * unobservable with every gate reporting clean (r20 VERDICT #1).
+    */
+  private final case class Coverage(observed: Set[Long], folded: Set[Long]) {
+    def covers(b: Long): Boolean = observed(b) || folded(b)
   }
 
-  /** The batch ids the ANN chain HEAD still references in the window. */
-  private[graft] def annCoveredBatches(
-      spark: SparkSession,
-      annIndexDir: String,
-      sinceBatchId: Long,
-  ): Set[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(annIndexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = IvfIndex.listAdcGens(fs, annIndexDir)
-    require(
-      gens.nonEmpty,
-      s"crossArtifactCoverage: no ANN manifest at $annIndexDir - bootstrap with writeAdcManifest")
-    IvfIndex
-      .readAdcManifestRefs(spark, annIndexDir, gens.max)
-      .collect { case IvfIndex.AdcRef("codes", _, name, _) => name }
-      .flatMap(IvfIndex.batchIdOfLanding)
-      .filter(_ >= sinceBatchId)
-      .toSet
+  private def coverage(op: String, chain: Manifest.Chain, sinceBatchId: Long): Coverage = {
+    val refs = chain.refs(chain.head(op))
+    Coverage(
+      chain.data(refs).flatMap(r => Manifest.batchIdOfLanding(r.name)).filter(_ >= sinceBatchId).toSet,
+      Manifest.folds(refs),
+    )
   }
 
   /** The loud gate: every batch in `batchIds` must be covered by BOTH
@@ -141,7 +114,10 @@ object Consistency {
     * re-commit ([[Dedup.commitDedupBatchToManifest]] /
     * [[IvfIndex.commitAdcBatchToManifest]]) — a replay of an
     * already-covered side sweeps its own prior landing and heals its
-    * refs, so remediation is safe to run on both sides blindly.
+    * refs, so remediation is safe to run on both sides blindly. Fold-aware
+    * like the census: without that, a maintenance compaction racing the
+    * verifying tick would make a CLEAN dual ingest refuse as a
+    * manufactured divergence.
     */
   def requireCoverage(
       spark: SparkSession,
@@ -151,17 +127,10 @@ object Consistency {
   ): Unit = {
     if (batchIds.isEmpty) return
     val since = batchIds.min
-    val dedupB = dedupCoveredBatches(spark, dedupIndexPath, since)
-    val annB = annCoveredBatches(spark, annIndexDir, since)
-    // Fold-aware like the census: a batch a chain's compactor already
-    // folded (a MEMBER of its persisted folded-id set — never `<= max`,
-    // the r20 VERDICT #1 gap) is covered there — without this, a
-    // maintenance compaction racing the verifying tick would make a CLEAN
-    // dual ingest refuse as a manufactured divergence.
-    val dedupFold = Dedup.dedupFoldedBatches(spark, dedupIndexPath)
-    val annFold = IvfIndex.adcFoldedBatches(spark, annIndexDir)
-    val missingDedup = batchIds.filterNot(b => dedupB(b) || dedupFold(b)).sorted
-    val missingAnn = batchIds.filterNot(b => annB(b) || annFold(b)).sorted
+    val dedup = coverage("requireCoverage", Dedup.manifest(spark, dedupIndexPath), since)
+    val ann = coverage("requireCoverage", IvfIndex.manifest(spark, annIndexDir), since)
+    val missingDedup = batchIds.filterNot(dedup.covers).sorted
+    val missingAnn = batchIds.filterNot(ann.covers).sorted
     require(
       missingDedup.isEmpty && missingAnn.isEmpty,
       s"cross-artifact divergence: batch(es) ${missingDedup.mkString(",")} missing from the dedup chain " +
@@ -179,46 +148,30 @@ object Consistency {
     * FOREVER; if the other artifact never committed one of those
     * batches, the divergence folds where no census can ever see it
     * again. So before folding, every batch id about to lose its name
-    * must already be covered by the OTHER artifact — observable at its
-    * head, or at/below its own fold watermark (folded there under this
-    * same gate, or durable by that chain's replay invariants). Called by
+    * must already be covered by the `other` chain — observable at its
+    * head, or in its folded-id set (folded there under this same gate,
+    * or durable by that chain's replay invariants). Called by
     * [[Dedup.compactDedupIndexManifest]] /
     * [[IvfIndex.compactAdcIndexCodesManifest]] when their `coverageGuard`
     * names the other artifact (opt-in: a single-artifact deployment has
     * no "other chain"); the refusal names the divergent batch and the
     * idempotent re-land remediation, and fires BEFORE any rewrite — the
-    * folding chain is untouched.
-    *
-    * `otherIsDedup` selects which chain `otherPath` is; `folding`
-    * describes the refusing compactor for the message.
+    * folding chain is untouched. `folding` names the refusing compactor
+    * for the message.
     */
   private[graft] def requireFoldCovered(
-      spark: SparkSession,
       folding: String,
       foldingBatchIds: Seq[Long],
-      otherIsDedup: Boolean,
-      otherPath: String,
+      other: Manifest.Chain,
   ): Unit = {
     if (foldingBatchIds.isEmpty) return
-    val since = foldingBatchIds.min
-    val covered =
-      if (otherIsDedup) dedupCoveredBatches(spark, otherPath, since)
-      else annCoveredBatches(spark, otherPath, since)
-    // MEMBERSHIP in the other chain's folded-id set, never `<= max` (the
-    // r20 VERDICT #1 gap): under the max form, a chain folding around a
-    // batch it never landed would let the OTHER chain's gate fold that
-    // batch too — the divergence became permanently unobservable with
-    // every gate reporting clean.
-    val fold =
-      if (otherIsDedup) Dedup.dedupFoldedBatches(spark, otherPath)
-      else IvfIndex.adcFoldedBatches(spark, otherPath)
-    val missing = foldingBatchIds.distinct.filterNot(b => covered(b) || fold(b)).sorted
-    val otherName = if (otherIsDedup) "dedup chain" else "ANN chain"
+    val cov = coverage(folding, other, foldingBatchIds.min)
+    val missing = foldingBatchIds.distinct.filterNot(cov.covers).sorted
     require(
       missing.isEmpty,
-      s"$folding: refusing to fold batch(es) ${missing.mkString(",")} into bins - the $otherName " +
-        s"($otherPath) does not cover them (not at its head, not in its folded-id set " +
-        s"${if (fold.isEmpty) "<none>" else fold.toSeq.sorted.mkString("{", ",", "}")}). " +
+      s"$folding: refusing to fold batch(es) ${missing.mkString(",")} into bins - the " +
+        s"${other.layout.name} chain (${other.root}) does not cover them (not at its head, not in its " +
+        s"folded-id set ${if (cov.folded.isEmpty) "<none>" else cov.folded.toSeq.sorted.mkString("{", ",", "}")}). " +
         "Folding would make the cross-artifact divergence " +
         "permanently unobservable to every census. Remediation: re-land the batch into the missing " +
         "artifact under the SAME batch id and re-commit its generation (the batch-keyed landing " +

@@ -1233,10 +1233,8 @@ object Dedup {
         // Structural composition rule (the ANN index's, mirrored): a
         // MANIFEST index accepts only batch-keyed landings — a plain
         // append carries no replay key for a commit to reference or heal.
-        val fsp = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(index.sparkSession.sparkContext.hadoopConfiguration)
         require(
-          listDedupGens(fsp, path).isEmpty,
+          manifest(index.sparkSession, path).gens.isEmpty,
           s"appendDedupIndex: $path is MANIFEST-committed - a manifest commit needs the landing's " +
             "replay key, which only a batch-keyed landing carries. Pass batchId = Some(<the ingest " +
             "batch id>) and commit via commitDedupBatchToManifest.",
@@ -1263,7 +1261,7 @@ object Dedup {
         // inside the reach of [[cleanupDedupGenerations]]' vacuum instead
         // of leaking as an unowned sibling forever (the ANN landing's
         // codes_append_tmp_b<id> rule).
-        val scratch = new org.apache.hadoop.fs.Path(s"$path/${IvfIndex.scratchName("_append_tmp", s"b$b")}")
+        val scratch = new org.apache.hadoop.fs.Path(s"$path/${Manifest.scratchName("_append_tmp", s"b$b")}")
         index.write.mode("overwrite").parquet(scratch.toString)
         if (fs.exists(live))
           fs.listStatus(live)
@@ -1292,8 +1290,7 @@ object Dedup {
     // manifest compaction and its cleanup — a whole-dir read would count
     // those signatures twice. Same refusal rule as the ANN index's
     // adcTopKFromIndex: resolve manifest indexes via loadDedupIndexSnapshot.
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDedupManifest(fs, path, "loadDedupIndex")
+    manifest(spark, path).requireAbsent("loadDedupIndex")
     val df = spark.read.parquet(path)
     requireIndexColumns(s"loadDedupIndex: $path", df.columns.toSeq, k)
     df.select(indexColumns(k).map(col): _*)
@@ -1321,11 +1318,9 @@ object Dedup {
     * the original is restored, so no failure mode leaves the path empty.
     * (Directory rename is atomic on HDFS and POSIX; on object stores it is
     * copy-based — run compaction from a single writer there, which a
-    * standing pipeline's end-of-batch step already is, or port the
-    * manifest-commit mode the ANN index implements for exactly this:
-    * [[graft.operators.IvfIndex.compactAdcIndexCodesManifest]] is the
-    * reference shape — add-only writers, one generation object per
-    * commit, reference-set cleanup.)
+    * standing pipeline's end-of-batch step already is, or use the
+    * manifest-commit mode, [[compactDedupIndexManifest]] — add-only
+    * writers, one generation object per commit, reference-set cleanup.)
     */
   def compactDedupIndex(
       spark: SparkSession,
@@ -1336,7 +1331,7 @@ object Dedup {
   ): Unit = {
     require(targetFiles >= 1, s"compactDedupIndex: targetFiles must be >= 1: $targetFiles")
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDedupManifest(fs, path, "compactDedupIndex")
+    manifest(spark, path).requireAbsent("compactDedupIndex")
     def hp(s: String) = new org.apache.hadoop.fs.Path(s)
     val names = fs
       .listStatus(hp(path))
@@ -1353,9 +1348,9 @@ object Dedup {
     // compactable. Rewriting any batch landing with NO watermark is a
     // loud refusal, not a Scaladoc caveat.
     val (retained, eligible) = names.partition(n =>
-      IvfIndex.batchIdOfLanding(n).exists(id => minRetainedBatchId.exists(id >= _)))
+      Manifest.batchIdOfLanding(n).exists(id => minRetainedBatchId.exists(id >= _)))
     if (minRetainedBatchId.isEmpty) {
-      val unfenced = eligible.flatMap(IvfIndex.batchIdOfLanding).distinct.sorted
+      val unfenced = eligible.flatMap(Manifest.batchIdOfLanding).distinct.sorted
       require(
         unfenced.isEmpty,
         s"compactDedupIndex: about to rewrite batch landings that may still replay (batchId): " +
@@ -1404,186 +1399,17 @@ object Dedup {
 
   // ----------------------------------------------------------------------
   // MANIFEST-COMMIT mode for the dedup index — the object-store
-  // alternative to [[compactDedupIndex]]'s rename-aside swap, the same
-  // protocol the ANN index proved (see the IvfIndex manifest section for
-  // the full rationale): a generation object under `_manifest/` (an
-  // underscore name, so plain parquet readers ignore it) names the exact
-  // file set; writers only ADD files under fresh names and commit by
-  // making one small generation object visible — a single-object PUT,
-  // atomic on every major store. De-referenced files are swept later by
-  // [[cleanupDedupGenerations]] under a snapshot-reader grace. Concurrent
-  // writers are DETECTED, not assumed away: each commit carries the
-  // expected-parent fence and the committer-token read-back (the two
-  // fences [[graft.operators.IvfIndex]]'s `commitAdcGen` documents — the
-  // lost-update interleaving refuses before the chain is touched, and a
-  // same-generation PUT-overwrite loser discovers the winner's token).
-  // The two commit modes refuse each other's layout loudly: a rename-mode
-  // whole-dir read over a manifest index would double-count de-referenced
-  // signatures, and the manifest ops refuse its absence (except the
-  // bootstrap).
+  // alternative to [[compactDedupIndex]]'s rename-aside swap: the
+  // generation chain of [[Manifest]] over this index's flat layout, under
+  // `_manifest/` (an underscore name, so plain parquet readers ignore it).
   // ----------------------------------------------------------------------
 
-  private def dedupManifestDir(path: String) = s"$path/_manifest"
+  private[graft] val ManifestLayout =
+    Manifest.Layout("dedup", "_manifest", "sig", cellsUnder = None, bootstrap = "writeDedupManifest")
 
-  private val DedupGenName = raw"gen-(\d+)\.parquet".r
-
-  private[graft] def listDedupGens(fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dedupManifestDir(path))
-    if (!fs.exists(p)) Nil
-    else
-      fs.listStatus(p)
-        .toSeq
-        .flatMap(_.getPath.getName match {
-          case DedupGenName(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted
-  }
-
-  private def requireNoDedupManifest(fs: org.apache.hadoop.fs.FileSystem, path: String, op: String): Unit =
-    require(
-      listDedupGens(fs, path).isEmpty,
-      s"$op: $path is MANIFEST-committed (_manifest/ has generations). The rename-mode ops read the " +
-        "whole live dir and would double-count de-referenced files - use the manifest ops " +
-        "(compactDedupIndexManifest, loadDedupIndexSnapshot, cleanupDedupGenerations) instead.",
-    )
-
-  // One manifest generation's (kind, name, bytes) rows, collected —
-  // metadata-scale (one row per FILE), and the explicit-files read needs
-  // the list on the driver anyway. kind: "sig" (a signature file) or
-  // "committer" (the commit token). Read DIRECTLY (MetaIO), not through a
-  // Spark action — see [[IvfIndex.readAdcManifestRefs]]: the composed
-  // lifecycle ops re-read the head refs on every hop, and each
-  // spark.read+collect was ~50-150 ms of planning+scheduling to move a
-  // few hundred bytes the driver needs locally anyway.
-  private[graft] def readDedupManifestRefs(
-      spark: SparkSession,
-      path: String,
-      gen: Long,
-  ): Seq[(String, String, Long)] =
-    MetaIO
-      .readGroups(spark.sparkContext.hadoopConfiguration, s"${dedupManifestDir(path)}/gen-$gen.parquet")
-      .map(g => (MetaIO.str(g, "kind"), MetaIO.str(g, "name"), MetaIO.int64(g, "bytes")))
-
-  private def sigRefs(refs: Seq[(String, String, Long)]): Seq[(String, Long)] =
-    refs.collect { case ("sig", name, bytes) => (name, bytes) }
-
-  // The generation object's parquet schema: the Spark writer's column
-  // names, types and UTF8 strings from before the direct MetaIO staging,
-  // so pre- and post-change generations are read-compatible. They are not
-  // byte-identical: every field here is optional, where the Spark writer
-  // marked its non-null fields required.
-  private val DedupManifestSchema =
-    """message spark_schema {
-      |  optional binary kind (UTF8);
-      |  optional binary name (UTF8);
-      |  optional int64 bytes;
-      |}""".stripMargin
-
-  /** The chain's FOLD WATERMARK: the largest batch id a manifest
-    * compaction ever folded into bins — max of [[dedupFoldedBatches]],
-    * kept for messages and specs. COVERAGE never tests against this (a
-    * max treated as dense-range coverage was the r20 VERDICT #1 hole);
-    * the census and gates test membership in the folded-id SET.
-    */
-  private[graft] def dedupFoldWatermark(spark: SparkSession, path: String): Option[Long] =
-    dedupFoldedBatches(spark, path).maxOption
-
-  /** The EXACT set of batch ids this chain's manifest compactions ever
-    * folded — one `kind = "fold"` ref PER ID ([[IvfIndex.adcFoldedBatches]]'
-    * twin; see its scaladoc for why coverage tests MEMBERSHIP here and
-    * never `<= max`: the single-max form masked one-sided batches sitting
-    * in a gap below a later folded id — r20 VERDICT #1).
-    */
-  private[graft] def dedupFoldedBatches(spark: SparkSession, path: String): Set[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"dedupFoldedBatches: no manifest at $path - bootstrap with writeDedupManifest")
-    readDedupManifestRefs(spark, path, gens.max)
-      .collect { case ("fold", w, _) => w.toLong }
-      .toSet
-  }
-
-  // Commit one generation, with the SAME two concurrent-committer fences
-  // the ANN index's commitAdcGen documents: (1) expected-parent — re-list
-  // the chain after staging and refuse loudly if the head moved (the
-  // lost-update interleaving becomes a refusal, never silent ref loss);
-  // (2) committer token — read the published object back and require OUR
-  // token (the CAS emulation for stores whose "rename" is a silently
-  // replacing PUT). private[graft] so the spec drives the race directly.
-  private[graft] def commitDedupGen(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      gen: Long,
-      refs: Seq[(String, String, Long)],
-      expectedParent: Option[Long],
-  ): Long = {
-    require(refs.exists(_._1 == "sig"), s"commitDedupGen: refusing to commit a signature-EMPTY generation $gen for $path")
-    val token = java.util.UUID.randomUUID().toString
-    val payload = refs.filterNot(_._1 == "committer") :+ (("committer", token, 0L))
-    // Token-unique scratch (the ANN chain's rule): concurrent committers
-    // are the acknowledged race the two fences exist for — a shared
-    // staging path would let one committer's overwrite replace another's
-    // staged object BEFORE either fence runs. Crashed scratch is vacuumed
-    // by [[cleanupDedupGenerations]] under its scratch grace.
-    val scratch = s"$path/${IvfIndex.scratchName("_manifest_tmp", token)}"
-    // Stage the generation object DIRECTLY (MetaIO) — the manifest is one
-    // tiny driver-resident row set, and the Spark coalesce(1) write was a
-    // full job per commit on the ingest critical path. Same parquet
-    // format, same scratch-then-rename protocol below.
-    MetaIO.writeRows(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(scratch, "part-00000.parquet").toString,
-      DedupManifestSchema,
-      payload.map { case (kind, name, bytes) => Seq(kind, name, bytes) },
-    )
-    val parts = fs
-      .listStatus(new org.apache.hadoop.fs.Path(scratch))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(parts.length == 1, s"commitDedupGen: expected one manifest part, found ${parts.length}")
-    // Both fences + the refusal-path scratch hygiene live in the shared
-    // protocol ([[AtomicHead.commit]]); this site supplies the chain
-    // listing, its spec'd refusal, and the fence-2 read-back.
-    val target = new org.apache.hadoop.fs.Path(s"${dedupManifestDir(path)}/gen-$gen.parquet")
-    AtomicHead.commit(
-      fs,
-      staged = parts.head.getPath,
-      scratchRoot = new org.apache.hadoop.fs.Path(scratch),
-      scratchIsDir = true,
-      target = target,
-      headNow = () => listDedupGens(fs, path).lastOption,
-      expectedParent = expectedParent,
-      refuseMoved = headNow =>
-        throw new IllegalArgumentException(
-          s"commitDedupGen: generation head moved from $expectedParent to $headNow while this commit was " +
-            "built - a concurrent committer published first. Committing from stale refs would silently " +
-            "drop the interleaved generation's files. Re-read the latest refs and retry."),
-      existsMsg = s"commitDedupGen: generation $gen already exists at $target",
-      renameFailedMsg = s"commitDedupGen: commit move failed for $target",
-      requireCommitWon = () => requireDedupGenCommitWon(spark, path, gen, token),
-    )
-    gen
-  }
-
-  // The post-commit read-back of fence 2, separated (the ANN chain's
-  // shape) so the spec can drive the LOSING side directly — simulating
-  // the object-store PUT overwrite a local-FS test cannot produce
-  // through rename.
-  private[graft] def requireDedupGenCommitWon(
-      spark: SparkSession,
-      path: String,
-      gen: Long,
-      token: String,
-  ): Unit = {
-    val winners = readDedupManifestRefs(spark, path, gen).collect { case ("committer", t, _) => t }
-    require(
-      winners == Seq(token),
-      s"commitDedupGen: generation $gen at $path was committed by ANOTHER writer " +
-        s"(its token ${winners.mkString(",")}, ours $token) - this driver lost the PUT race; its file " +
-        "set is NOT what readers resolve. Re-read the latest refs and retry as the next generation.",
-    )
-  }
+  /** The manifest generation chain of the dedup index at `path`. */
+  private[graft] def manifest(spark: SparkSession, path: String): Manifest.Chain =
+    new Manifest.Chain(spark, path, ManifestLayout)
 
   /** BOOTSTRAP the manifest: census the live flat dir into generation 0.
     * Only legal while no generation exists and the dir was never
@@ -1591,22 +1417,8 @@ object Dedup {
     * would re-reference them). Call once after [[saveDedupIndex]]; every
     * later generation comes from an op that knows its delta.
     */
-  def writeDedupManifest(spark: SparkSession, path: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(
-      listDedupGens(fs, path).isEmpty,
-      s"writeDedupManifest: $path already has manifest generations - the census bootstrap would " +
-        "re-reference de-referenced files. Incremental gens come from commitDedupBatchToManifest / " +
-        "compactDedupIndexManifest.",
-    )
-    val refs = fs
-      .listStatus(root)
-      .toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => ("sig", f.getPath.getName, f.getLen))
-    commitDedupGen(spark, fs, path, 0L, refs, expectedParent = None)
-  }
+  def writeDedupManifest(spark: SparkSession, path: String): Long =
+    manifest(spark, path).bootstrap("writeDedupManifest")
 
   /** Commit a landed batch ([[appendDedupIndex]] with `batchId`) into the
     * next generation: previous refs, minus any refs this SAME batch wrote
@@ -1614,23 +1426,8 @@ object Dedup {
     * heals the dangling refs), plus the batch's files now on disk. The
     * index is one flat dir, so the listing is a single directory listing.
     */
-  def commitDedupBatchToManifest(spark: SparkSession, path: String, batchId: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"commitDedupBatchToManifest: no manifest at $path - bootstrap with writeDedupManifest")
-    val prev = readDedupManifestRefs(spark, path, gens.max)
-    val kept = prev.filterNot { case (kind, name, _) =>
-      kind == "sig" && IvfIndex.batchIdOfLanding(name).contains(batchId)
-    }
-    val landed = fs
-      .listStatus(root)
-      .toSeq
-      .filter(f => f.isFile && IvfIndex.batchIdOfLanding(f.getPath.getName).contains(batchId))
-      .map(f => ("sig", f.getPath.getName, f.getLen))
-    require(landed.nonEmpty, s"commitDedupBatchToManifest: batch $batchId left no files under $path")
-    commitDedupGen(spark, fs, path, gens.max + 1, kept ++ landed, expectedParent = Some(gens.max))
-  }
+  def commitDedupBatchToManifest(spark: SparkSession, path: String, batchId: Long): Long =
+    manifest(spark, path).commitBatch("commitDedupBatchToManifest", batchId)
 
   /** [[compactDedupIndex]] in MANIFEST mode: the census comes from the
     * latest generation's refs (pure metadata), the rewrite lands under
@@ -1644,8 +1441,8 @@ object Dedup {
     * index dir whose chain must COVER every batch id this compaction is
     * about to fold — [[Consistency.requireFoldCovered]]'s loud gate,
     * fired before any rewrite. Folding records every folded batch id in
-    * the chain's folded-id set ([[dedupFoldedBatches]]) either way, so
-    * the census stays sound across the fold.
+    * the chain's folded-id set ([[Manifest.Chain.foldedBatches]]) either
+    * way, so the census stays sound across the fold.
     */
   def compactDedupIndexManifest(
       spark: SparkSession,
@@ -1656,15 +1453,15 @@ object Dedup {
       coverageGuard: Option[String] = None,
   ): (Long, Long) = {
     require(targetFiles >= 1, s"compactDedupIndexManifest: targetFiles must be >= 1: $targetFiles")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"compactDedupIndexManifest: no manifest at $path - bootstrap with writeDedupManifest")
-    val refs = readDedupManifestRefs(spark, path, gens.max)
-    val names = sigRefs(refs).map(_._1).sorted
+    val chain = manifest(spark, path)
+    val fs = chain.fs
+    val parent = chain.head("compactDedupIndexManifest")
+    val refs = chain.refs(parent)
+    val names = chain.data(refs).map(_.name).sorted
     val (retained, eligible) = names.partition(n =>
-      IvfIndex.batchIdOfLanding(n).exists(id => minRetainedBatchId.exists(id >= _)))
+      Manifest.batchIdOfLanding(n).exists(id => minRetainedBatchId.exists(id >= _)))
     if (minRetainedBatchId.isEmpty) {
-      val unfenced = eligible.flatMap(IvfIndex.batchIdOfLanding).distinct.sorted
+      val unfenced = eligible.flatMap(Manifest.batchIdOfLanding).distinct.sorted
       require(
         unfenced.isEmpty,
         s"compactDedupIndexManifest: about to rewrite batch landings that may still replay (batchId): " +
@@ -1679,17 +1476,17 @@ object Dedup {
     if (eligible.isEmpty || eligible.size <= targetFiles) return (names.size.toLong, names.size.toLong)
     // The batch ids about to LOSE their names: the cross-artifact gate
     // (opt-in) refuses before any rewrite if the other chain never
-    // covered one; the fold watermark below records them either way.
-    val foldedIds = eligible.flatMap(IvfIndex.batchIdOfLanding)
+    // covered one; the commit records them in the folded-id set.
+    val foldedIds = eligible.flatMap(Manifest.batchIdOfLanding)
     coverageGuard.foreach(annDir =>
-      Consistency.requireFoldCovered(spark, "compactDedupIndexManifest", foldedIds,
-        otherIsDedup = false, otherPath = annDir))
-    val newGen = gens.max + 1
+      Consistency.requireFoldCovered("compactDedupIndexManifest", foldedIds, IvfIndex.manifest(spark, annDir)))
+    val newGen = parent + 1
     val eligibleFiles = eligible.map(n => s"$path/$n")
     val idx = spark.read.parquet(eligibleFiles: _*)
     requireIndexColumns(s"compactDedupIndexManifest: $path", idx.columns.toSeq, k)
-    // UUID-unique scratch — same rule as the commit scratch above.
-    val scratch = s"$path/${IvfIndex.scratchName("_mcompact_tmp", java.util.UUID.randomUUID().toString)}"
+    // UUID-unique scratch — the chain commit's rule: concurrent ops never
+    // share a staging path.
+    val scratch = s"$path/${Manifest.scratchName("_mcompact_tmp", java.util.UUID.randomUUID().toString)}"
     idx.select(indexColumns(k).map(col): _*).coalesce(targetFiles).write.mode("overwrite").parquet(scratch)
     // Row-count gate from parquet FOOTERS — see compactDedupIndex above.
     val inRows = MetaIO.rowCount(spark.sparkContext.hadoopConfiguration, eligibleFiles)
@@ -1709,19 +1506,11 @@ object Dedup {
       .map { f =>
         val target = new org.apache.hadoop.fs.Path(path, s"m${newGen}bin-${f.getPath.getName}")
         require(fs.rename(f.getPath, target), s"compactDedupIndexManifest: bin move failed for $target")
-        ("sig", target.getName, fs.getFileStatus(target).getLen)
+        Manifest.Ref("sig", -1, target.getName, fs.getFileStatus(target).getLen)
       }
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     val retainedSet = retained.toSet
-    // The folded-id SET: prior fold refs carried forward, this commit's
-    // folded ids merged in — one ref PER batch id, never a single max
-    // (see [[dedupFoldedBatches]]: `<= max` coverage masked one-sided
-    // batches sitting in a gap below a later fold).
-    val foldRefs = (refs.collect { case ("fold", w, _) => w.toLong } ++ foldedIds).distinct.sorted
-      .map(w => ("fold", w.toString, 0L))
-    val committed =
-      refs.filter { case (kind, name, _) => kind == "sig" && retainedSet(name) } ++ binRefs ++ foldRefs
-    commitDedupGen(spark, fs, path, newGen, committed, expectedParent = Some(gens.max))
+    chain.commitCompaction(parent, refs, chain.data(refs).filter(r => retainedSet(r.name)) ++ binRefs, foldedIds)
     (names.size.toLong, (retained.size + binRefs.size).toLong)
   }
 
@@ -1732,63 +1521,17 @@ object Dedup {
     * its commit or lost the commit race); files whose gen is AHEAD of
     * the head are spared as possibly in flight, and plain `batch<id>-`
     * landings referenced by nothing are in-flight landings — never
-    * touched. Returns the deleted-file count.
+    * touched. Crashed-op scratch (`_manifest_tmp`, `_mcompact_tmp`,
+    * `_append_tmp`) older than `scratchGraceMs` goes too. Returns the
+    * deleted-file count. See [[Manifest.Chain.cleanup]].
     */
   def cleanupDedupGenerations(
       spark: SparkSession,
       path: String,
       keepGens: Int = 2,
       scratchGraceMs: Long = 15L * 60L * 1000L,
-  ): Long = {
-    require(keepGens >= 1, s"cleanupDedupGenerations: keepGens must be >= 1: $keepGens")
-    require(scratchGraceMs >= 0, s"cleanupDedupGenerations: scratchGraceMs must be >= 0: $scratchGraceMs")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"cleanupDedupGenerations: no manifest at $path")
-    // Crashed-op scratch (a commit's _manifest_tmp_<token>, a compactor's
-    // _mcompact_tmp_<uuid>, a landing's _append_tmp_b<id>) — content that
-    // never reached a commit. AGE-GATED like the ANN chain's vacuum:
-    // manifest-mode ingest legitimately races maintenance, so a scratch
-    // younger than `scratchGraceMs` may be an op staging right now and is
-    // spared; a crashed op's scratch ages past any real staging window.
-    // Age comes from the wall-clock stamp the scratch NAME embeds
-    // ([[IvfIndex.scratchName]]) — mtime is the fallback for stamp-less
-    // legacy names only (object stores report epoch-0 mtimes for
-    // directory entries, which would void the grace).
-    val staleBefore = System.currentTimeMillis() - scratchGraceMs
-    val scratchPrefixes = Seq("_manifest_tmp", "_mcompact_tmp", "_append_tmp")
-    fs.listStatus(root)
-      .filter(s =>
-        s.isDirectory &&
-          scratchPrefixes.exists(s.getPath.getName.startsWith) &&
-          IvfIndex.scratchIsStale(s, staleBefore))
-      .foreach(s => fs.delete(s.getPath, true))
-    val (old, kept) = gens.splitAt(math.max(0, gens.size - keepGens))
-    val keptAll = kept.flatMap(g => readDedupManifestRefs(spark, path, g))
-    val oldAll = old.flatMap(g => readDedupManifestRefs(spark, path, g))
-    val keptNames = sigRefs(keptAll).map(_._1).toSet
-    val deadNames = sigRefs(oldAll).map(_._1).toSet -- keptNames
-    var deleted = 0L
-    deadNames.toSeq.sorted.foreach { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$name")
-      if (fs.exists(p) && fs.delete(p, false)) deleted += 1
-    }
-    val maxGen = gens.max
-    val orphanGen = raw"m(\d+)bin-.*".r
-    val allNames = keptNames ++ sigRefs(oldAll).map(_._1)
-    fs.listStatus(root).filter(_.isFile).foreach { f =>
-      val name = f.getPath.getName
-      val g = name match {
-        case orphanGen(mg) => Some(mg.toLong)
-        case _ => None
-      }
-      if (g.exists(_ <= maxGen) && !allNames(name) && fs.delete(f.getPath, false))
-        deleted += 1
-    }
-    old.foreach(g => fs.delete(new org.apache.hadoop.fs.Path(s"${dedupManifestDir(path)}/gen-$g.parquet"), false))
-    deleted
-  }
+  ): Long =
+    manifest(spark, path).cleanup("cleanupDedupGenerations", keepGens, scratchGraceMs)
 
   /** What one standing-maintenance tick did — [[maintainDedupIndexManifest]]'s
     * report, for the caller's log line and the in-query gates.
@@ -1800,12 +1543,10 @@ object Dedup {
       sweptFiles: Long,
   )
 
-  /** The dedup chain's STANDING-MAINTENANCE rule —
-    * [[graft.operators.IvfIndex.maintainAdcIndexManifest]]'s twin on
-    * this artifact, and the piece that completes the nightly loop q287
-    * exercises (ingest → staleness-bounded republish): one tick reads
-    * the head generation's refs and decides whether the chain itself
-    * needs work this cadence.
+  /** The dedup chain's STANDING-MAINTENANCE rule, and the piece that
+    * completes the nightly loop q287 exercises (ingest →
+    * staleness-bounded republish): one tick reads the head generation's
+    * refs and decides whether the chain itself needs work this cadence.
     *
     *  - COMPACT when the referenced signature-file count reaches
     *    `maxFiles` — file count is the snapshot load's degradation
@@ -1815,11 +1556,8 @@ object Dedup {
     *    compactor's own not-enough-to-bin pass also commits nothing —
     *    the bound is an ADMISSION rule, not a correctness one).
     *  - SWEEP last ([[cleanupDedupGenerations]]), with retention
-    *    widened by the generations this tick itself committed: a
-    *    committing tick must not spend the snapshot-reader grace on its
-    *    own commits — the generation that was head at tick ENTRY always
-    *    survives the tick, and the superseded world is retired by the
-    *    NEXT tick, after the grace.
+    *    widened by the generations this tick itself committed
+    *    ([[Manifest.Chain.keepFor]]).
     *
     * Both levers keep their own fences (the replay watermark, the two
     * commit fences, the reader grace); the tick adds the bound and the
@@ -1843,19 +1581,17 @@ object Dedup {
       coverageGuard: Option[String] = None,
   ): DedupMaintenanceReport = {
     require(maxFiles >= 1, s"maintainDedupIndexManifest: maxFiles must be >= 1: $maxFiles")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"maintainDedupIndexManifest: no manifest at $path - bootstrap with writeDedupManifest")
-    val headAtEntry = gens.max
-    val filesBefore = sigRefs(readDedupManifestRefs(spark, path, headAtEntry)).size.toLong
+    val chain = manifest(spark, path)
+    val headAtEntry = chain.head("maintainDedupIndexManifest")
+    val filesBefore = chain.data(chain.refs(headAtEntry)).size.toLong
     var filesAfter = filesBefore
     if (filesBefore >= maxFiles) {
       filesAfter = compactDedupIndexManifest(spark, path, k, targetFiles, minRetainedBatchId,
         coverageGuard)._2
     }
-    val commitsThisTick = (listDedupGens(fs, path).max - headAtEntry).toInt
-    val swept = cleanupDedupGenerations(spark, path, keepGens + commitsThisTick)
-    DedupMaintenanceReport(filesBefore, filesAfter, commitsThisTick > 0, swept)
+    val keep = chain.keepFor(keepGens, headAtEntry)
+    val swept = cleanupDedupGenerations(spark, path, keep)
+    DedupMaintenanceReport(filesBefore, filesAfter, keep > keepGens, swept)
   }
 
   /** [[loadDedupIndex]] from a MANIFEST snapshot: resolve a generation
@@ -1871,13 +1607,9 @@ object Dedup {
       k: Int = 8,
       gen: Option[Long] = None,
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"loadDedupIndexSnapshot: no manifest at $path - bootstrap with writeDedupManifest")
-    val g = gen.getOrElse(gens.max)
-    require(gens.contains(g), s"loadDedupIndexSnapshot: generation $g not in ${gens.mkString(",")}")
-    val files = sigRefs(readDedupManifestRefs(spark, path, g)).map { case (name, _) => s"$path/$name" }
-    val df = spark.read.parquet(files: _*)
+    val chain = manifest(spark, path)
+    val g = chain.resolve("loadDedupIndexSnapshot", gen)
+    val df = spark.read.parquet(chain.data(chain.refs(g)).map(chain.path): _*)
     requireIndexColumns(s"loadDedupIndexSnapshot: $path gen $g", df.columns.toSeq, k)
     df.select(indexColumns(k).map(col): _*)
   }
@@ -1916,13 +1648,10 @@ object Dedup {
       toGen: Long,
       k: Int = 8,
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, path)
-    require(gens.nonEmpty, s"dedupChainDiff: no manifest at $path - bootstrap with writeDedupManifest")
-    Seq(fromGen, toGen).foreach(g =>
-      require(gens.contains(g), s"dedupChainDiff: generation $g not in ${gens.mkString(",")}"))
-    val fromNames = sigRefs(readDedupManifestRefs(spark, path, fromGen)).map(_._1).toSet
-    val toNames = sigRefs(readDedupManifestRefs(spark, path, toGen)).map(_._1).toSet
+    val chain = manifest(spark, path)
+    def namesOf(g: Long) = chain.data(chain.refs(chain.resolve("dedupChainDiff", Some(g)))).map(_.name).toSet
+    val fromNames = namesOf(fromGen)
+    val toNames = namesOf(toGen)
     // An empty side keeps the INDEX's schema (id may be long or string):
     // read the generation's own files and limit(0) — one footer, no rows.
     def rowsOf(names: Set[String], genAll: Set[String]): DataFrame = {
@@ -2293,7 +2022,7 @@ object Dedup {
     props.setProperty("hashes", head.hashes)
     props.setProperty("since", head.since.toString)
     fs.mkdirs(headDir)
-    val tmp = new org.apache.hadoop.fs.Path(headDir, IvfIndex.scratchName("_head_tmp", head.token))
+    val tmp = new org.apache.hadoop.fs.Path(headDir, Manifest.scratchName("_head_tmp", head.token))
     val out = fs.create(tmp, true)
     try props.store(out, null)
     finally out.close()
@@ -2346,7 +2075,7 @@ object Dedup {
 
   // A versioned serve-table name's embedded (gen, stampMs) — the vacuum's
   // age gate, wall-clock-stamped for the same reason scratch names are
-  // ([[IvfIndex.scratchName]]).
+  // ([[Manifest.scratchName]]).
   private def versionedServePattern(prefix: String) =
     (java.util.regex.Pattern.quote(prefix) + raw"_g(\d+)_ts(\d+)_[0-9a-f]{8}_(?:bands|sigs|hashes)").r
 
@@ -2421,7 +2150,7 @@ object Dedup {
     * for a standing pipeline: the serve tables are a point-in-time
     * rewrite of one generation, later ingest commits advance the chain
     * without touching them, and [[dedupServeGeneration]] against
-    * [[listDedupGens]]'s head tells an operator exactly how stale the
+    * the manifest chain's head tells an operator exactly how stale the
     * serving layout is (serving an older snapshot deliberately is
     * legitimate — that's what generation pinning is for).
     *
@@ -2449,10 +2178,7 @@ object Dedup {
       vacuumGraceMs: Long = 24L * 60L * 60L * 1000L,
   ): Long = {
     require(keepPublishes >= 1, s"publishDedupServeTables: keepPublishes must be >= 1: $keepPublishes")
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, indexPath)
-    require(gens.nonEmpty, s"publishDedupServeTables: no manifest at $indexPath - bootstrap with writeDedupManifest")
-    val g = gen.getOrElse(gens.max)
+    val g = manifest(spark, indexPath).resolve("publishDedupServeTables", gen)
     val token = java.util.UUID.randomUUID().toString
     val tok8 = token.replace("-", "").take(8)
     val stampMs = System.currentTimeMillis()
@@ -2648,7 +2374,7 @@ object Dedup {
       fs.listStatus(headDir)
         .filter(s =>
           s.getPath.getName.startsWith("_head_tmp") &&
-            IvfIndex.scratchIsStale(s, staleBefore))
+            Manifest.scratchIsStale(s, staleBefore))
         .foreach(s => fs.delete(s.getPath, false))
     retired
   }
@@ -2722,10 +2448,7 @@ object Dedup {
       keepPublishes: Int = 2,
   ): Option[Long] = {
     require(maxStaleGens >= 1, s"refreshDedupServe: maxStaleGens must be >= 1: $maxStaleGens")
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = listDedupGens(fs, indexPath)
-    require(gens.nonEmpty, s"refreshDedupServe: no manifest at $indexPath - bootstrap with writeDedupManifest")
-    val head = gens.max
+    val head = manifest(spark, indexPath).head("refreshDedupServe")
     // The staleness rule runs on what the layout can actually SERVE, not
     // what its head claims: a head whose tables do not resolve — the
     // default in-memory catalog lost them across a session restart while
@@ -2769,7 +2492,7 @@ object Dedup {
     else None
   }
 
-  /** SERVE-LAYOUT DIFF — [[dedupChainDiff]]'s twin pointed at the
+  /** SERVE-LAYOUT DIFF — the [[dedupChainDiff]] audit pointed at the
     * published tables: what does the serving layout ACTUALLY contain,
     * versus the deterministic derivation of the snapshot its head
     * claims? The chain diffs audit the artifact of record; this audits

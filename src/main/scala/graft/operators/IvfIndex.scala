@@ -627,7 +627,7 @@ object IvfIndex {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) "plain"
     else {
-      // Metadata-scale direct read (one row) — see readAdcManifestRefs.
+      // Metadata-scale direct read (one row) — see Manifest.Chain.refs.
       val rows = MetaIO.readGroups(spark.sparkContext.hadoopConfiguration, s"$dir/meta")
       require(rows.nonEmpty, s"loadVariant: $dir/meta holds no rows - a corrupt index self-description")
       val v = MetaIO.str(rows.head, "variant")
@@ -645,7 +645,7 @@ object IvfIndex {
       m: Int,
   ): IndexedSeq[Seq[(Int, Seq[Float])]] = {
     // Metadata-scale direct read (m × nlist tiny rows that become a
-    // driver-side literal anyway) — see readAdcManifestRefs. The ordering
+    // driver-side literal anyway) — see Manifest.Chain.refs. The ordering
     // the old orderBy established happens driver-side.
     val rows = MetaIO
       .readGroups(spark.sparkContext.hadoopConfiguration, s"$dir/codebooks")
@@ -721,11 +721,11 @@ object IvfIndex {
     // and residual-encode every post-repair increment against the STALE
     // centroids while snapshot serving scores with the repaired ones —
     // silently wrong ADC math for every appended row in a repaired cell.
-    val fsm = new org.apache.hadoop.fs.Path(s"$dir/codes").getFileSystem(spark.sessionState.newHadoopConf())
-    val manifestGens = listAdcGens(fsm, dir)
+    val chain = manifest(spark, dir)
+    val manifestGens = chain.gens
     val centroidsPath =
       if (manifestGens.isEmpty) s"$dir/centroids"
-      else centroidsPathOf(dir, readAdcManifestRefs(spark, dir, manifestGens.max))
+      else centroidsPathOf(dir, chain.refs(manifestGens.max))
     val centroids = spark.read.parquet(centroidsPath)
     val cbs = loadCodebooks(spark, dir, m)
     val subDim = cbs.head.head._2.length
@@ -763,7 +763,7 @@ object IvfIndex {
         Seq.empty[Int]
       case Some(b) =>
         val codes = s"$dir/codes"
-        val scratch = s"$dir/${scratchName("codes_append_tmp", s"b$b")}"
+        val scratch = s"$dir/${Manifest.scratchName("codes_append_tmp", s"b$b")}"
         val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
         encoded.write
           .mode("overwrite")
@@ -895,42 +895,6 @@ object IvfIndex {
       s"$dir/centroids_repair_new",
     )
 
-  // The batch id a code file's name carries, if any: batch-keyed landings
-  // ([[appendToAdcIndex]]) name their files `batch<id>-<part>.parquet`;
-  // base writes and compacted bins (`bin<b>-…`, `part-…`) carry none.
-  private val LandingName = raw"batch(\d+)-.*".r
-  private[graft] def batchIdOfLanding(name: String): Option[Long] = name match {
-    case LandingName(id) => Some(id.toLong)
-    case _ => None
-  }
-
-  // Scratch dirs embed their creation WALL CLOCK in the name
-  // (`<prefix>_ts<millis>_<suffix>`) so the cleanup age gate never
-  // depends on filesystem mtime: object stores routinely report epoch-0
-  // mtimes for fake directory entries — under an mtime gate every
-  // scratch looks infinitely stale and the grace is void, reintroducing
-  // the delete-an-in-flight-staging race the grace exists to close
-  // (client/store clock skew voids it the same way). The committer's own
-  // clock names the scratch, the same clock the cleanup compares against
-  // when cleanup runs from the maintenance driver; cross-driver skew
-  // only narrows or widens the grace, never zeroes it. Names without an
-  // embedded stamp (pre-stamp layouts, hand-made test dirs) fall back to
-  // mtime — legacy dirs age out rather than leak.
-  private[graft] def scratchName(prefix: String, suffix: String): String =
-    s"${prefix}_ts${System.currentTimeMillis()}_$suffix"
-  // FIRST parseable `_ts<digits>_` token (lazy prefix), not the last: every
-  // scratch prefix is a `_ts`-free literal, so the stamp is always the first
-  // such token — a greedy parse would instead read any later `_ts<digits>_`
-  // a future SUFFIX happened to contain, misdating a live staging dir and
-  // letting the sweep reclaim it mid-staging.
-  private val ScratchStamp = raw".*?_ts(\d+)_.*".r
-  private[graft] def scratchBornAt(name: String): Option[Long] = name match {
-    case ScratchStamp(ts) => Some(ts.toLong)
-    case _ => None
-  }
-  private[graft] def scratchIsStale(s: org.apache.hadoop.fs.FileStatus, staleBefore: Long): Boolean =
-    scratchBornAt(s.getPath.getName).getOrElse(s.getModificationTime) <= staleBefore
-
   // The replay fence both repair modes share: list the TREE for batch
   // landings at or above the watermark. On-disk batch files outside the
   // current manifest refs are exactly the in-flight landings, so the
@@ -954,7 +918,7 @@ object IvfIndex {
           val cell = d.getPath.getName.stripPrefix("centroid_id=").toInt
           fs.listStatus(d.getPath)
             .toSeq
-            .flatMap(f => batchIdOfLanding(f.getPath.getName))
+            .flatMap(f => Manifest.batchIdOfLanding(f.getPath.getName))
             .filter(id => minRetainedBatchId.forall(id >= _))
             .map(id => (cell, id))
         }
@@ -1058,7 +1022,7 @@ object IvfIndex {
       minRetainedBatchId: Option[Long],
   ): (Seq[(Int, String, Long)], Map[Int, Seq[(Int, String, Long, Long)]]) = {
     val (retained, eligible) = before.partition { case (_, name, _) =>
-      batchIdOfLanding(name).exists(id => minRetainedBatchId.exists(id >= _))
+      Manifest.batchIdOfLanding(name).exists(id => minRetainedBatchId.exists(id >= _))
     }
     // Every file watermark-retained = nothing eligible to bin. That is a
     // legal nightly-compactor state (an index whose whole tail is still
@@ -1080,7 +1044,7 @@ object IvfIndex {
     val victims = binned.groupBy(_._1).filter { case (_, cf) => cf.map(_._4).distinct.size < cf.size }
     if (minRetainedBatchId.isEmpty) {
       val unfenced = victims.values.flatten
-        .flatMap { case (cell, name, _, _) => batchIdOfLanding(name).map(id => (cell, id)) }
+        .flatMap { case (cell, name, _, _) => Manifest.batchIdOfLanding(name).map(id => (cell, id)) }
         .toSeq
         .distinct
         .sorted
@@ -1255,7 +1219,7 @@ object IvfIndex {
     val codes = s"$dir/codes"
     val root = new org.apache.hadoop.fs.Path(codes)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    requireNoManifest(fs, dir, "compactAdcIndexCodes")
+    manifest(spark, dir).requireAbsent("compactAdcIndexCodes")
     selfHealCellSwaps(fs, dir)
     def census(): Seq[(Int, String, Long)] =
       fs.listStatus(root)
@@ -1338,257 +1302,27 @@ object IvfIndex {
   // ----------------------------------------------------------------------
   // MANIFEST-COMMIT mode — the object-store alternative the
   // [[swapCellDirsIn]] contract sketches, implemented for the CODES table
-  // (the only multi-file, incrementally-rewritten artifact; centroids /
-  // codebooks / meta are tiny and swap wholesale). A generation file
-  // under `manifest/` names the exact file set of every posting list;
-  // readers resolve a generation and read THOSE files, so no commit ever
-  // depends on a rename being atomic: writers land new files under fresh
-  // names (never colliding, never deleting), and the only atomic step is
-  // making one small manifest object visible — a single-object PUT on
-  // every major store. De-referenced files are swept later by
-  // [[cleanupAdcGenerations]], which gives in-flight snapshot readers a
-  // configurable generation grace. CONCURRENT WRITERS are detected, not
-  // assumed away: every generation commit names the parent generation it
-  // was built from and re-lists the chain after staging — if another
-  // committer advanced the chain meanwhile (manifest-mode ingest IS a
-  // manifest writer, racing maintenance; or an orchestrator restarting a
-  // "dead" driver whose JVM is still finishing), exactly one commit wins
-  // and the loser refuses LOUDLY with the refs it must re-read
-  // ([[commitAdcGen]]'s expected-parent fence). The same-generation
-  // PUT-overwrite race (object stores silently replace on name collision
-  // where HDFS rename refuses) is closed by a committer token inside the
-  // generation object, verified after the commit move — a loser discovers
-  // the overwrite and refuses instead of believing its vanished world was
-  // published. Losers re-read the latest refs and retry; nothing is ever
-  // silently dropped. Concurrent APPENDS need no fence at all — a landing
-  // only adds never-referenced files, which both compaction (manifest
-  // census) and cleanup (reference-set math)
-  // ignore. The two commit modes must not mix: the rename ops census the
-  // live TREE and would double-count a manifest index's de-referenced
-  // files, so they refuse loudly when `manifest/` exists, and the
-  // manifest ops refuse its absence (except the bootstrap).
+  // (the only multi-file, incrementally-rewritten artifact; codebooks and
+  // meta are frozen and swap wholesale): the generation chain of
+  // [[Manifest]] over the cell-partitioned codes layout, under
+  // `manifest/`. Every generation also names the live centroids table (a
+  // `centroids` ref — versioned by drift repairs, "centroids" at
+  // bootstrap), so a repair commits codes and centroids in one step.
   // ----------------------------------------------------------------------
 
-  private def manifestDir(dir: String) = s"$dir/manifest"
+  private[graft] val ManifestLayout =
+    Manifest.Layout("ANN", "manifest", "codes", cellsUnder = Some("codes"), bootstrap = "writeAdcManifest")
 
-  private val GenName = raw"gen-(\d+)\.parquet".r
+  /** The manifest generation chain of the ANN index at `dir`. */
+  private[graft] def manifest(spark: org.apache.spark.sql.SparkSession, dir: String): Manifest.Chain =
+    new Manifest.Chain(spark, dir, ManifestLayout)
 
-  private[graft] def listAdcGens(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: String,
-  ): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(dir))
-    if (!fs.exists(p)) Nil
-    else
-      fs.listStatus(p)
-        .toSeq
-        .flatMap(_.getPath.getName match {
-          case GenName(n) => Some(n.toLong)
-          case _ => None
-        })
-        .sorted
-  }
-
-  private def requireNoManifest(fs: org.apache.hadoop.fs.FileSystem, dir: String, op: String): Unit =
-    require(
-      listAdcGens(fs, dir).isEmpty,
-      s"$op: $dir is MANIFEST-committed (manifest/ has generations). The rename-mode ops census " +
-        "the live tree and would double-count de-referenced files - use the manifest ops " +
-        "(compactAdcIndexCodesManifest, adcTopKFromSnapshot, cleanupAdcGenerations) instead.",
-    )
-
-  // One manifest reference: a codes FILE (kind = "codes", cell + file
-  // name) or the centroids TABLE (kind = "centroids", name = the live
-  // centroids dir relative to the index root — versioned by drift
-  // repairs, "centroids" at bootstrap). Codebooks and meta/ are frozen
-  // artifacts of the save and need no versioning.
-  private[graft] case class AdcRef(kind: String, cell: Int, name: String, bytes: Long)
-
-  // The generation object's parquet schema: the Spark writer's column
-  // names, types and UTF8 strings from before the direct MetaIO staging,
-  // so pre- and post-change generations are read-compatible. They are not
-  // byte-identical: every field here is optional, where the Spark writer
-  // marked its non-null fields required.
-  private val AdcManifestSchema =
-    """message spark_schema {
-      |  optional binary kind (UTF8);
-      |  optional int32 centroid_id;
-      |  optional binary name (UTF8);
-      |  optional int64 bytes;
-      |}""".stripMargin
-
-  private def codesRefs(refs: Seq[AdcRef]): Seq[(Int, String, Long)] =
-    refs.collect { case AdcRef("codes", cell, name, bytes) => (cell, name, bytes) }
-
-  /** The chain's FOLD WATERMARK ([[graft.operators.Dedup.dedupFoldWatermark]]'s
-    * twin): max of [[adcFoldedBatches]], kept for messages and specs.
-    * COVERAGE never tests against this — see [[adcFoldedBatches]].
-    */
-  private[graft] def adcFoldWatermark(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-  ): Option[Long] =
-    adcFoldedBatches(spark, dir).maxOption
-
-  /** The EXACT set of batch ids this chain's manifest compactions ever
-    * folded into bins — one `kind = "fold"` ref PER ID, carried forward by
-    * every later generation. The cross-artifact census and gates
-    * ([[graft.operators.Consistency]]) test MEMBERSHIP in this set, never
-    * `<= max`: a single max watermark treated as dense-range coverage
-    * masked any batch that was never landed here but sat below a later
-    * folded id — the gap a one-sided crash leaves is exactly the
-    * divergence the census exists to keep observable (r20 VERDICT #1).
-    * Fold refs are one metadata row per folded batch per generation —
-    * the manifest's own cost class. A pre-upgrade layout carrying only
-    * the old single max ref under-covers (its below-max folded batches
-    * read uncovered and the gates REFUSE), which is the safe direction:
-    * re-landing the named batch heals it, per the refusal text.
-    */
-  private[graft] def adcFoldedBatches(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-  ): Set[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"adcFoldedBatches: no manifest at $dir - bootstrap with writeAdcManifest")
-    readAdcManifestRefs(spark, dir, gens.max)
-      .collect { case AdcRef("fold", _, w, _) => w.toLong }
-      .toSet
-  }
-
-  private def centroidsPathOf(dir: String, refs: Seq[AdcRef]): String =
-    s"$dir/${refs.collectFirst { case AdcRef("centroids", _, name, _) => name }.getOrElse("centroids")}"
-
-  // One manifest generation's rows, collected. Driver-side by design — a
-  // manifest is metadata-scale (one row per FILE) and the explicit-files
-  // read needs the list on the driver anyway. Read DIRECTLY (MetaIO), not
-  // through a Spark action: the composed lifecycle ops re-read the head
-  // refs on every hop, and each spark.read+collect was ~50-150 ms of
-  // planning+scheduling to move a few hundred bytes the driver needs
-  // locally anyway.
-  private[graft] def readAdcManifestRefs(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      gen: Long,
-  ): Seq[AdcRef] =
-    MetaIO
-      .readGroups(spark.sparkContext.hadoopConfiguration, s"${manifestDir(dir)}/gen-$gen.parquet")
-      .map(g =>
-        AdcRef(MetaIO.str(g, "kind"), MetaIO.int32(g, "centroid_id"), MetaIO.str(g, "name"),
-          MetaIO.int64(g, "bytes")))
-
-  // Commit one generation: write the refs as a SINGLE parquet object.
-  // The rename below is commit-local bookkeeping, not the commit itself:
-  // on an object store the move is a copy whose target object appears
-  // atomically (PUT semantics) — the generation becomes visible exactly
-  // when the object does, and a crash before that leaves no partial gen.
-  //
-  // CONCURRENT-COMMITTER GUARD (the module comment's contract), two
-  // independent fences because object stores break two different
-  // assumptions:
-  //  1. EXPECTED-PARENT (the lost-update fence): the caller states which
-  //     generation its refs were READ from; after staging the object we
-  //     re-list the chain and refuse if the head moved — a committer
-  //     that built gen N+1 from gen N-1's refs (maintenance that read
-  //     while ingest committed) would otherwise publish a world with the
-  //     interleaved batch's refs silently dropped, and cleanup would
-  //     later delete that batch's files. The refusal fires BEFORE the
-  //     commit move, so the chain is untouched and the loser just
-  //     re-reads and retries.
-  //  2. COMMITTER TOKEN (the PUT-overwrite fence): `!fs.exists` + rename
-  //     only refuses a same-generation collision where rename refuses
-  //     existing targets — local FS and HDFS, NOT object stores, where
-  //     the second PUT silently replaces the first. Every generation
-  //     object carries one `kind = "committer"` row with a fresh UUID;
-  //     after the move we read the published object back and require OUR
-  //     token — the committer whose object was overwritten sees the
-  //     winner's token and refuses loudly instead of walking away
-  //     believing its world (possibly a different file set for the same
-  //     generation number) is live.
-  // private[graft] so the spec can interleave two committers directly.
-  private[graft] def commitAdcGen(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: String,
-      gen: Long,
-      refs: Seq[AdcRef],
-      expectedParent: Option[Long],
-  ): Long = {
-    require(refs.exists(_.kind == "codes"), s"commitAdcGen: refusing to commit a codes-EMPTY generation $gen for $dir")
-    // Strip inherited committer rows (refs built from a previous
-    // generation's rows carry its token) and stamp this commit's own.
-    val token = java.util.UUID.randomUUID().toString
-    val payload = refs.filterNot(_.kind == "committer") :+ AdcRef("committer", -1, token, 0L)
-    // Token-unique scratch: concurrent committers are an ACKNOWLEDGED race
-    // (the two fences below exist for it) — a shared staging path would
-    // let committer B's overwrite replace committer A's staged object
-    // BEFORE either fence runs, publishing one writer's refs under the
-    // other's rename. Unique names make staging corruption structurally
-    // impossible; a crashed commit's scratch is vacuumed by
-    // [[cleanupAdcGenerations]] under its scratch grace.
-    val scratch = s"$dir/${scratchName("manifest_tmp", token)}"
-    // Stage the generation object DIRECTLY (MetaIO) — the manifest is one
-    // tiny driver-resident row set, and the Spark coalesce(1) write was a
-    // full job per commit on the ingest critical path. Same parquet
-    // format, same scratch-then-rename protocol below.
-    val stagedFile = new org.apache.hadoop.fs.Path(scratch, "part-00000.parquet")
-    MetaIO.writeRows(
-      spark.sparkContext.hadoopConfiguration,
-      stagedFile.toString,
-      AdcManifestSchema,
-      payload.map(r => Seq(r.kind, r.cell, r.name, r.bytes)),
-    )
-    val parts = fs
-      .listStatus(new org.apache.hadoop.fs.Path(scratch))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    require(parts.length == 1, s"commitAdcGen: expected one manifest part, found ${parts.length}")
-    // Both fences + the refusal-path scratch hygiene live in the shared
-    // protocol ([[AtomicHead.commit]]); this site supplies the chain
-    // listing, its spec'd refusal, and the fence-2 read-back.
-    val target = new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/gen-$gen.parquet")
-    AtomicHead.commit(
-      fs,
-      staged = parts.head.getPath,
-      scratchRoot = new org.apache.hadoop.fs.Path(scratch),
-      scratchIsDir = true,
-      target = target,
-      headNow = () => listAdcGens(fs, dir).lastOption,
-      expectedParent = expectedParent,
-      refuseMoved = headNow =>
-        throw new IllegalArgumentException(
-          s"commitAdcGen: generation head moved from $expectedParent to $headNow while this commit was " +
-            s"built - a concurrent committer published first (ingest racing maintenance, or a restarted " +
-            s"driver's twin). Committing gen $gen from stale refs would silently drop the interleaved " +
-            "generation's files from the chain. Re-read the latest generation's refs and retry."),
-      existsMsg = s"commitAdcGen: generation $gen already exists at $target",
-      renameFailedMsg = s"commitAdcGen: commit move failed for $target",
-      requireCommitWon = () => requireGenCommitWon(spark, dir, gen, token),
-    )
-    gen
-  }
-
-  // The post-commit read-back of fence 2, separated so the spec can
-  // drive the losing side directly (simulating the object-store PUT
-  // overwrite a local-FS test cannot produce through rename).
-  private[graft] def requireGenCommitWon(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      gen: Long,
-      token: String,
-  ): Unit = {
-    val winners = readAdcManifestRefs(spark, dir, gen).collect { case AdcRef("committer", _, t, _) => t }
-    require(
-      winners == Seq(token),
-      s"commitAdcGen: generation $gen at $dir was committed by ANOTHER writer " +
-        s"(its token ${winners.mkString(",")}, ours $token) - on an object store two drivers' PUTs " +
-        "for the same generation silently last-write-win, and this driver lost: its file set is NOT " +
-        "what readers resolve. Re-read the latest generation's refs and retry as the next generation.",
-    )
-  }
+  private def centroidsPathOf(dir: String, refs: Seq[Manifest.Ref]): String =
+    s"$dir/${refs.collectFirst { case Manifest.Ref("centroids", _, name, _) => name }.getOrElse("centroids")}"
 
   /** CONTENT DIFF between two generations of the manifest index — the
-    * audit primitive ([[graft.operators.Dedup.dedupChainDiff]]'s twin on
-    * this artifact): which vector ids did generation `toGen` add or
+    * audit primitive, as [[graft.operators.Dedup.dedupChainDiff]] is for
+    * the dedup index: which vector ids did generation `toGen` add or
     * remove relative to `fromGen`? Returns (op = 'added' | 'removed',
     * vec id as `id`). SET semantics over the residual file sides, with
     * one scoped multiset escape: a re-landed copy of an already-indexed
@@ -1616,13 +1350,9 @@ object IvfIndex {
       fromGen: Long,
       toGen: Long,
   ): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/codes").getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"adcChainDiff: no manifest at $dir - bootstrap with writeAdcManifest")
-    Seq(fromGen, toGen).foreach(g =>
-      require(gens.contains(g), s"adcChainDiff: generation $g not in ${gens.mkString(",")}"))
+    val chain = manifest(spark, dir)
     def refsOf(g: Long): Set[(Int, String)] =
-      codesRefs(readAdcManifestRefs(spark, dir, g)).map(r => (r._1, r._2)).toSet
+      chain.data(chain.refs(chain.resolve("adcChainDiff", Some(g)))).map(r => (r.cell, r.name)).toSet
     val fromRefs = refsOf(fromGen)
     val toRefs = refsOf(toGen)
     // An empty residual side keeps the codes schema via limit(0) over the
@@ -1650,29 +1380,8 @@ object IvfIndex {
     * KNOWS its delta ([[commitAdcBatchToManifest]],
     * [[compactAdcIndexCodesManifest]]).
     */
-  def writeAdcManifest(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val codes = s"$dir/codes"
-    val root = new org.apache.hadoop.fs.Path(codes)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(
-      listAdcGens(fs, dir).isEmpty,
-      s"writeAdcManifest: $dir already has manifest generations - the census bootstrap would " +
-        "re-reference de-referenced files. Incremental gens come from commitAdcBatchToManifest / " +
-        "compactAdcIndexCodesManifest.",
-    )
-    val refs = fs
-      .listStatus(root)
-      .toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .flatMap { d =>
-        val cell = d.getPath.getName.stripPrefix("centroid_id=").toInt
-        fs.listStatus(d.getPath)
-          .toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => AdcRef("codes", cell, f.getPath.getName, f.getLen))
-      }
-    commitAdcGen(spark, fs, dir, 0L, refs :+ AdcRef("centroids", -1, "centroids", 0L), expectedParent = None)
-  }
+  def writeAdcManifest(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
+    manifest(spark, dir).bootstrap("writeAdcManifest", Seq(Manifest.Ref("centroids", -1, "centroids", 0L)))
 
   /** Commit a landed batch ([[appendToAdcIndex]] with `batchId`) into the
     * next generation: previous refs, minus any refs this SAME batch wrote
@@ -1696,31 +1405,8 @@ object IvfIndex {
       dir: String,
       batchId: Long,
       cells: Option[Seq[Int]] = None,
-  ): Long = {
-    val codes = s"$dir/codes"
-    val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"commitAdcBatchToManifest: no manifest at $dir - bootstrap with writeAdcManifest")
-    val prev = readAdcManifestRefs(spark, dir, gens.max)
-    val kept = prev.filterNot(r => r.kind == "codes" && batchIdOfLanding(r.name).contains(batchId))
-    val cellDirs = cells match {
-      case Some(cs) => cs.distinct.sorted.map(c => new org.apache.hadoop.fs.Path(s"$codes/centroid_id=$c"))
-      case None =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(codes))
-          .toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-          .map(_.getPath)
-    }
-    val landed = cellDirs.filter(fs.exists).flatMap { d =>
-      val cell = d.getName.stripPrefix("centroid_id=").toInt
-      fs.listStatus(d)
-        .toSeq
-        .filter(f => f.isFile && batchIdOfLanding(f.getPath.getName).contains(batchId))
-        .map(f => AdcRef("codes", cell, f.getPath.getName, f.getLen))
-    }
-    require(landed.nonEmpty, s"commitAdcBatchToManifest: batch $batchId left no files under $codes")
-    commitAdcGen(spark, fs, dir, gens.max + 1, kept ++ landed, expectedParent = Some(gens.max))
-  }
+  ): Long =
+    manifest(spark, dir).commitBatch("commitAdcBatchToManifest", batchId, cells)
 
   /** [[compactAdcIndexCodes]] in MANIFEST mode: the census comes from the
     * latest generation's refs (pure metadata — no tree listing), the
@@ -1738,8 +1424,9 @@ object IvfIndex {
     * index path whose chain must COVER every batch id this compaction is
     * about to fold —
     * [[graft.operators.Consistency.requireFoldCovered]]'s loud gate,
-    * fired before any rewrite. Folding records the largest folded batch
-    * id as the chain's fold watermark ([[adcFoldWatermark]]) either way.
+    * fired before any rewrite. Folding records every folded batch id in
+    * the chain's folded-id set ([[Manifest.Chain.foldedBatches]]) either
+    * way.
     */
   def compactAdcIndexCodesManifest(
       spark: org.apache.spark.sql.SparkSession,
@@ -1751,12 +1438,11 @@ object IvfIndex {
     require(targetBytes >= 1, s"compactAdcIndexCodesManifest: targetBytes must be positive: $targetBytes")
     import spark.implicits._
     val codes = s"$dir/codes"
-    val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"compactAdcIndexCodesManifest: no manifest at $dir - bootstrap with writeAdcManifest")
-    val allRefs = readAdcManifestRefs(spark, dir, gens.max)
-    val otherRefs = allRefs.filter(_.kind != "codes")
-    val before = codesRefs(allRefs)
+    val chain = manifest(spark, dir)
+    val fs = chain.fs
+    val parent = chain.head("compactAdcIndexCodesManifest")
+    val allRefs = chain.refs(parent)
+    val before = chain.data(allRefs).map(r => (r.cell, r.name, r.bytes))
     // Watermark partition + binning + victim selection + no-watermark
     // refusal are [[planCodesCompaction]]; the victim rewrite + row gate
     // are [[rewriteCompactionVictims]] — both shared verbatim with the
@@ -1765,13 +1451,12 @@ object IvfIndex {
     val (retained, victims) = planCodesCompaction("compactAdcIndexCodesManifest", before, targetBytes, minRetainedBatchId)
     // The batch ids about to LOSE their names: the cross-artifact gate
     // (opt-in) refuses before any rewrite if the dedup chain never
-    // covered one; the fold watermark below records them either way.
+    // covered one; the commit records them in the folded-id set.
     val foldedIds = victims.values.flatten.toSeq
-      .flatMap { case (_, name, _, _) => batchIdOfLanding(name) }
+      .flatMap { case (_, name, _, _) => Manifest.batchIdOfLanding(name) }
     coverageGuard.foreach(dedupPath =>
-      graft.operators.Consistency.requireFoldCovered(spark, "compactAdcIndexCodesManifest", foldedIds,
-        otherIsDedup = true, otherPath = dedupPath))
-    val newGen = gens.max + 1
+      Consistency.requireFoldCovered("compactAdcIndexCodesManifest", foldedIds, Dedup.manifest(spark, dedupPath)))
+    val newGen = parent + 1
     var committedRefs = before
     if (victims.nonEmpty) {
       val victimCells = victims.keys.toSeq.sorted
@@ -1779,7 +1464,7 @@ object IvfIndex {
       // committer (the commit fences' acknowledged world), so no two ops
       // may share a staging path. Crashed scratch is vacuumed by
       // [[cleanupAdcGenerations]] under its scratch grace.
-      val tmp = s"$dir/${scratchName("codes_mcompact_tmp", java.util.UUID.randomUUID().toString)}"
+      val tmp = s"$dir/${Manifest.scratchName("codes_mcompact_tmp", java.util.UUID.randomUUID().toString)}"
       rewriteCompactionVictims(spark, codes, victims, tmp, "compactAdcIndexCodesManifest")
       // Land the bins into the LIVE cell dirs under fresh names. These
       // moves need no atomicity: the files are invisible until the
@@ -1811,23 +1496,11 @@ object IvfIndex {
       committedRefs = before.filter { case (cell, _, _) => !victimSet(cell) } ++
         retained.filter { case (cell, _, _) => victimSet(cell) } ++
         newBinRefs
+      chain.commitCompaction(parent, allRefs,
+        committedRefs.map { case (cell, name, bytes) => Manifest.Ref("codes", cell, name, bytes) }, foldedIds)
     }
-    // A no-op pass (nothing to bin) commits NOTHING — an idempotent
+    // A no-op pass (nothing to bin) committed NOTHING — an idempotent
     // nightly compactor must not grow the generation chain.
-    if (victims.nonEmpty) {
-      // The folded-id SET: prior fold refs carried forward, this commit's
-      // folded ids merged in — one ref PER batch id, never a single max
-      // (see [[adcFoldedBatches]]: `<= max` coverage masked one-sided
-      // batches sitting in a gap below a later fold). The committer token
-      // is re-stamped by commitAdcGen; every other non-codes ref passes
-      // through.
-      val foldSet = (otherRefs.collect { case AdcRef("fold", _, w, _) => w.toLong } ++ foldedIds).distinct.sorted
-      val carried = otherRefs.filterNot(_.kind == "fold") ++
-        foldSet.map(w => AdcRef("fold", -1, w.toString, 0L))
-      commitAdcGen(spark, fs, dir, newGen,
-        committedRefs.map { case (cell, name, bytes) => AdcRef("codes", cell, name, bytes) } ++ carried,
-        expectedParent = Some(gens.max))
-    }
     // The census (from refs, not the tree): per-cell files/bytes before vs
     // after — the same observability row the rename-mode op returns.
     val bAgg = before.groupBy(_._1).map { case (c, l) => c -> (l.size.toLong, l.map(_._3).sum) }
@@ -1841,22 +1514,16 @@ object IvfIndex {
       .toDF("centroid_id", "files_before", "files_after", "bytes_before", "bytes_after")
   }
 
-  /** Sweep DE-REFERENCED files: everything some generation older than the
-    * retained window referenced that no retained generation references.
-    * Files referenced by NO generation are spared when they may have an
-    * owner — in-flight landings (`batch<id>-`, no generation to judge
-    * by) and maintenance files whose embedded generation is AHEAD of the
-    * chain head (an op building its commit right now). Maintenance files
-    * whose generation the head has already passed, yet no generation
-    * references, are CRASHED-OP ORPHANS (bins/repair files landed, the
-    * generation object never committed, and the chain moved on — a
-    * re-run lands fresh names and never reclaims them) and are swept
-    * here, the vacuum step every manifest-pointer lake design pairs with
-    * add-only writers. Old generation objects beyond the window are
-    * removed with their files. `keepGens` is the snapshot-reader grace: a
-    * reader that resolved a generation keeps a consistent file set as
-    * long as its generation stays inside the window. Returns the
-    * deleted-file count.
+  /** Sweep what no live generation of the ANN chain needs — stale
+    * crashed-op scratch, de-referenced codes files, crashed-op orphans
+    * (`m<gen>bin…` / `r<gen>-…` files the head has passed yet nothing
+    * references) and generation objects beyond the `keepGens`
+    * snapshot-reader window ([[Manifest.Chain.cleanup]]) — plus this
+    * layout's own artifact, the centroids VERSIONS a manifest repair
+    * writes: a de-referenced `centroids_g<gen>` dies with its
+    * generations, and a crashed repair's never-referenced one once the
+    * head passes its generation. The bootstrap "centroids" dir is the
+    * save's artifact and is never deleted. Returns the deleted count.
     */
   def cleanupAdcGenerations(
       spark: org.apache.spark.sql.SparkSession,
@@ -1864,101 +1531,28 @@ object IvfIndex {
       keepGens: Int = 2,
       scratchGraceMs: Long = 15L * 60L * 1000L,
   ): Long = {
-    require(keepGens >= 1, s"cleanupAdcGenerations: keepGens must be >= 1: $keepGens")
-    require(scratchGraceMs >= 0, s"cleanupAdcGenerations: scratchGraceMs must be >= 0: $scratchGraceMs")
-    val codes = s"$dir/codes"
-    val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"cleanupAdcGenerations: no manifest at $dir")
-    // Crashed-op scratch dirs (a landing's codes_append_tmp_b<id>, a
-    // commit's manifest_tmp_<token>, a manifest compactor's / repair's
-    // codes_m*_tmp_<uuid> — content that never reached the live tree) are
-    // swept here, the mirror of what selfHealCellSwaps does at every
-    // rename-mode maintenance entry. AGE-GATED: manifest-mode ingest
-    // commits legitimately race maintenance (the commit fences'
-    // acknowledged world), so a scratch younger than `scratchGraceMs` may
-    // be an op staging RIGHT NOW and is spared; a crashed op's scratch
-    // ages past any real staging window and is reclaimed on the next
-    // cleanup. Age comes from the WALL-CLOCK STAMP the scratch name
-    // embeds ([[scratchName]]) — filesystem mtime is the fallback for
-    // stamp-less legacy names only, because object stores report epoch-0
-    // mtimes for directory entries, which would void the grace entirely.
-    val scratchPrefixes =
-      Seq("codes_append_tmp", "manifest_tmp", "codes_mcompact_tmp", "codes_mrepair_tmp")
-    val staleBefore = System.currentTimeMillis() - scratchGraceMs
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(dirPath))
-      fs.listStatus(dirPath)
-        .filter(s =>
-          s.isDirectory &&
-            scratchPrefixes.exists(s.getPath.getName.startsWith) &&
-            scratchIsStale(s, staleBefore))
-        .foreach(s => fs.delete(s.getPath, true))
-    val (old, kept) = gens.splitAt(math.max(0, gens.size - keepGens))
-    val keptAll = kept.flatMap(g => readAdcManifestRefs(spark, dir, g))
-    val oldAll = old.flatMap(g => readAdcManifestRefs(spark, dir, g))
-    val keptRefs: Set[(Int, String)] = codesRefs(keptAll).map(r => (r._1, r._2)).toSet
-    val deadRefs: Set[(Int, String)] = codesRefs(oldAll).map(r => (r._1, r._2)).toSet -- keptRefs
-    var deleted = 0L
-    deadRefs.toSeq.sorted.foreach { case (cell, name) =>
-      val p = new org.apache.hadoop.fs.Path(s"$codes/centroid_id=$cell/$name")
-      if (fs.exists(p) && fs.delete(p, false)) deleted += 1
-    }
-    // De-referenced centroids VERSIONS (repair-written dirs) die with
-    // their generations; the bootstrap "centroids" dir is never deleted
-    // even when de-referenced — it is the save's artifact, not ours.
-    val keptCents = keptAll.collect { case AdcRef("centroids", _, name, _) => name }.toSet
-    val deadCents = oldAll.collect { case AdcRef("centroids", _, name, _) => name }.toSet -- keptCents - "centroids"
-    deadCents.toSeq.sorted.foreach { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      if (fs.exists(p) && fs.delete(p, true)) deleted += 1
-    }
-    // ORPHAN SWEEP — never-referenced files a CRASHED maintenance op left
-    // in live cell dirs (bins/repair files landed, generation object
-    // never committed; or a committer that LOST a commit race and did not
-    // retry). "A re-run supersedes" heals the CONTENT but lands fresh
-    // UUID names, so without this sweep the orphans are permanently
-    // unreclaimable — an unbounded leak on exactly the object-store path
-    // this mode exists for. The discriminator is the embedded generation:
-    // a maintenance file whose gen is at or below the CURRENT head yet
-    // referenced by NO generation on disk lost its commit (the head
-    // passed it), while gen > head may be an op in flight right now —
-    // spared, same rule the never-referenced contract states for
-    // landings. Plain `batch<id>-` landings carry no gen and are never
-    // candidates.
-    val maxGen = gens.max
-    val orphanGen = raw"(?:m(\d+)bin|r(\d+)-).*".r
-    val allRefNames: Set[(Int, String)] = keptRefs ++ codesRefs(oldAll).map(r => (r._1, r._2))
-    fs.listStatus(new org.apache.hadoop.fs.Path(codes))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .foreach { d =>
-        val cell = d.getPath.getName.stripPrefix("centroid_id=").toInt
-        fs.listStatus(d.getPath).filter(_.isFile).foreach { f =>
-          val name = f.getPath.getName
-          val g = name match {
-            case orphanGen(mg, rg) => Option(mg).orElse(Option(rg)).map(_.toLong)
-            case _ => None
-          }
-          if (g.exists(_ <= maxGen) && !allRefNames((cell, name)) && fs.delete(f.getPath, false))
-            deleted += 1
-        }
-      }
-    // Same sweep for a crashed repair's never-referenced centroids
-    // version (its deterministic name only self-supersedes when NO other
-    // commit interleaved before the re-run).
+    val chain = manifest(spark, dir)
+    val fs = chain.fs
+    def cents(refs: Seq[Manifest.Ref]) = refs.collect { case Manifest.Ref("centroids", _, name, _) => name }.toSet
     val orphanCents = raw"centroids_g(\d+)".r
-    val refCents = (keptAll ++ oldAll).collect { case AdcRef("centroids", _, n, _) => n }.toSet
-    fs.listStatus(dirPath)
-      .filter(_.isDirectory)
-      .foreach { d =>
+    chain.cleanup("cleanupAdcGenerations", keepGens, scratchGraceMs, (keptAll, oldAll, head) => {
+      var deleted = 0L
+      (cents(oldAll) -- cents(keptAll) - "centroids").toSeq.sorted.foreach { name =>
+        val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+        if (fs.exists(p) && fs.delete(p, true)) deleted += 1
+      }
+      // A crashed repair's deterministic name only self-supersedes when
+      // NO other commit interleaved before the re-run.
+      val referenced = cents(keptAll ++ oldAll)
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).filter(_.isDirectory).foreach { d =>
         d.getPath.getName match {
-          case orphanCents(g) if g.toLong <= maxGen && !refCents(d.getPath.getName) =>
+          case orphanCents(g) if g.toLong <= head && !referenced(d.getPath.getName) =>
             if (fs.delete(d.getPath, true)) deleted += 1
           case _ => ()
         }
       }
-    old.foreach(g => fs.delete(new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/gen-$g.parquet"), false))
-    deleted
+      deleted
+    })
   }
 
   /** [[repairDriftedIndexCells]] in MANIFEST mode — and the version of
@@ -2000,12 +1594,12 @@ object IvfIndex {
       return Seq.empty[(Int, Long, Long)].toDF("centroid_id", "n_members", "centroid_shift_q")
     }
     val codes = s"$dir/codes"
-    val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"repairDriftedIndexCellsManifest: no manifest at $dir - bootstrap with writeAdcManifest")
-    val refs = readAdcManifestRefs(spark, dir, gens.max)
+    val chain = manifest(spark, dir)
+    val fs = chain.fs
+    val parent = chain.head("repairDriftedIndexCellsManifest")
+    val refs = chain.refs(parent)
     val flaggedSet = flaggedCells.distinct.sorted
-    val flaggedRefs = codesRefs(refs).filter { case (cell, _, _) => flaggedSet.contains(cell) }
+    val flaggedRefs = chain.data(refs).filter(r => flaggedSet.contains(r.cell))
     require(flaggedRefs.nonEmpty, s"repairDriftedIndexCellsManifest: no referenced files in cells $flaggedSet")
     // The replay fence — over the whole TREE (not just the flagged refs,
     // and not the refs at all): a replay after this repair re-assigns
@@ -2027,16 +1621,16 @@ object IvfIndex {
     // Membership of record = the GENERATION's referenced files — never a
     // tree listing (de-referenced files would double members), never a
     // re-assignment (repairs must compose).
-    val memberFiles = flaggedRefs.map { case (cell, name, _) => s"$codes/centroid_id=$cell/$name" }
+    val memberFiles = flaggedRefs.map(chain.path)
     val stored = Lineage.truncate(
       spark.read
         .option("basePath", codes)
         .parquet(memberFiles: _*)
         .select(col("neighbor_id").as(idCol), col("centroid_id"))
     )
-    val newGen = gens.max + 1
+    val newGen = parent + 1
     // UUID-unique for the same reason as the manifest compactor's scratch.
-    val scratch = s"$dir/${scratchName("codes_mrepair_tmp", java.util.UUID.randomUUID().toString)}"
+    val scratch = s"$dir/${Manifest.scratchName("codes_mrepair_tmp", java.util.UUID.randomUUID().toString)}"
     // Member join, completeness gate, per-cell mean, frozen-codebook
     // re-encode and the row-count gate are [[repairEncodeMembers]],
     // shared verbatim with the rename-mode repair — only the COMMIT
@@ -2059,7 +1653,7 @@ object IvfIndex {
           .map { f =>
             val target = new org.apache.hadoop.fs.Path(live, s"r$newGen-${f.getPath.getName}")
             require(fs.rename(f.getPath, target), s"repairDriftedIndexCellsManifest: land failed for $target")
-            AdcRef("codes", cell, target.getName, fs.getFileStatus(target).getLen)
+            Manifest.Ref("codes", cell, target.getName, fs.getFileStatus(target).getLen)
           }
       }
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
@@ -2076,8 +1670,8 @@ object IvfIndex {
     // repair cannot have.
     val committed = refs.filterNot(r =>
       (r.kind == "codes" && flaggedSet.contains(r.cell)) || r.kind == "centroids"
-    ) ++ newCodeRefs :+ AdcRef("centroids", -1, centsName, 0L)
-    commitAdcGen(spark, fs, dir, newGen, committed, expectedParent = Some(gens.max))
+    ) ++ newCodeRefs :+ Manifest.Ref("centroids", -1, centsName, 0L)
+    chain.commit(newGen, committed, expectedParent = Some(parent))
     repairCensus(members, newCents, centroids)
   }
 
@@ -2091,8 +1685,7 @@ object IvfIndex {
       sweptFiles: Long,
   )
 
-  /** The ANN chain's STANDING-MAINTENANCE rule — the ADC twin of
-    * [[graft.operators.Dedup.refreshDedupServe]]: turn the chain's own
+  /** The ANN chain's STANDING-MAINTENANCE rule: turn the chain's own
     * metadata into this cadence tick's maintenance decision, as the one
     * call a nightly pipeline makes after its ingest commits.
     *
@@ -2110,15 +1703,11 @@ object IvfIndex {
     *    pipeline runs on its own corpus slices; the maintenance tick
     *    actuates a decision, it does not make one.
     *  - SWEEP last ([[cleanupAdcGenerations]]), after every commit this
-    *    tick makes, so the reference-set cleanup sees the final chain.
-    *    The sweep's retention is `keepGens` PLUS the generations this
-    *    tick itself committed: a tick that compacts AND repairs adds two
-    *    generations, and a plain `keepGens` would let the tick consume
-    *    the whole reader grace with its own commits — retiring the
-    *    generation that was head at tick ENTRY while a concurrent
-    *    snapshot reader is still scanning it. Under the adjusted
-    *    retention the pre-tick head always survives the tick; the
-    *    superseded world is retired by the NEXT tick, after the grace.
+    *    tick makes, so the reference-set cleanup sees the final chain,
+    *    with retention widened by the generations this tick itself
+    *    committed ([[Manifest.Chain.keepFor]]): a tick that compacts AND
+    *    repairs adds two generations and must not retire the pre-tick
+    *    head a concurrent snapshot reader may still be scanning.
     *
     * Every lever keeps its own fences (watermark refusals, the two
     * commit fences, the snapshot-reader grace) — this operator adds the
@@ -2151,18 +1740,16 @@ object IvfIndex {
       coverageGuard: Option[String] = None,
   ): AdcMaintenanceReport = {
     require(maxFilesPerCell >= 1, s"maintainAdcIndexManifest: maxFilesPerCell must be >= 1: $maxFilesPerCell")
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"maintainAdcIndexManifest: no manifest at $dir - bootstrap with writeAdcManifest")
-    val headAtEntry = gens.max
-    val census = codesRefs(readAdcManifestRefs(spark, dir, headAtEntry))
-    val maxCellFiles = census.groupBy(_._1).map(_._2.size.toLong).maxOption.getOrElse(0L)
+    val chain = manifest(spark, dir)
+    val headAtEntry = chain.head("maintainAdcIndexManifest")
+    val census = chain.data(chain.refs(headAtEntry))
+    val maxCellFiles = census.groupBy(_.cell).map(_._2.size.toLong).maxOption.getOrElse(0L)
     var compacted = false
     if (maxCellFiles >= maxFilesPerCell) {
       compactAdcIndexCodesManifest(spark, dir, targetBytes, minRetainedBatchId, coverageGuard): Unit
       // Outcome, not admission: the compactor's nothing-to-bin pass
       // commits no generation even when the census admitted it.
-      compacted = listAdcGens(fs, dir).max > headAtEntry
+      compacted = chain.gens.max > headAtEntry
     }
     val repairedCells =
       if (flaggedCells.isEmpty) Seq.empty[Int]
@@ -2173,11 +1760,7 @@ object IvfIndex {
           .map(_.getInt(0))
           .toSeq
           .sorted
-    // Retention is widened by this tick's OWN commits so a
-    // compact-and-repair tick cannot spend the reader grace on itself:
-    // the pre-tick head always survives the tick it was superseded in.
-    val commitsThisTick = (listAdcGens(fs, dir).max - headAtEntry).toInt
-    val swept = cleanupAdcGenerations(spark, dir, keepGens + commitsThisTick)
+    val swept = cleanupAdcGenerations(spark, dir, chain.keepFor(keepGens, headAtEntry))
     AdcMaintenanceReport(maxCellFiles, compacted, repairedCells, swept)
   }
 
@@ -2203,17 +1786,11 @@ object IvfIndex {
       k: Int,
       gen: Option[Long] = None,
   ): DataFrame = {
-    val codes = s"$dir/codes"
-    val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = listAdcGens(fs, dir)
-    require(gens.nonEmpty, s"adcTopKFromSnapshot: no manifest at $dir - bootstrap with writeAdcManifest")
-    val g = gen.getOrElse(gens.max)
-    require(gens.contains(g), s"adcTopKFromSnapshot: generation $g not in ${gens.mkString(",")}")
-    val refs = readAdcManifestRefs(spark, dir, g)
-    val files = codesRefs(refs).map { case (cell, name, _) => s"$codes/centroid_id=$cell/$name" }
+    val chain = manifest(spark, dir)
+    val refs = chain.refs(chain.resolve("adcTopKFromSnapshot", gen))
     val encoded = spark.read
-      .option("basePath", codes)
-      .parquet(files: _*)
+      .option("basePath", s"$dir/codes")
+      .parquet(chain.data(refs).map(chain.path): _*)
       .select(col("neighbor_id"), col("centroid_id"), col("codes"))
     adcTopKFromIndexOn(spark, dir, encoded, centroidsPathOf(dir, refs), corpus, queries, idCol, vecCol,
       m, nprobe, candK, k)
@@ -2244,8 +1821,7 @@ object IvfIndex {
     // would serve those rows TWICE (and probe against stale centroids
     // after a manifest repair). Same refusal rule as every rename-mode
     // op: resolve manifest indexes through [[adcTopKFromSnapshot]].
-    val fsg = new org.apache.hadoop.fs.Path(s"$dir/codes").getFileSystem(spark.sessionState.newHadoopConf())
-    requireNoManifest(fsg, dir, "adcTopKFromIndex")
+    manifest(spark, dir).requireAbsent("adcTopKFromIndex")
     val encoded = spark.read
       .parquet(s"$dir/codes")
       .select(col("neighbor_id"), col("centroid_id"), col("codes"))
@@ -2927,7 +2503,7 @@ object IvfIndex {
     }
     val codes = s"$dir/codes"
     val fs = new org.apache.hadoop.fs.Path(codes).getFileSystem(spark.sessionState.newHadoopConf())
-    requireNoManifest(fs, dir, "repairDriftedIndexCells")
+    manifest(spark, dir).requireAbsent("repairDriftedIndexCells")
     selfHealCellSwaps(fs, dir)
     // The replay fence (see Scaladoc and [[unfencedLandingsInTree]]) —
     // over EVERY cell, not just the flagged ones: a replay after this

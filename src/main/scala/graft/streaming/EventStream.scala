@@ -502,8 +502,7 @@ object EventStream {
     val ev = eventsDf.select(colsInOrder.map(col): _*)
     val half = ev.filter(col("event_id") % 2 === 0)
     val rest = ev.filter(col("event_id") % 2 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_$queryName")
-    writeOrderedBatches(dir, Seq(half.coalesce(1), rest.coalesce(1)))
+    val dir = writeOrderedBatches(queryName, Seq(half.coalesce(1), rest.coalesce(1)))
     val stream = spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", 1)
@@ -562,9 +561,8 @@ object EventStream {
         .toDF()
         .select(colsInOrder.map(col): _*)
         .withColumn("value", col("value").cast(dec))
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_$queryName")
-    writeOrderedBatches(
-      dir,
+    val dir = writeOrderedBatches(
+      queryName,
       Seq(recent.coalesce(1), sentinel(-1L, 3), late.coalesce(1), sentinel(-2L, 4)),
     )
     val stream = spark.readStream
@@ -653,8 +651,7 @@ object EventStream {
       Seq(Event(-days.toLong, new Timestamp(maxTs.getTime + days * dayMs), -1L, "sentinel", 0.0))
         .toDF()
         .select(colsInOrder.map(col): _*)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_$queryName")
-    writeOrderedBatches(dir, Seq(ev.coalesce(1), sentinel(1), sentinel(2)))
+    val dir = writeOrderedBatches(queryName, Seq(ev.coalesce(1), sentinel(1), sentinel(2)))
     val stream = spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", 1)
@@ -743,9 +740,8 @@ object EventStream {
     def sentinel(days: Int) =
       Seq(Event(-days.toLong, new Timestamp(maxTs.getTime + days * dayMs), -1L, "sentinel", 0.0))
         .toDF(colsInOrder: _*)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_stream_$queryName")
-    writeOrderedBatches(
-      dir,
+    val dir = writeOrderedBatches(
+      queryName,
       Seq(lastPerUser.coalesce(1), rest.coalesce(1), sentinel(spanDays + 2), sentinel(spanDays + 3)),
     )
     val stream = spark.readStream
@@ -796,18 +792,20 @@ object EventStream {
     spark.table(queryName)
   }
 
-  /** Write each DataFrame as one parquet file `<i>.parquet` under `dir` with
+  /** Write each DataFrame as one parquet file `<i>.parquet` under a fresh
+    * `graft_stream_<name>` temp dir ([[graft.Harness.tempDir]]), with
     * STRICTLY increasing mtimes — file sources pick oldest-first, so this
     * pins the microbatch order the one-shot harnesses depend on. A silent
     * mtime failure (some filesystems/containers) would let the sentinel
     * batch be read before the events batch, advancing the watermark and
     * dropping every real event — hence the loud `require`, not a boolean
-    * discard. Scratch dirs are removed immediately; the batch dir is
-    * registered for JVM-exit cleanup.
+    * discard. Each batch stages in a hidden `_scratch<i>` subdir that is
+    * removed right after its file moves out. Returns the dir.
     */
-  private def writeOrderedBatches(dir: java.nio.file.Path, batches: Seq[DataFrame]): Unit = {
+  private def writeOrderedBatches(name: String, batches: Seq[DataFrame]): java.nio.file.Path = {
+    val dir = graft.Harness.tempDir(s"graft_stream_$name")
     batches.zipWithIndex.foreach { case (df, i) =>
-      val scratch = java.nio.file.Files.createTempDirectory(s"${dir.getFileName}_scratch$i")
+      val scratch = dir.resolve(s"_scratch$i")
       df.write.mode("overwrite").parquet(scratch.toString)
       val part = scratch.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
       val dst = dir.resolve(s"$i.parquet")
@@ -819,25 +817,12 @@ object EventStream {
       )
       deleteRecursively(scratch.toFile)
     }
-    registerDeleteOnExit(dir.toFile)
+    dir
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
-  }
-
-  /** deleteOnExit runs in REVERSE registration order, so registering the dir
-    * before its (current and future-at-exit) children deletes files first,
-    * then the emptied dir. `private[graft]`: every harness temp path
-    * (streaming scratch here, the q252 bloom-lake round trip) registers
-    * through this one helper so none of them leak across repeated runs.
-    */
-  private[graft] def registerDeleteOnExit(dir: java.io.File): Unit = {
-    dir.deleteOnExit()
-    Option(dir.listFiles()).foreach(_.foreach { f =>
-      if (f.isDirectory) registerDeleteOnExit(f) else f.deleteOnExit()
-    })
   }
 
   /** Batch-parity runner for a STATELESS transform (the quality-gate /
@@ -1240,27 +1225,16 @@ object EventStream {
     // batch data) prefers tmpfs: it is not what a production stream
     // reads, and disk-backed /tmp made the streaming queries' bench
     // numbers measure the machine's page cache instead of the plan
-    // (observed 2-4× run-to-run spread). `spark.graft.streamTempDir`
-    // overrides; fallback is the JVM temp dir.
-    val base = df.sparkSession.conf
-      .getOption("spark.graft.streamTempDir")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        // auto-pick tmpfs only when it is PLAUSIBLY big enough — a default
-        // Docker /dev/shm is 64 MB and would fail mid-write where /tmp
-        // succeeds, so small tmpfs falls through to the JVM temp dir
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val bigEnough = java.nio.file.Files.isWritable(shm) &&
-          (try java.nio.file.Files.getFileStore(shm).getUsableSpace >= (8L << 30)
-           catch { case _: java.io.IOException => false })
-        if (bigEnough) Some(shm) else None
-      }
-    val dir = base match {
-      case Some(b) => java.nio.file.Files.createTempDirectory(b, s"graft_stream_$name")
-      case None => java.nio.file.Files.createTempDirectory(s"graft_stream_$name")
-    }
+    // (observed 2-4× run-to-run spread). tmpfs is picked only when it is
+    // PLAUSIBLY big enough — a default Docker /dev/shm is 64 MB and would
+    // fail mid-write where /tmp succeeds, so small tmpfs falls through to
+    // the JVM temp dir.
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val bigEnough = java.nio.file.Files.isWritable(shm) &&
+      (try java.nio.file.Files.getFileStore(shm).getUsableSpace >= (8L << 30)
+       catch { case _: java.io.IOException => false })
+    val dir = graft.Harness.tempDir(s"graft_stream_$name", if (bigEnough) Some(shm) else None)
     (if (singleFile) df.coalesce(1) else df).write.mode("overwrite").parquet(dir.toString)
-    registerDeleteOnExit(dir.toFile)
     dir.toString
   }
 }

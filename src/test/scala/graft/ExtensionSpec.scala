@@ -432,7 +432,6 @@ class ExtensionSpec extends SparkSpec {
     IvfIndex.writeAdcManifest(spark, dir) // gen 0
     val cells = IvfIndex.appendToAdcIndex(spark, dir, inc, "vec_id", "embedding", m = 4, batchId = Some(0L))
     IvfIndex.commitAdcBatchToManifest(spark, dir, 0L, Some(cells)) // gen 1
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def serve() = IvfIndex
       .adcTopKFromSnapshot(spark, dir, emb, queries, "vec_id", "embedding",
@@ -444,7 +443,7 @@ class ExtensionSpec extends SparkSpec {
     val idle = IvfIndex.maintainAdcIndexManifest(spark, dir, emb, "vec_id", "embedding", m = 4,
       minRetainedBatchId = Some(1L), maxFilesPerCell = 1000)
     assert(!idle.compacted && idle.repairedCells.isEmpty)
-    assert(IvfIndex.listAdcGens(fs, dir) == Seq(0L, 1L), "an idle tick must not grow the chain")
+    assert(IvfIndex.manifest(spark, dir).gens == Seq(0L, 1L), "an idle tick must not grow the chain")
     assert(serve() == before)
     // OVER-BOUND tick (no drift flagged): compaction runs and commits,
     // but the tick's own sweep SPARES the pre-tick head - retention
@@ -455,7 +454,7 @@ class ExtensionSpec extends SparkSpec {
       minRetainedBatchId = Some(1L), maxFilesPerCell = 2, keepGens = 1)
     assert(tick.compacted && tick.repairedCells.isEmpty)
     assert(tick.maxCellFilesBefore >= 2L)
-    assert(IvfIndex.listAdcGens(fs, dir) == Seq(1L, 2L),
+    assert(IvfIndex.manifest(spark, dir).gens == Seq(1L, 2L),
       "a committing tick must keep the pre-tick head readable (keepGens counts beyond its own commits)")
     assert(serve() == before, "a no-drift maintenance tick must be content-invisible")
     // The NEXT tick (idle) retires the superseded world: grace consumed,
@@ -463,7 +462,7 @@ class ExtensionSpec extends SparkSpec {
     val next = IvfIndex.maintainAdcIndexManifest(spark, dir, emb, "vec_id", "embedding", m = 4,
       minRetainedBatchId = Some(1L), maxFilesPerCell = 1000, keepGens = 1)
     assert(!next.compacted && next.sweptFiles > 0L, s"the next tick reclaims the superseded files: $next")
-    assert(IvfIndex.listAdcGens(fs, dir) == Seq(2L))
+    assert(IvfIndex.manifest(spark, dir).gens == Seq(2L))
     assert(serve() == before)
   }
 
@@ -554,7 +553,7 @@ class ExtensionSpec extends SparkSpec {
     val fsH = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldStamped = new org.apache.hadoop.fs.Path(s"$dir/manifest_tmp_ts1000_crashed")
     fsH.mkdirs(oldStamped)
-    val freshStamped = new org.apache.hadoop.fs.Path(s"$dir/${IvfIndex.scratchName("manifest_tmp", "staging-now")}")
+    val freshStamped = new org.apache.hadoop.fs.Path(s"$dir/${graft.operators.Manifest.scratchName("manifest_tmp", "staging-now")}")
     fsH.mkdirs(freshStamped)
     fsH.setTimes(freshStamped, 0L, 0L)
     IvfIndex.cleanupAdcGenerations(spark, dir, keepGens = 1)
@@ -565,9 +564,9 @@ class ExtensionSpec extends SparkSpec {
     // no suffix contains one today, but a future suffix that did would —
     // under a greedy parse — misdate a live staging dir and let the sweep
     // reclaim it mid-staging.
-    assert(IvfIndex.scratchBornAt("manifest_tmp_ts5000_b_ts1_x").contains(5000L),
+    assert(graft.operators.Manifest.scratchBornAt("manifest_tmp_ts5000_b_ts1_x").contains(5000L),
       "the name stamp is the first _ts token, never a later suffix token")
-    val trickySuffix = new org.apache.hadoop.fs.Path(s"$dir/${IvfIndex.scratchName("manifest_tmp", "b_ts1_x")}")
+    val trickySuffix = new org.apache.hadoop.fs.Path(s"$dir/${graft.operators.Manifest.scratchName("manifest_tmp", "b_ts1_x")}")
     fsH.mkdirs(trickySuffix)
     IvfIndex.cleanupAdcGenerations(spark, dir, keepGens = 1)
     assert(fsH.exists(trickySuffix), "a fresh scratch with an old-looking _ts token in its SUFFIX is spared")
@@ -678,40 +677,102 @@ class ExtensionSpec extends SparkSpec {
     assert(serveSnap(None) == serveAfter)
   }
 
-  test("commitAdcGen: a stale-parent committer refuses loudly; a PUT-overwritten commit is detected") {
-    import graft.operators.IvfIndex
-    val dir = SparkSpec.tempDir("graft_spec_commitguard").toString
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val refs = Seq(IvfIndex.AdcRef("codes", 0, "part-spec.parquet", 1L))
-    IvfIndex.commitAdcGen(spark, fs, dir, 0L, refs, expectedParent = None)
-    IvfIndex.commitAdcGen(spark, fs, dir, 1L, refs, expectedParent = Some(0L))
-    // the LOST-UPDATE interleaving: maintenance read gen 0's refs, ingest
-    // committed gen 1 meanwhile — publishing gen 2 from gen-0 refs would
-    // silently drop gen 1's files from the chain, so the commit refuses
-    // BEFORE touching the chain
-    val ex = intercept[IllegalArgumentException] {
-      IvfIndex.commitAdcGen(spark, fs, dir, 2L, refs, expectedParent = Some(0L))
+  test("manifest chain commit: a stale-parent committer refuses loudly and a PUT-overwritten commit is detected, on both layouts") {
+    import graft.operators.{IvfIndex, Manifest}
+    // (the chain, its commit scratch prefix, a data ref's cell) per layout
+    val layouts = Seq(
+      (Dedup.manifest(spark, SparkSpec.tempDir("graft_spec_commitguard_dedup").toString), "_manifest_tmp", -1),
+      (IvfIndex.manifest(spark, SparkSpec.tempDir("graft_spec_commitguard_ann").toString), "manifest_tmp", 0),
+    )
+    layouts.foreach { case (chain, scratchPrefix, cell) =>
+      val name = chain.layout.name
+      val refs = Seq(Manifest.Ref(chain.layout.dataKind, cell, "part-spec.parquet", 1L))
+      chain.commit(0L, refs, expectedParent = None)
+      chain.commit(1L, refs, expectedParent = Some(0L))
+      // the LOST-UPDATE interleaving (fence 1): maintenance read gen 0's
+      // refs, ingest committed gen 1 meanwhile — publishing gen 2 from
+      // gen-0 refs would silently drop gen 1's files from the chain, so
+      // the commit refuses BEFORE touching the chain
+      val ex = intercept[IllegalArgumentException](chain.commit(2L, refs, expectedParent = Some(0L)))
+      assert(ex.getMessage.contains("head moved"), s"$name: ${ex.getMessage}")
+      assert(chain.gens == Seq(0L, 1L), s"$name: a refused commit must leave the chain untouched")
+      // the restarted-driver twin racing for the SAME generation: the
+      // loser sees the head moved past its parent — refused, untouched
+      val ex2 = intercept[IllegalArgumentException](chain.commit(1L, refs, expectedParent = Some(0L)))
+      assert(ex2.getMessage.contains("head moved"), s"$name: ${ex2.getMessage}")
+      assert(chain.gens == Seq(0L, 1L), name)
+      // the PUT-overwrite fence (fence 2): on an object store both twins
+      // can pass fence 1 and PUT gen-N, last write silently winning — the
+      // read-back must then tell the loser its world is NOT what readers
+      // resolve (simulated by verifying gen 1 against a token that is not
+      // the winner's)
+      val ex3 = intercept[IllegalArgumentException](chain.requireCommitWon(1L, "not-the-winning-token"))
+      assert(ex3.getMessage.contains("ANOTHER writer"), s"$name: ${ex3.getMessage}")
+      assert(!chain.fs.listStatus(new org.apache.hadoop.fs.Path(chain.root))
+        .exists(_.getPath.getName.startsWith(scratchPrefix)),
+        s"$name: a refused commit must leave no staged scratch behind (the shared head-commit protocol's hygiene rule)")
     }
-    assert(ex.getMessage.contains("head moved"), ex.getMessage)
-    assert(IvfIndex.listAdcGens(fs, dir) == Seq(0L, 1L), "a refused commit must leave the chain untouched")
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dir)).exists(_.getPath.getName.startsWith("manifest_tmp")),
-      "a refused commit must leave no staged scratch behind (the shared head-commit protocol's hygiene rule)")
-    // the restarted-driver twin racing for the SAME generation: the loser
-    // sees the head moved past its parent — refused, chain untouched
-    val ex2 = intercept[IllegalArgumentException] {
-      IvfIndex.commitAdcGen(spark, fs, dir, 1L, refs, expectedParent = Some(0L))
+  }
+
+  test("manifest format: parent-schema generations read back through both chains; chain-written footers keep that schema") {
+    import graft.operators.{IvfIndex, Manifest, MetaIO}
+    import Manifest.Ref
+    val conf = spark.sparkContext.hadoopConfiguration
+    // The generation objects' parquet schemas as the parent wrote them —
+    // the on-disk format both chains must keep reading and writing.
+    val dedupSchema =
+      """message spark_schema {
+        |  optional binary kind (UTF8);
+        |  optional binary name (UTF8);
+        |  optional int64 bytes;
+        |}""".stripMargin
+    val adcSchema =
+      """message spark_schema {
+        |  optional binary kind (UTF8);
+        |  optional int32 centroid_id;
+        |  optional binary name (UTF8);
+        |  optional int64 bytes;
+        |}""".stripMargin
+    def footer(file: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader
+        .open(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+      try r.getFooter.getFileMetaData.getSchema
+      finally r.close()
     }
-    assert(ex2.getMessage.contains("head moved"), ex2.getMessage)
-    assert(IvfIndex.listAdcGens(fs, dir) == Seq(0L, 1L))
-    // the PUT-overwrite fence (fence 2): on an object store both twins can
-    // pass fence 1 and PUT gen-N, last write silently winning — the
-    // read-back must then tell the loser its world is NOT what readers
-    // resolve (simulated by verifying gen 1 against a token that is not
-    // the winner's)
-    val ex3 = intercept[IllegalArgumentException] {
-      IvfIndex.requireGenCommitWon(spark, dir, 1L, "not-the-winning-token")
+    val dedupDir = SparkSpec.tempDir("graft_spec_fmt_dedup").toString
+    val annDir = SparkSpec.tempDir("graft_spec_fmt_ann").toString
+    val cases = Seq(
+      (Dedup.manifest(spark, dedupDir), "_manifest", dedupSchema,
+        Seq(Seq("sig", "part-0.parquet", 10L), Seq("sig", "batch3-p.parquet", 20L), Seq("fold", "1", 0L),
+          Seq("fold", "2", 0L), Seq("committer", "tok", 0L)),
+        Seq(Ref("sig", -1, "part-0.parquet", 10L), Ref("sig", -1, "batch3-p.parquet", 20L), Ref("fold", -1, "1", 0L),
+          Ref("fold", -1, "2", 0L), Ref("committer", -1, "tok", 0L)),
+        Seq(s"$dedupDir/part-0.parquet", s"$dedupDir/batch3-p.parquet")),
+      (IvfIndex.manifest(spark, annDir), "manifest", adcSchema,
+        Seq(Seq("codes", 0, "part-0.parquet", 10L), Seq("codes", 3, "batch3-p.parquet", 20L),
+          Seq("centroids", -1, "centroids", 0L), Seq("fold", -1, "1", 0L), Seq("fold", -1, "2", 0L),
+          Seq("committer", -1, "tok", 0L)),
+        Seq(Ref("codes", 0, "part-0.parquet", 10L), Ref("codes", 3, "batch3-p.parquet", 20L),
+          Ref("centroids", -1, "centroids", 0L), Ref("fold", -1, "1", 0L), Ref("fold", -1, "2", 0L),
+          Ref("committer", -1, "tok", 0L)),
+        Seq(s"$annDir/codes/centroid_id=0/part-0.parquet", s"$annDir/codes/centroid_id=3/batch3-p.parquet")),
+    )
+    cases.foreach { case (chain, manifestDir, schema, rows, refs, dataPaths) =>
+      val name = chain.layout.name
+      MetaIO.writeRows(conf, s"${chain.root}/$manifestDir/gen-0.parquet", schema, rows)
+      assert(chain.gens == Seq(0L), name)
+      assert(chain.refs(0L) == refs, name)
+      assert(chain.data(chain.refs(0L)).map(chain.path) == dataPaths, name)
+      assert(chain.foldedBatches == Set(1L, 2L) && chain.foldWatermark.contains(2L), name)
+      // a compaction-shaped commit carries the fold set forward and
+      // keeps the layout's other rows; its footer is the literal schema
+      chain.commitCompaction(0L, chain.refs(0L), chain.data(chain.refs(0L)).take(1), foldedIds = Seq(3L))
+      assert(chain.foldedBatches == Set(1L, 2L, 3L), name)
+      assert(chain.refs(1L).filterNot(r => r.kind == "committer" || r.kind == "fold") ==
+        refs.filterNot(r => r.kind == "committer" || r.kind == "fold" || r.name == "batch3-p.parquet"), name)
+      assert(footer(s"${chain.root}/$manifestDir/gen-1.parquet") ==
+        org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema), name)
     }
-    assert(ex3.getMessage.contains("ANOTHER writer"), ex3.getMessage)
   }
 
   test("cross-artifact coverage: a one-side crash is detected loudly; re-landing the missing batch heals it") {
@@ -782,13 +843,12 @@ class ExtensionSpec extends SparkSpec {
     IvfIndex.saveAdcIndex(annBase, "vec_id", "embedding", centroids,
       m = 4, subDim = 16, pqNlist = 4, pqIters = 1, dir = annDir)
     IvfIndex.writeAdcManifest(spark, annDir) // ann gen 0
-    val fs = new org.apache.hadoop.fs.Path(dedupPath).getFileSystem(spark.sessionState.newHadoopConf())
     // THE DIVERGENT STATE: batch 0 committed into the dedup chain only
     // (the between-commits crash window)
     Dedup.appendDedupIndex(
       Dedup.buildDedupIndex(docs.filter($"doc_id" > 30), "doc_id", "text"), dedupPath, batchId = Some(0L))
     Dedup.commitDedupBatchToManifest(spark, dedupPath, 0L)
-    val gensBefore = Dedup.listDedupGens(fs, dedupPath)
+    val gensBefore = Dedup.manifest(spark, dedupPath).gens
     // A coverage-GATED compaction whose watermark would fold batch 0
     // refuses loudly: folding would bin the landing's name away and make
     // the divergence permanently unobservable to every census
@@ -798,9 +858,9 @@ class ExtensionSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("refusing to fold") && ex.getMessage.contains("batch(es) 0") &&
       ex.getMessage.contains("re-land"), ex.getMessage)
-    assert(Dedup.listDedupGens(fs, dedupPath) == gensBefore,
+    assert(Dedup.manifest(spark, dedupPath).gens == gensBefore,
       "the refused compaction must leave the chain untouched")
-    assert(Dedup.dedupFoldWatermark(spark, dedupPath).isEmpty,
+    assert(Dedup.manifest(spark, dedupPath).foldWatermark.isEmpty,
       "a refused fold must not advance the fold watermark")
     // REMEDIATION (the refusal's own text): re-land batch 0 into the ANN
     // chain under the same id and commit - the gate then passes and the
@@ -813,7 +873,7 @@ class ExtensionSpec extends SparkSpec {
     assert(fa < fb, "the post-remediation compaction must actually rewrite")
     // the fold watermark is PERSISTED: the largest folded batch id,
     // carried by the new head generation
-    assert(Dedup.dedupFoldWatermark(spark, dedupPath).contains(0L))
+    assert(Dedup.manifest(spark, dedupPath).foldWatermark.contains(0L))
     // ...and the census stays SOUND across the fold: batch 0 is no longer
     // name-observable in the dedup refs, but its id is at the fold
     // watermark, so the fold-aware census reads 'both' (in_dedup=false)
@@ -846,7 +906,7 @@ class ExtensionSpec extends SparkSpec {
     Dedup.commitDedupBatchToManifest(spark, dedupPath, 1L)
     IvfIndex.compactAdcIndexCodesManifest(spark, annDir, targetBytes = 1L << 30,
       minRetainedBatchId = Some(2L), coverageGuard = Some(dedupPath)): Unit
-    assert(IvfIndex.adcFoldWatermark(spark, annDir).contains(1L))
+    assert(IvfIndex.manifest(spark, annDir).foldWatermark.contains(1L))
     // both batches verify through the two fold watermarks + the live refs
     Consistency.requireCoverage(spark, dedupPath, annDir, Seq(0L, 1L))
   }
@@ -890,8 +950,8 @@ class ExtensionSpec extends SparkSpec {
     val (fb, fa) = Dedup.compactDedupIndexManifest(spark, dedupPath, targetFiles = 1,
       minRetainedBatchId = Some(4L), coverageGuard = Some(annDir))
     assert(fa < fb, "the gap-state compaction must actually rewrite")
-    assert(Dedup.dedupFoldWatermark(spark, dedupPath).contains(3L))
-    assert(Dedup.dedupFoldedBatches(spark, dedupPath) == Set(1L, 3L),
+    assert(Dedup.manifest(spark, dedupPath).foldWatermark.contains(3L))
+    assert(Dedup.manifest(spark, dedupPath).foldedBatches == Set(1L, 3L),
       "the folded-id set is exact — no dense-range claim over the gap")
     // The census still reports the REAL divergence for the gap batch...
     val row = Consistency.crossArtifactCoverage(spark, dedupPath, annDir)
@@ -918,7 +978,7 @@ class ExtensionSpec extends SparkSpec {
     Consistency.requireCoverage(spark, dedupPath, annDir, Seq(1L, 2L, 3L))
     IvfIndex.compactAdcIndexCodesManifest(spark, annDir, targetBytes = 1L << 30,
       minRetainedBatchId = Some(4L), coverageGuard = Some(dedupPath)): Unit
-    assert(IvfIndex.adcFoldedBatches(spark, annDir).contains(2L))
+    assert(IvfIndex.manifest(spark, annDir).foldedBatches.contains(2L))
     assert(Consistency.crossArtifactCoverage(spark, dedupPath, annDir)
       .filter(col("status") =!= "both").isEmpty, "post-remediation census is clean")
   }

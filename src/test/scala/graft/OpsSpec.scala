@@ -285,32 +285,14 @@ class OpsSpec extends SparkSpec {
     assert(Dedup.loadDedupIndexSnapshot(spark, dir).collect().toSet == full)
   }
 
-  test("dedup manifest: commit guard refuses a stale parent; orphan sweep spares in-flight gens") {
-    import graft.operators.Dedup
-    val dir = SparkSpec.tempDir("graft_dedup_guard").toString
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val refs = Seq(("sig", "part-spec.parquet", 1L))
-    Dedup.commitDedupGen(spark, fs, dir, 0L, refs, expectedParent = None)
-    Dedup.commitDedupGen(spark, fs, dir, 1L, refs, expectedParent = Some(0L))
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.commitDedupGen(spark, fs, dir, 2L, refs, expectedParent = Some(0L))
-    }
-    assert(ex.getMessage.contains("head moved"), ex.getMessage)
-    assert(Dedup.listDedupGens(fs, dir) == Seq(0L, 1L), "a refused commit must leave the chain untouched")
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(dir)).exists(_.getPath.getName.startsWith("_manifest_tmp")),
-      "a refused commit must leave no staged scratch behind (the shared head-commit protocol's hygiene rule)")
-    // the PUT-overwrite fence (fence 2): on an object store both twins can
-    // pass fence 1 and PUT gen-N, last write silently winning — the
-    // read-back must tell the loser its world is NOT what readers resolve
-    val exPut = intercept[IllegalArgumentException] {
-      Dedup.requireDedupGenCommitWon(spark, dir, 1L, "not-the-winning-token")
-    }
-    assert(exPut.getMessage.contains("ANOTHER writer"), exPut.getMessage)
+  test("dedup manifest: orphan sweep spares in-flight gens") {
+    import graft.operators.{Dedup, Manifest}
     // orphan sweep on a real index: passed-gen orphans die, ahead-of-head spared
     val docs = (1L to 10L).map(i => (i, s"document number $i with shared filler words")).toDF("doc_id", "text")
     val idx = SparkSpec.tempDir("graft_dedup_orphans").resolve("index").toString
     Dedup.saveDedupIndex(Dedup.buildDedupIndex(docs, "doc_id", "text"), idx)
     Dedup.writeDedupManifest(spark, idx) // gen 0 = the head
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(new org.apache.hadoop.fs.Path(s"$idx/m0bin-orphan.parquet")).close()
     fs.create(new org.apache.hadoop.fs.Path(s"$idx/m5bin-inflight.parquet")).close()
     val before = Dedup.loadDedupIndexSnapshot(spark, idx).collect().toSet
@@ -348,23 +330,23 @@ class OpsSpec extends SparkSpec {
     def snap() = Dedup.loadDedupIndexSnapshot(spark, mIdx).collect().toSet
     val contentBefore = snap()
     val idleT = Dedup.maintainDedupIndexManifest(spark, mIdx, maxFiles = 1000, minRetainedBatchId = Some(1L))
-    assert(!idleT.compacted && Dedup.listDedupGens(fs, mIdx) == Seq(0L, 1L), "idle tick must not grow the chain")
+    assert(!idleT.compacted && Dedup.manifest(spark, mIdx).gens == Seq(0L, 1L), "idle tick must not grow the chain")
     val commitT = Dedup.maintainDedupIndexManifest(spark, mIdx, maxFiles = 2, targetFiles = 1,
       minRetainedBatchId = Some(1L), keepGens = 1)
     assert(commitT.compacted && commitT.filesAfter == 1L, commitT.toString)
-    assert(Dedup.listDedupGens(fs, mIdx) == Seq(1L, 2L),
+    assert(Dedup.manifest(spark, mIdx).gens == Seq(1L, 2L),
       "a committing tick must keep the pre-tick head readable (keepGens counts beyond its own commits)")
     assert(snap() == contentBefore, "maintenance must be content-invisible")
     val nextT = Dedup.maintainDedupIndexManifest(spark, mIdx, maxFiles = 1000, keepGens = 1,
       minRetainedBatchId = Some(1L))
     assert(!nextT.compacted && nextT.sweptFiles > 0L, s"the next tick reclaims the superseded files: $nextT")
-    assert(Dedup.listDedupGens(fs, mIdx) == Seq(2L))
+    assert(Dedup.manifest(spark, mIdx).gens == Seq(2L))
     assert(snap() == contentBefore)
 
     val oldStamped = new org.apache.hadoop.fs.Path(s"$idx/_mcompact_tmp_ts1000_crashed")
     fs.mkdirs(oldStamped)
     val freshStamped =
-      new org.apache.hadoop.fs.Path(s"$idx/${graft.operators.IvfIndex.scratchName("_mcompact_tmp", "staging-now")}")
+      new org.apache.hadoop.fs.Path(s"$idx/${Manifest.scratchName("_mcompact_tmp", "staging-now")}")
     fs.mkdirs(freshStamped)
     fs.setTimes(freshStamped, 0L, 0L) // simulate the object-store epoch-0 dir mtime
     Dedup.cleanupDedupGenerations(spark, idx, keepGens = 2)

@@ -178,8 +178,7 @@ class ScaleSpec extends SparkSpec {
     Dedup.appendDedupIndex(
       Dedup.buildDedupIndex(docs.filter($"doc_id" % 2 === 1), "doc_id", "text"), dir, batchId = Some(0L))
     Dedup.commitDedupBatchToManifest(spark, dir, 0L)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Dedup.listDedupGens(fs, dir).max == 1L)
+    assert(Dedup.manifest(spark, dir).gens.max == 1L)
     assert(Dedup.dedupServeGeneration(spark, "graft_pub_t").contains(0L))
     // a re-publish catches the layout up to the head
     assert(Dedup.publishDedupServeTables(spark, dir, "graft_pub_t", buckets = 2) == 1L)

@@ -12,17 +12,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
-
   /** A fresh directory under `java.io.tmpdir`, deleted recursively, with
     * whatever was written into it later, when the test JVM exits.
     */
-  def tempDir(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    tempDirs.add(dir.toFile)
-    dir
-  }
+  def tempDir(prefix: String): java.nio.file.Path = Harness.tempDir(prefix)
 
   lazy val session: SparkSession = {
     val s = SparkSession
