@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Pin
 import graft.ops._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,9 +14,17 @@ import org.apache.spark.sql.functions._
   * with `Country_Region`, `iso2`, `Lat`, `Long_` and a `__row_id` file-order
   * column (see [[graft.ops.Enrich.withFileOrder]]).
   *
-  * Both pipelines are single-stage lineages: scan → projection (unpivot) →
-  * broadcast join(s) → projection — no wide shuffle anywhere, so they scale
-  * linearly with the fact table.
+  * Each pipeline spreads its driving table with [[graft.operators.Pin.spread]]
+  * on (`Country/Region`, `Province/State`): a scan that cannot reach half of
+  * `spark.sql.shuffle.partitions` splits (one small file, one row group) is
+  * hash-repartitioned into that many partitions, so the per-row work (the
+  * cast lambda, `arrays_zip`, the broadcast probes and the JSON write) runs
+  * on every core instead of in one task. The driving table is the category
+  * fact in [[parser]] and `confirmed` in [[parser2]]. A scan that already
+  * has the splits, or a driving table behind its own shuffle, is left as it
+  * is. The other inputs are broadcast sides and are never shuffled, so the
+  * lineage is scan → (spread) → projection → broadcast join(s) → projection
+  * and scales linearly with the fact table.
   */
 object Pipelines {
 
@@ -26,7 +35,7 @@ object Pipelines {
     */
   def parser(fact: DataFrame, lookup: DataFrame): DataFrame = {
     val cls = Normalize.classify(fact.columns.toSeq)
-    val nested = Unpivot.nest(fact, cls.dateCols)
+    val nested = Unpivot.nest(Pin.spread(fact, Location.map(col): _*), cls.dateCols)
     val normalized = nested.select((col("time_series") +: Normalize.lowercasedAttrs(cls)): _*)
     Enrich.enrich(
       normalized,
@@ -47,12 +56,11 @@ object Pipelines {
     * schema matches FIXTURES.md A4.
     */
   def parser2(confirmed: DataFrame, deaths: DataFrame, recovered: DataFrame, lookup: DataFrame): DataFrame = {
-    val key = Seq("Country/Region", "Province/State")
     val combined = Combine.combine(
-      driver = confirmed,
+      driver = Pin.spread(confirmed, Location.map(col): _*),
       driverMeasure = "confirmed",
       measures = Seq("deaths" -> deaths, "recovered" -> recovered),
-      keyCols = key,
+      keyCols = Location,
     )
     val cls = Normalize.classify(confirmed.columns.toSeq)
     val normalized = combined.select((col("time_series") +: Normalize.lowercasedAttrs(cls)): _*)
@@ -65,6 +73,11 @@ object Pipelines {
       projections = Seq((col("iso2"), "iso2")),
     )
   }
+
+  /** The location key. Its columns are deterministic row attributes, so a
+    * hash repartition on them is safe under task retry.
+    */
+  private val Location = Seq("Country/Region", "Province/State")
 
   /** Output key synthesis (P5/P6, reference `src/parser.py:72-75`):
     * `type=<category>/<country>[-<province>].json`.

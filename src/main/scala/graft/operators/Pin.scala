@@ -89,7 +89,11 @@ object Pin {
     * immediately after the read") pays one hash shuffle of the projected
     * input, which the heavy map work amortizes by construction. Keys must
     * be deterministic row attributes (hash repartition — round-robin
-    * re-draws under task retry).
+    * re-draws under task retry). Callers: the corpus map passes in
+    * [[Dedup]] and [[Multimodal]], and the driving table of both JHU
+    * pipelines, [[graft.Pipelines.parser]] (the category fact) and
+    * [[graft.Pipelines.parser2]] (`confirmed`), whose one-file daily
+    * inputs otherwise cast, zip, probe and write every row in one task.
     *
     * The decision comes from CATALOG METADATA (leaf file counts/bytes,
     * checkpoint RDD partition counts), never from `df.rdd` — which

@@ -285,54 +285,6 @@ object Similarity {
       )
   }
 
-  /** The previous explode-based covariance plan, kept as the equivalence
-    * reference for [[covarianceMatrix]]'s Gram aggregator (PropertySpec
-    * proves cell-for-cell identity, including the IEEE expression order).
-    * Correct and scale-safe, but materializes dim·(dim+1)/2 struct rows
-    * per input row — the constant factor the aggregator removes.
-    */
-  private[graft] def covarianceMatrixExploded(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    require(dim >= 1, s"covarianceMatrix: bad dim $dim")
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def dsum38(c: Column) = sum(c.cast(d38)).cast("double")
-    val q = df.select(
-      transform(col(vecCol), v => floor(v.cast("double") * lit(1000000.0) + lit(0.5)).cast("long")).as("__q")
-    )
-    val pairsArr = flatten(
-      transform(
-        sequence(lit(0), lit(dim - 1)),
-        i =>
-          transform(
-            sequence(i, lit(dim - 1)),
-            j =>
-              struct(
-                i.cast("int").as("i"),
-                j.cast("int").as("j"),
-                element_at(col("__q"), i + 1).as("qi"),
-                element_at(col("__q"), j + 1).as("qj"),
-              ),
-          ),
-      )
-    )
-    q.select(explode(pairsArr).as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"), col("p.qi").as("__qi"), col("p.qj").as("__qj"))
-      .groupBy(col("i"), col("j"))
-      .agg(
-        count(lit(1)).as("n"),
-        dsum38(col("__qi")).as("__sx"),
-        dsum38(col("__qj")).as("__sy"),
-        dsum38(col("__qi") * col("__qj")).as("__sxy"),
-      )
-      .withColumn("__nd", col("n").cast("double"))
-      .select(
-        col("i"),
-        col("j"),
-        col("n"),
-        (((col("__nd") * col("__sxy") - col("__sx") * col("__sy")) / (col("__nd") * col("__nd"))) / lit(1.0e12))
-          .as("cov"),
-      )
-  }
-
   /** Deterministic pseudo-random hyperplane component for (plane j, dim i):
     * an LCG over j*dim+i mapped to [-0.5, 0.5). No RNG object — the "planes"
     * exist only as this formula, identically on every executor.

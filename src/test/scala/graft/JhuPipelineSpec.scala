@@ -132,4 +132,41 @@ class JhuPipelineSpec extends SparkSpec {
       "type=confirmed/Atlantis.json",
     ))
   }
+
+  /** `locations` distinct confirmed rows (the three fixture countries, each
+    * under many provinces), landed as parquet in `files` files.
+    */
+  private def landedConfirmed(locations: Int, files: Int): DataFrame = {
+    val countries = Seq("Freedonia", "Sylvania", "Atlantis")
+    val rows = (0 until locations).map { i =>
+      (if (i < countries.size) "" else s"P$i", countries(i % countries.size), "1.0", "2.0", s"$i", s"${2 * i}")
+    }
+    val df = rows.toDF("Province/State", "Country/Region", "Lat", "Long", "1/22/20", "1/23/20")
+    val dir = SparkSpec.tempDir("graft_jhu_landed").toString
+    (if (files == 1) df.coalesce(1) else df.repartition(files)).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("parser over a one-file input writes one part file per shuffle partition, with the unspread records") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val n = spark.sessionState.conf.numShufflePartitions
+    // the type=confirmed/ part files of a lake written from `fact`
+    def parts(fact: DataFrame): Seq[Path] = {
+      val lake = SparkSpec.tempDir("graft_jhu_lake")
+      Sink.partitionedJson(Pipelines.parser(fact, lookup), "confirmed", lake.toString)
+      Files.list(lake.resolve("type=confirmed")).iterator.asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+    }
+    def lines(ps: Seq[Path]): Seq[String] = ps.flatMap(Files.readAllLines(_).asScala).sorted
+    val oneFile = landedConfirmed(64, 1)
+    assert(oneFile.inputFiles.length == 1)
+    val spread = parts(oneFile)
+    assert(spread.size == n, s"one part file per shuffle partition: ${spread.mkString(", ")}")
+    // n input files: the spread does nothing, and the records must not change
+    val wide = landedConfirmed(64, n)
+    assert(wide.inputFiles.length == n)
+    val unspread = lines(parts(wide))
+    assert(unspread.size == 64)
+    assert(lines(spread) == unspread)
+  }
 }

@@ -126,6 +126,60 @@ class PlanSpec extends SparkSpec {
     assert(counts.distinct.size == 1, s"(transforms, casts, coalesces): $counts for 20 vs 400 dates")
   }
 
+  /** 40 distinct locations in the JHU wide shape, every cell a string,
+    * landed as parquet in `files` files under a `prefix` directory.
+    */
+  private def landedJhu(prefix: String, files: Int): (String, DataFrame) = {
+    import spark.implicits._
+    val rows = (0 until 40).map(i => (if (i % 2 == 0) "" else s"P$i", s"C$i", "1.0", "2.0", s"$i", s"${i + 1}"))
+    val df = rows.toDF("Province/State", "Country/Region", "Lat", "Long", "1/22/20", "1/23/20")
+    val dir = SparkSpec.tempDir(prefix).toString
+    (if (files == 1) df.coalesce(1) else df.repartition(files)).write.mode("overwrite").parquet(dir)
+    (dir, spark.read.parquet(dir))
+  }
+
+  test("parser/parser2: a one-file driving table is spread once on the location key; broadcast sides are not") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+    val n = spark.sessionState.conf.numShufflePartitions
+    val key = Seq("Country/Region", "Province/State")
+    def spreads(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case r: RepartitionByExpression => r }
+    def inputFiles(p: LogicalPlan): Seq[String] = p.collectLeaves().flatMap {
+      case lr: LogicalRelation => lr.relation match {
+          case fs: HadoopFsRelation => fs.location.inputFiles.toSeq
+          case _ => Nil
+        }
+      case _ => Nil
+    }
+    def assertSpread(df: DataFrame, drivingDir: String, joins: Int): Unit = {
+      val optimized = df.queryExecution.optimizedPlan
+      val rs = spreads(df)
+      assert(rs.size == 1, s"exactly one repartition:\n$optimized")
+      val r = rs.head
+      assert(r.numPartitions == n, optimized)
+      assert(r.partitionExpressions.flatMap(_.references.map(_.name)) == key, optimized)
+      val read = inputFiles(r)
+      assert(read.nonEmpty && read.forall(_.contains(new java.io.File(drivingDir).getName)), s"spread off the driving table:\n$optimized")
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      assert(all.count(_.isInstanceOf[BroadcastHashJoinExec]) == joins, all.head)
+      assert(!all.exists(p => p.isInstanceOf[SortMergeJoinExec] || p.isInstanceOf[ShuffledHashJoinExec]), all.head)
+      val pinned = all.collect { case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s }
+      assert(pinned.size == 1 && isPin(pinned.head, key.toSet), all.head)
+    }
+    val (factDir, fact) = landedJhu("graft_spread_fact", 1)
+    val (_, deaths) = landedJhu("graft_spread_deaths", 1)
+    val (_, recovered) = landedJhu("graft_spread_recovered", 1)
+    assertSpread(Pipelines.parser(fact, jhuLookup), factDir, joins = 1)
+    assertSpread(Pipelines.parser2(fact, deaths, recovered, jhuLookup), factDir, joins = 3)
+    // a driving table that already has n splits is left alone
+    val (_, wide) = landedJhu("graft_spread_wide", n)
+    assert(wide.inputFiles.length == n)
+    assert(spreads(Pipelines.parser(wide, jhuLookup)).isEmpty)
+    assert(spreads(Pipelines.parser2(wide, deaths, recovered, jhuLookup)).isEmpty)
+  }
+
   test("q09 melt (native unpivot) stays shuffle-free") {
     val p = plan(
       Unpivot.melt(

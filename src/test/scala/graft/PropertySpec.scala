@@ -426,6 +426,57 @@ class PropertySpec extends SparkSpec {
     assert(out(99L) == summed)
   }
 
+  /** The explode-based covariance plan that
+    * [[graft.operators.Similarity.covarianceMatrix]]'s Gram aggregator
+    * replaced, kept here as its equivalence reference (the tests below
+    * prove cell-for-cell identity, including the IEEE expression order).
+    * It materializes dim·(dim+1)/2 struct rows per input row, the
+    * constant factor the aggregator removes.
+    */
+  private def covarianceMatrixExploded(df: org.apache.spark.sql.DataFrame, vecCol: String, dim: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    require(dim >= 1, s"covarianceMatrix: bad dim $dim")
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    def dsum38(c: Column) = sum(c.cast(d38)).cast("double")
+    val q = df.select(
+      transform(col(vecCol), v => floor(v.cast("double") * lit(1000000.0) + lit(0.5)).cast("long")).as("__q")
+    )
+    val pairsArr = flatten(
+      transform(
+        sequence(lit(0), lit(dim - 1)),
+        i =>
+          transform(
+            sequence(i, lit(dim - 1)),
+            j =>
+              struct(
+                i.cast("int").as("i"),
+                j.cast("int").as("j"),
+                element_at(col("__q"), i + 1).as("qi"),
+                element_at(col("__q"), j + 1).as("qj"),
+              ),
+          ),
+      )
+    )
+    q.select(explode(pairsArr).as("p"))
+      .select(col("p.i").as("i"), col("p.j").as("j"), col("p.qi").as("__qi"), col("p.qj").as("__qj"))
+      .groupBy(col("i"), col("j"))
+      .agg(
+        count(lit(1)).as("n"),
+        dsum38(col("__qi")).as("__sx"),
+        dsum38(col("__qj")).as("__sy"),
+        dsum38(col("__qi") * col("__qj")).as("__sxy"),
+      )
+      .withColumn("__nd", col("n").cast("double"))
+      .select(
+        col("i"),
+        col("j"),
+        col("n"),
+        (((col("__nd") * col("__sxy") - col("__sx") * col("__sy")) / (col("__nd") * col("__nd"))) / lit(1.0e12))
+          .as("cov"),
+      )
+  }
+
   test("covarianceMatrix: Gram aggregator is cell-for-cell identical to the explode plan") {
     import graft.operators.Similarity
     val vecGen: Gen[Seq[Float]] = Gen.listOfN(5, Gen.choose(-2.0f, 2.0f)).map(_.toSeq)
@@ -436,7 +487,7 @@ class PropertySpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) = (r.getInt(0), r.getInt(1))
       val got = Similarity.covarianceMatrix(df, "embedding", 5).collect()
         .map(r => key(r) -> (r.getLong(2), r.getDouble(3))).toMap
-      val want = Similarity.covarianceMatrixExploded(df, "embedding", 5).collect()
+      val want = covarianceMatrixExploded(df, "embedding", 5).collect()
         .map(r => key(r) -> (r.getLong(2), r.getDouble(3))).toMap
       assert(got.keySet == want.keySet)
       // exact bit equality, not tolerance: same sums, same IEEE order
@@ -476,7 +527,7 @@ class PropertySpec extends SparkSpec {
       .repartition(4)
     val got = Similarity.covarianceMatrix(df, "embedding", 2).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3)).toMap
-    val want = Similarity.covarianceMatrixExploded(df, "embedding", 2).collect()
+    val want = covarianceMatrixExploded(df, "embedding", 2).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3)).toMap
     assert(got.size == 3)
     want.foreach { case (k, cov) =>
