@@ -716,14 +716,9 @@ object ExtensionQueries {
   }
 
   /** DuckDB mirror of [[graft.operators.Graph.pageRank]] with
-    * `danglingMass = true` over the DIRECTED customer→supplier trade graph
-    * (suppliers are sinks): per iteration the dangling rank sum is divided
-    * by |V| (truncating) and added to every node's inflow before damping —
-    * the same integer rule as the Spark side, unrolled to chained CTEs.
-    */
-  /** DuckDB mirror of [[graft.operators.Graph.pageRankWeighted]] over the
-    * support-weighted user co-occurrence graph: per-edge truncating
-    * `(rank*w) // outw` contributions, unrolled to chained CTEs.
+    * `weightCol = Some("sup")` over the support-weighted user co-occurrence
+    * graph: per-edge truncating `(rank*w) // outw` contributions, unrolled
+    * to chained CTEs.
     */
   private def sqlPageRankWeighted(iters: Int): String = {
     val rounds = (1 to iters)
@@ -749,6 +744,12 @@ object ExtensionQueries {
         SELECT node, rank_s FROM r$iters ORDER BY node"""
   }
 
+  /** DuckDB mirror of [[graft.operators.Graph.pageRank]] with
+    * `danglingMass = true` over the DIRECTED customer→supplier trade graph
+    * (suppliers are sinks): per iteration the dangling rank sum is divided
+    * by |V| (truncating) and added to every node's inflow before damping —
+    * the same integer rule as the Spark side, unrolled to chained CTEs.
+    */
   private def sqlPageRankDangling(iters: Int): String = {
     val rounds = (1 to iters)
       .map { i =>
@@ -3733,7 +3734,7 @@ object ExtensionQueries {
       val directed = und
         .select(col("a").as("src"), col("b").as("dst"), col("sup"))
         .unionAll(und.select(col("b").as("src"), col("a").as("dst"), col("sup")))
-      Graph.pageRankWeighted(directed, "src", "dst", "sup", iters = 3).orderBy("node")
+      Graph.pageRank(directed, "src", "dst", iters = 3, weightCol = Some("sup")).orderBy("node")
     }),
     // ---- Embedding OOD census: per-cell share of members below the
     //      own-centroid similarity fence — the embedding-side data filter ----

@@ -751,8 +751,9 @@ object Dedup {
       )
     )
 
-  /** The min-label propagation loop: the labels and the rounds they took,
-    * or None when a label still changed in round `maxRounds`.
+  /** The min-label propagation loop on [[Lineage.iterate]]: the labels and
+    * the rounds they took, or None when a label still changed in round
+    * `maxRounds`.
     */
   private def labelPropagation(edges: DataFrame, maxRounds: Int): Option[(DataFrame, Int)] = {
     val und = Lineage.truncate(
@@ -762,12 +763,10 @@ object Dedup {
         .distinct(),
       eager = false,
     )
-    var labels =
+    val seed =
       Lineage.truncate(und.select(col("src").as("id")).distinct().withColumn("comp", col("id")), eager = false)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      rounds += 1
+    // state: the labels, and how many of them the round that made them changed
+    val run = Lineage.iterate((seed, 1L), maxRounds) { case ((labels, _), _) =>
       val neighborMin = und
         .join(labels.withColumnRenamed("id", "nid"), col("dst") === col("nid"))
         .groupBy(col("src"))
@@ -778,10 +777,9 @@ object Dedup {
           .select(col("id"), col("comp").as("prev"), least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")),
         eager = false,
       )
-      changed = next.filter(col("comp") =!= col("prev")).count()
-      labels = next.select(col("id"), col("comp"))
-    }
-    if (changed > 0) None else Some((labels, rounds))
+      (next.select(col("id"), col("comp")), next.filter(col("comp") =!= col("prev")).count())
+    } { case ((_, changed), _) => changed == 0 }
+    if (run.converged) Some((run.state._1, run.rounds)) else None
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (the large-star /
@@ -799,7 +797,8 @@ object Dedup {
     * min-based and deterministic (no RNG). At fixpoint the edge set is a
     * union of stars whose centers are the component minima — the same
     * (id, comp = min id) contract as [[connectedComponents]], so the two are
-    * interchangeable. Lineage is truncated per round with a LAZY checkpoint
+    * interchangeable. The rounds run on [[Lineage.iterate]]; lineage is
+    * truncated per round with a LAZY checkpoint
     * (`Lineage.truncate(_, eager = false)`); the fixpoint fingerprint aggregation is the
     * action that materializes it, and it runs every SECOND round, so two
     * rounds of contraction plus the convergence check ride one job.
@@ -819,7 +818,7 @@ object Dedup {
       eager = false,
     )
     // canonical working set: undirected closure, self-loops dropped
-    var e = Lineage.truncate(
+    val canonical = Lineage.truncate(
       edges
         .select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -837,22 +836,8 @@ object Dedup {
       val r = d.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var prev = fingerprint(e)
-    var rounds = 0
-    var converged = false
-    while (!converged) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponentsStar did not converge in $maxRounds rounds — star contraction is " +
-            "O(log n), so this indicates a bug or a pathological input, not a long chain."
-        )
-      // Convergence is only CHECKED every second round: the checkpoints stay
-      // lazy, so a skipped check means the two rounds materialize under ONE
-      // action — half the job launches, at the price of up to two extra
-      // (cheap, already-fixpoint) rounds. Correct because the star fixpoint
-      // is absorbing: once e stops changing it never changes again, so two
-      // equal CHECKED fingerprints still witness the fixpoint.
+    var prev = fingerprint(canonical)
+    val run = Lineage.iterate(canonical, maxRounds) { (e, _) =>
       // large-star: (v, m(u)) for v in N(u), v > u — keeps the graph
       // connected while hanging big nodes off local minima. No dedup here:
       // the small-star canonicalization's distinct absorbs duplicates.
@@ -875,19 +860,32 @@ object Dedup {
         .unionAll(mins.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
-      val ssc = Lineage.truncate(ss, eager = false)
-      if (rounds % 2 == 0 || rounds == maxRounds) {
-        val cur = fingerprint(ssc)
-        converged = cur == prev
+      Lineage.truncate(ss, eager = false)
+    } { (e, round) =>
+      // Convergence is only CHECKED every second round (and at the cap):
+      // the checkpoints stay lazy, so a skipped check means the two rounds
+      // materialize under ONE action — half the job launches, at the price
+      // of up to two extra (cheap, already-fixpoint) rounds. Correct
+      // because the star fixpoint is absorbing: once e stops changing it
+      // never changes again, so two equal CHECKED fingerprints still
+      // witness the fixpoint.
+      (round % 2 == 0 || round == maxRounds) && {
+        val cur = fingerprint(e)
+        val same = cur == prev
         prev = cur
+        same
       }
-      e = ssc
     }
+    if (!run.converged)
+      throw new IllegalStateException(
+        s"connectedComponentsStar did not converge in $maxRounds rounds — star contraction is " +
+          "O(log n), so this indicates a bug or a pathological input, not a long chain."
+      )
     // fixpoint edges are child -> component-min stars; roots label themselves
     val labeled = nodes
-      .join(e.select(col("src").as("id"), col("dst").as("root")), Seq("id"), "left_outer")
+      .join(run.state.select(col("src").as("id"), col("dst").as("root")), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
-    (labeled, rounds)
+    (labeled, run.rounds)
   }
 
   /** SimHash near-dup pairs: bucket by the TOP `prefixBits` bits (so

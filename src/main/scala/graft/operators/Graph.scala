@@ -65,100 +65,105 @@ object Graph {
 
   /** Fixed-iteration PageRank with damping 0.85, integer-exact across
     * engines: ranks are scaled longs (1e6 = rank 1.0) and one iteration is
-    * {{{ rank'(v) = 150000 + (85 * sum_{u->v} (rank(u) div outdeg(u))) div 100 }}}
-    * — per-edge contributions and the damping factor use truncating integer
-    * division, so every iteration is an order-independent integer sum (no
-    * double accumulation to mirror; the cost is ≤1e-6 rank units of floor
-    * truncation per edge, irrelevant for ranking). Mass through dangling
-    * nodes (no out-edges) is dropped, the common simplification; a fixed
-    * iteration count (not convergence detection) keeps the oracle
-    * expressible as a plain chained-CTE SQL query.
+    * {{{ rank'(v) = 150000 + (85 * sum_{u->v} ((rank(u) * w(u,v)) div W(u))) div 100 }}}
+    * where `W(u)` is u's summed out-weight — per-edge contributions and the
+    * damping factor use truncating integer division, so every iteration is
+    * an order-independent integer sum (no double accumulation to mirror;
+    * the cost is ≤1e-6 rank units of floor truncation per edge, irrelevant
+    * for ranking). A fixed iteration count (not convergence detection)
+    * keeps the oracle expressible as a plain chained-CTE SQL query.
     *
-    * `danglingMass = true` switches to the standard redistribute-to-all
-    * variant: each iteration the summed rank of dangling nodes is divided
-    * (truncating) by |V| and added to every node's inflow BEFORE damping —
-    * still integer-exact, one extra |V|-row anti-join + scalar aggregate
-    * per iteration (the scalar broadcasts back). Use it on graphs with
-    * sinks where total-mass conservation matters.
+    * `weightCol = None` is unit weight: `w = 1` and `W(u)` is u's
+    * out-degree, so each edge carries `rank(u) div outdeg(u)`. A weight
+    * column (cast to long; a duplicate edge keeps its largest weight) splits
+    * a node's rank in proportion to its out-edge weights — co-occurrence
+    * support, affinity scores and edge multiplicities plug in directly.
+    * Only edges with `w > 0` carry rank and count toward `W`; their
+    * endpoints stay in the node set either way, so a node with no positive
+    * out-weight is dangling and the division never sees `W = 0`.
     *
-    * `saltBuckets > 1` salts the per-iteration ranks→edges join via
-    * [[SkewJoin.saltedJoin]]: a hub node (every real web graph has one)
-    * concentrates its out-edges on one reducer every iteration; salting
-    * spreads them over `saltBuckets` at the cost of replicating the
-    * |V|-row rank table `saltBuckets`×. Results are bit-identical (the
-    * inflow sum is an order-independent integer sum).
+    * Mass through dangling nodes is dropped by default, the common
+    * simplification. `danglingMass = true` switches to the standard
+    * redistribute-to-all variant: each iteration the summed rank of
+    * dangling nodes is divided (truncating) by |V| and added to every
+    * node's inflow BEFORE damping — still integer-exact, one extra |V|-row
+    * anti-join + scalar aggregate per iteration (the scalar broadcasts
+    * back). Use it on graphs with sinks where total-mass conservation
+    * matters.
     *
     * Scale design: each iteration is the canonical two-shuffle plan — join
     * ranks (|V| rows, fixed-width) to edges on src, then re-aggregate by
     * dst; the edge list itself never mutates, so at cluster scale you
     * pre-partition BOTH edge tables by key once (bucketing) and every
-    * iteration's join is co-located. Lineage is truncated per iteration
-    * ([[Lineage.truncate]] — the `spark.graft.reliableCheckpoints` knob
-    * applies), so the plan doesn't grow with the iteration count.
+    * iteration's join is co-located. The rounds run on [[Lineage.iterate]];
+    * each but the last is truncated LAZILY ([[Lineage.truncate]] — the
+    * `spark.graft.reliableCheckpoints` knob applies), so the plan doesn't
+    * grow with the iteration count and the caller's single action
+    * materializes every round in one cascading job instead of one blocking
+    * job per round.
     */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      saltBuckets: Int = 1,
+      weightCol: Option[String] = None,
       danglingMass: Boolean = false,
   ): DataFrame = {
     require(iters >= 1 && iters <= 100, s"pageRank: iters must be in [1, 100]: $iters")
-    require(saltBuckets >= 1 && saltBuckets <= 1024, s"pageRank: saltBuckets must be in [1, 1024]: $saltBuckets")
-    // Edge set, node list, and out-degrees are reused by EVERY iteration's
+    // Edge set, node list, and out-weights are reused by EVERY iteration's
     // joins — materialize each once (off the materialized edge set, not the
     // raw plan, or each iteration re-runs the caller's edge-building query).
-    val ej = Lineage.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
+    val ej = Lineage.truncate(
+      edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), weightCol.fold(lit(1L))(col(_).cast("long")).as("w"))
+        .groupBy(col("src"), col("dst"))
+        .agg(max(col("w")).as("w"))
+    )
     val nodes = Lineage.truncate(
       ej.select(col("src").as("node")).union(ej.select(col("dst").as("node"))).distinct()
     )
-    val oj = Lineage.truncate(ej.groupBy(col("src")).agg(count(lit(1)).as("outdeg")).withColumnRenamed("src", "node"))
+    val carrying = ej.filter(col("w") > 0)
+    val oj = Lineage.truncate(
+      carrying.groupBy(col("src")).agg(sum(col("w")).as("outw")).withColumnRenamed("src", "node")
+    )
     // |V| is iteration-invariant — materialize the 1-row aggregate once.
     val nv = if (danglingMass) Lineage.truncate(nodes.agg(count(lit(1)).as("__nv"))) else null
-    var ranks = nodes.withColumn("rank_s", lit(1000000L))
-    for (i <- 1 to iters) {
-      // Inner join: nodes without out-edges contribute nothing by definition.
-      val withDeg = ranks.join(oj, "node")
-      val contrib =
-        if (saltBuckets == 1)
-          ej.join(withDeg, ej("src") === withDeg("node"))
-            .select(ej("dst").as("dst"), expr("rank_s div outdeg").as("c"))
-        else
-          SkewJoin
-            .saltedJoin(ej, withDeg.withColumnRenamed("node", "src"), "src", col("dst"), saltBuckets)
-            .select(col("dst"), expr("rank_s div outdeg").as("c"))
-      val inflow = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_s"))
-      val next =
-        if (danglingMass) {
-          // dangling mass this round: ranks of nodes with no out-edges,
-          // redistributed as a broadcast scalar (dang div |V| each).
-          val dang = ranks
-            .join(oj, Seq("node"), "left_anti")
-            .agg(coalesce(sum(col("rank_s")), lit(0L)).as("__dang"))
-            .crossJoin(nv)
-          nodes
-            .join(inflow, col("node") === col("dst"), "left_outer")
-            .crossJoin(broadcast(dang))
-            .select(
-              col("node"),
-              (lit(150000L) + expr("85 * (coalesce(in_s, CAST(0 AS BIGINT)) + __dang div __nv) div 100"))
-                .as("rank_s"),
-            )
-        } else
-          nodes
-            .join(inflow, col("node") === col("dst"), "left_outer")
-            .select(
-              col("node"),
-              (lit(150000L) + expr("85 * coalesce(in_s, CAST(0 AS BIGINT)) div 100")).as("rank_s"),
-            )
-      // LAZY truncation: pageRank has no per-round driver action (unlike
-      // CC's convergence check), so the caller's single action materializes
-      // every round's checkpoint in one cascading job instead of one
-      // blocking job per round.
-      ranks = if (i == iters) next else Lineage.truncate(next, eager = false)
-    }
-    ranks
+    Lineage
+      .iterate(nodes.withColumn("rank_s", lit(1000000L)), iters) { (ranks, i) =>
+        // Inner join: nodes without positive out-weight contribute nothing.
+        val withW = ranks.join(oj, "node")
+        val inflow = carrying
+          .join(withW, carrying("src") === withW("node"))
+          .select(carrying("dst").as("dst"), expr("(rank_s * w) div outw").as("c"))
+          .groupBy(col("dst"))
+          .agg(sum(col("c")).as("in_s"))
+        val next =
+          if (danglingMass) {
+            // dangling mass this round: ranks of nodes with no out-weight,
+            // redistributed as a broadcast scalar (dang div |V| each).
+            val dang = ranks
+              .join(oj, Seq("node"), "left_anti")
+              .agg(coalesce(sum(col("rank_s")), lit(0L)).as("__dang"))
+              .crossJoin(nv)
+            nodes
+              .join(inflow, col("node") === col("dst"), "left_outer")
+              .crossJoin(broadcast(dang))
+              .select(
+                col("node"),
+                (lit(150000L) + expr("85 * (coalesce(in_s, CAST(0 AS BIGINT)) + __dang div __nv) div 100"))
+                  .as("rank_s"),
+              )
+          } else
+            nodes
+              .join(inflow, col("node") === col("dst"), "left_outer")
+              .select(
+                col("node"),
+                (lit(150000L) + expr("85 * coalesce(in_s, CAST(0 AS BIGINT)) div 100")).as("rank_s"),
+              )
+        if (i == iters) next else Lineage.truncate(next, eager = false)
+      }((_, _) => false)
+      .state
   }
 
   /** Per-node triangle participation counts over an undirected graph given
@@ -219,39 +224,27 @@ object Graph {
     * rows) onto the undirected edge list + two partial-aggregated groupBys
     * keyed by node — the PageRank plan shape; the edge set is materialized
     * once and never mutates (bucket both sides on a cluster and every
-    * round's join is co-located). Lineage truncated per round.
-    * `saltBuckets > 1` salts the labels→edges join ([[SkewJoin.saltedJoin]])
-    * for hub-skewed graphs — results identical (max_by over counts is
-    * order-independent).
+    * round's join is co-located). The rounds run on [[Lineage.iterate]]
+    * with [[pageRank]]'s lazy per-round truncation.
     */
-  def labelPropagation(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iters: Int,
-      saltBuckets: Int = 1,
-  ): DataFrame = {
+  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"labelPropagation: iters must be in [1, 50]: $iters")
-    require(saltBuckets >= 1 && saltBuckets <= 1024, s"labelPropagation: saltBuckets must be in [1, 1024]: $saltBuckets")
     val e = canonicalEdges(edges, srcCol, dstCol)
     val und = Lineage.truncate(
       e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
     )
-    var labels = und.select(col("a").as("node")).distinct().withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      val joined =
-        if (saltBuckets == 1) und.join(labels, col("b") === col("node"))
-        else SkewJoin.saltedJoin(und, labels.withColumnRenamed("node", "b"), "b", col("a"), saltBuckets)
-      val next = joined
-        .groupBy(col("a"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("a"))
-        .agg(expr("max_by(label, named_struct('c', __c, 'nl', -label))").as("label"))
-        .select(col("a").as("node"), col("label"))
-      // same lazy-truncation rationale as pageRank: no per-round action
-      labels = if (i == iters) next else Lineage.truncate(next, eager = false)
-    }
-    labels
+    Lineage
+      .iterate(und.select(col("a").as("node")).distinct().withColumn("label", col("node")), iters) { (labels, i) =>
+        val next = und
+          .join(labels, col("b") === col("node"))
+          .groupBy(col("a"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+          .groupBy(col("a"))
+          .agg(expr("max_by(label, named_struct('c', __c, 'nl', -label))").as("label"))
+          .select(col("a").as("node"), col("label"))
+        if (i == iters) next else Lineage.truncate(next, eager = false)
+      }((_, _) => false)
+      .state
   }
 
   /** Normalize an undirected edge list to canonical `a < b` form: each edge
@@ -315,38 +308,21 @@ object Graph {
       .agg(count(lit(1)).as("triangles"))
   }
 
-  /** Multi-source BFS: minimum hop distance from any seed node, capped at
-    * `maxHops` — k-hop neighborhoods, blast-radius analysis, "how far is
-    * every account from a known-bad seed set".
-    *
-    * Frontier-based rounds (the at-scale BFS shape): round r joins ONLY the
-    * nodes first reached at distance r-1 against the edge set, so per-round
-    * work is proportional to the frontier's out-edges, not the graph — the
-    * same reason Pregel-style engines beat naive whole-graph iteration.
-    * Each frontier and the accumulated distance table are materialized
-    * behind [[Lineage.truncate]] (same per-round policy as [[pageRank]]);
-    * an empty frontier short-circuits the remaining rounds (the check rides
-    * the materialization the round needs anyway). Distances are exact
-    * integers — no tie-breaking needed: a node's first reaching round IS
-    * its distance, and the anti-join guarantees each node is assigned once.
-    *
-    * Output: (node, d) for every node within `maxHops` of a seed —
-    * unreached nodes are absent (left-join the node list for a dense form).
-    */
   /** k-core decomposition (membership for ONE k): iteratively peel nodes of
     * degree < k until the remaining subgraph is stable — the standard
     * density filter (spam/bot rings, well-connected user cores, vocabulary
     * cores in co-occurrence graphs). Returns each surviving node with its
     * degree INSIDE the core.
     *
-    * Per round: one degree aggregation + one anti-join of the edge set
-    * against the (typically tiny) peel set, both materialized once behind
-    * [[Lineage.truncate]] — per-round cost is proportional to the current
-    * edge set, shrinking monotonically; convergence (empty peel set) rides
-    * the degree table the round needs anyway. Rounds are data-dependent
-    * (a chain peels one layer per round), so an unconverged `maxRounds`
-    * exit throws LOUDLY — a silent partial peel would over-report the
-    * core — the [[graft.operators.Dedup.connectedComponents]] stance.
+    * Per round ([[Lineage.iterate]]): one degree aggregation + one anti-join
+    * of the edge set against the (typically tiny) peel set, both
+    * materialized once behind [[Lineage.truncate]] — per-round cost is
+    * proportional to the current edge set, shrinking monotonically;
+    * convergence (empty peel set) rides the degree table the round needs
+    * anyway. Rounds are data-dependent (a chain peels one layer per round),
+    * so an unconverged `maxRounds` exit throws LOUDLY — a silent partial
+    * peel would over-report the core — the
+    * [[graft.operators.Dedup.connectedComponents]] stance.
     */
   def kCore(
       edges: DataFrame,
@@ -356,26 +332,24 @@ object Graph {
       maxRounds: Int = 20,
   ): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1: $k")
-    var e = canonicalEdges(edges, srcCol, dstCol)
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      val deg = degreesOf(e)
-      val weak = deg.filter(col("__d") < k)
-      converged = weak.isEmpty
-      if (!converged) {
-        e = Lineage.truncate(
-          e.join(weak.select(col("node").as("a")), Seq("a"), "left_anti")
-            .join(weak.select(col("node").as("b")), Seq("b"), "left_anti")
+    // state: the edge set, and whether its last round found nothing to peel
+    val peeled = Lineage.iterate((canonicalEdges(edges, srcCol, dstCol), false), maxRounds) { case ((e, _), _) =>
+      val weak = degreesOf(e).filter(col("__d") < k)
+      if (weak.isEmpty) (e, true)
+      else
+        (
+          Lineage.truncate(
+            e.join(weak.select(col("node").as("a")), Seq("a"), "left_anti")
+              .join(weak.select(col("node").as("b")), Seq("b"), "left_anti")
+          ),
+          false,
         )
-      }
-      r += 1
-    }
-    if (!converged)
+    } { case ((_, stable), _) => stable }
+    if (!peeled.converged)
       throw new IllegalStateException(
         s"kCore: not converged after $maxRounds rounds (k=$k) — deep peeling chains need a higher maxRounds"
       )
-    degreesOf(e)
+    degreesOf(peeled.state._1)
       .select(col("node"), col("__d").as("core_degree"))
       .filter(col("core_degree") >= k)
   }
@@ -435,13 +409,8 @@ object Graph {
     * estimator for closeness/harmonic centrality (exact all-pairs is
     * O(V·E), never an option at scale; landmark count is the
     * precision dial). The scaled-integer form keeps the score exact and
-    * order-independent across engines.
-    *
-    * Scale shape: ALL landmarks advance in the SAME frontier loop — the
-    * per-hop work is one (lm, node)-keyed frontier join against the edge
-    * set, not |landmarks| separate BFS runs; visited state is fixed-width
-    * (lm, node, d) rows, first visit pins the shortest distance (the
-    * [[bfsHops]] anti-join rule per landmark). Lineage truncated per hop.
+    * order-independent across engines. ALL landmarks advance in ONE
+    * [[frontierDistances]] loop.
     */
   def harmonicCentrality(
       edges: DataFrame,
@@ -452,87 +421,21 @@ object Graph {
       maxHops: Int,
   ): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30, s"harmonicCentrality: maxHops must be in [1, 30]: $maxHops")
-    val ej = Lineage.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    var dist = Lineage.truncate(
-      landmarks
-        .select(col(lmCol).as("lm"))
-        .distinct()
-        .select(col("lm"), col("lm").as("node"))
-        .withColumn("d", lit(0))
-    )
-    var frontier = dist.select(col("lm"), col("node"))
-    var r = 1
-    var exhausted = frontier.isEmpty
-    while (r <= maxHops && !exhausted) {
-      val next = Lineage.truncate(
-        ej.join(frontier.withColumnRenamed("node", "src"), "src")
-          .select(col("lm"), col("dst").as("node"))
-          .distinct()
-          .join(dist.select(col("lm"), col("node")), Seq("lm", "node"), "left_anti")
-      )
-      exhausted = next.isEmpty
-      if (!exhausted) {
-        frontier = next
-        dist = Lineage.truncate(dist.union(next.withColumn("d", lit(r))))
-      }
-      r += 1
-    }
-    dist
+    frontierDistances(edges, srcCol, dstCol, landmarks.select(col(lmCol).as("lm"), col(lmCol).as("node")), maxHops)
       .filter(col("d") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_reached"), sum(expr("1000000 div d")).as("harmonic_s"))
   }
 
-  /** Weighted PageRank: [[pageRank]]'s integer-exact iteration with edge
-    * weights — each node's contribution splits proportionally to out-edge
-    * weight, `(rank·w) div W(src)` per edge with truncating division, so
-    * every round stays an order-independent integer sum. With all weights
-    * equal this reduces EXACTLY to [[pageRank]] (the spec pins that).
-    * Co-occurrence support, affinity scores, and edge multiplicities plug
-    * in directly as `wCol`.
+  /** Multi-source BFS: minimum hop distance from any seed node, capped at
+    * `maxHops` — k-hop neighborhoods, blast-radius analysis, "how far is
+    * every account from a known-bad seed set". It is the one-landmark case
+    * of [[frontierDistances]]: every seed starts under the same landmark, so
+    * a node's first reaching round is its minimum distance over the seeds.
     *
-    * Scale: identical two-shuffle-per-round shape — the only new state is
-    * one long per edge; [[SkewJoin]] salting composes the same way if a
-    * hub dominates.
+    * Output: (node, d) for every node within `maxHops` of a seed —
+    * unreached nodes are absent (left-join the node list for a dense form).
     */
-  def pageRankWeighted(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      wCol: String,
-      iters: Int,
-  ): DataFrame = {
-    require(iters >= 1 && iters <= 100, s"pageRankWeighted: iters must be in [1, 100]: $iters")
-    val ej = Lineage.truncate(
-      edges
-        .select(col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w"))
-        .groupBy(col("src"), col("dst"))
-        .agg(max(col("w")).as("w"))
-    )
-    val nodes = Lineage.truncate(
-      ej.select(col("src").as("node")).union(ej.select(col("dst").as("node"))).distinct()
-    )
-    val oj = Lineage.truncate(
-      ej.groupBy(col("src")).agg(sum(col("w")).as("outw")).withColumnRenamed("src", "node")
-    )
-    var ranks = nodes.withColumn("rank_s", lit(1000000L))
-    for (i <- 1 to iters) {
-      val withW = ranks.join(oj, "node")
-      val contrib = ej
-        .join(withW, ej("src") === withW("node"))
-        .select(ej("dst").as("dst"), expr("(rank_s * w) div outw").as("c"))
-      val inflow = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_s"))
-      val next = nodes
-        .join(inflow, col("node") === col("dst"), "left_outer")
-        .select(
-          col("node"),
-          (lit(150000L) + expr("85 * coalesce(in_s, CAST(0 AS BIGINT)) div 100")).as("rank_s"),
-        )
-      ranks = if (i == iters) next else Lineage.truncate(next, eager = false)
-    }
-    ranks
-  }
-
   def bfsHops(
       edges: DataFrame,
       srcCol: String,
@@ -542,27 +445,50 @@ object Graph {
       maxHops: Int,
   ): DataFrame = {
     require(maxHops >= 0 && maxHops <= 30, s"bfsHops: maxHops must be in [0, 30]: $maxHops")
+    frontierDistances(edges, srcCol, dstCol, seeds.select(lit(0).as("lm"), col(seedCol).as("node")), maxHops)
+      .select(col("node"), col("d"))
+  }
+
+  /** Hop distances `(lm, node, d)` from each landmark `lm` over the directed
+    * edges, within `maxHops`; `sources` are the `(lm, node)` starts at d = 0.
+    *
+    * Frontier-based rounds (the at-scale BFS shape) on [[Lineage.iterate]]:
+    * round r joins ONLY the (lm, node) pairs first reached at distance r-1
+    * against the edge set, so per-round work is proportional to the
+    * frontier's out-edges, not the graph — the same reason Pregel-style
+    * engines beat naive whole-graph iteration — and all landmarks share
+    * one join per hop instead of one BFS run each. Each frontier and the
+    * accumulated distance table are materialized EAGERLY behind
+    * [[Lineage.truncate]]; an empty frontier ends the loop before
+    * `maxHops` (the check rides the materialization the round needs
+    * anyway). Distances are exact integers — no tie-breaking needed: a
+    * pair's first reaching round IS its distance, and the (lm, node)
+    * anti-join assigns each pair once.
+    */
+  private def frontierDistances(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      sources: DataFrame,
+      maxHops: Int,
+  ): DataFrame = {
     val ej = Lineage.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    var dist = Lineage.truncate(
-      seeds.select(col(seedCol).as("node")).distinct().withColumn("d", lit(0))
-    )
-    var frontier = dist.select(col("node"))
-    var r = 1
-    var exhausted = frontier.isEmpty
-    while (r <= maxHops && !exhausted) {
-      val next = Lineage.truncate(
-        ej.join(frontier.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"))
-          .distinct()
-          .join(dist.select(col("node")), Seq("node"), "left_anti")
-      )
-      exhausted = next.isEmpty
-      if (!exhausted) {
-        frontier = next
-        dist = Lineage.truncate(dist.union(next.withColumn("d", lit(r))))
-      }
-      r += 1
-    }
-    dist
+    val start = Lineage.truncate(sources.distinct().withColumn("d", lit(0)))
+    val first = start.select(col("lm"), col("node"))
+    // state: the distances so far, the last frontier, and whether the
+    // round's frontier came out empty
+    Lineage
+      .iterate((start, first, false), if (first.isEmpty) 0 else maxHops) { case ((dist, frontier, _), r) =>
+        val next = Lineage.truncate(
+          ej.join(frontier.withColumnRenamed("node", "src"), "src")
+            .select(col("lm"), col("dst").as("node"))
+            .distinct()
+            .join(dist.select(col("lm"), col("node")), Seq("lm", "node"), "left_anti")
+        )
+        if (next.isEmpty) (dist, frontier, true)
+        else (Lineage.truncate(dist.union(next.withColumn("d", lit(r)))), next, false)
+      } { case ((_, _, exhausted), _) => exhausted }
+      .state
+      ._1
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Dedup, Graph, Lineage}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Closed-form tests for the rank-propagation operator. */
@@ -121,19 +123,6 @@ class GraphSpec extends SparkSpec {
     assert(got == bruteTriangles(edges), s"got=$got expected=${bruteTriangles(edges)}")
   }
 
-  test("pageRank/labelPropagation: salted join path is bit-identical on a hub graph") {
-    val hub = (1L to 30L).flatMap(i => Seq((0L, i), (i, 0L))) ++ Seq((1L, 2L), (2L, 3L), (3L, 1L))
-    val df = hub.toDF("src", "dst")
-    assert(
-      Graph.pageRank(df, "src", "dst", 3, saltBuckets = 4).collect().toSet ==
-        Graph.pageRank(df, "src", "dst", 3).collect().toSet
-    )
-    assert(
-      Graph.labelPropagation(df, "src", "dst", 3, saltBuckets = 4).collect().toSet ==
-        Graph.labelPropagation(df, "src", "dst", 3).collect().toSet
-    )
-  }
-
   test("pageRank: danglingMass redistributes sink rank to every node") {
     // 1,2,3 -> 9; 9 dangles. N=4; round 1: dang = 1000000, share = 250000.
     // node9 = 150000 + 85*(3000000 + 250000) div 100 = 2912500
@@ -241,16 +230,112 @@ class GraphSpec extends SparkSpec {
 
   test("pageRankWeighted: uniform weights reduce exactly to pageRank; weight skews the split") {
     val edges = Seq((1L, 2L, 1L), (1L, 3L, 1L), (2L, 1L, 1L), (3L, 1L, 1L)).toDF("src", "dst", "w")
-    val weighted = Graph.pageRankWeighted(edges, "src", "dst", "w", iters = 3)
+    val weighted = Graph.pageRank(edges, "src", "dst", iters = 3, weightCol = Some("w"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val plain = Graph.pageRank(edges.drop("w"), "src", "dst", iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(weighted == plain)
     // 1 -> {2 (w=3), 3 (w=1)}: node 2 gets (1e6*3) div 4 = 750000 in round 1.
     val skew = Seq((1L, 2L, 3L), (1L, 3L, 1L)).toDF("src", "dst", "w")
-    val r = Graph.pageRankWeighted(skew, "src", "dst", "w", iters = 1)
+    val r = Graph.pageRank(skew, "src", "dst", iters = 1, weightCol = Some("w"))
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r(2L) == 150000L + 85L * 750000L / 100L)
     assert(r(3L) == 150000L + 85L * 250000L / 100L)
+  }
+
+  test("Lineage.iterate: stops when done holds or at the cap, and says which") {
+    val converged = Lineage.iterate(0, 10)((s, r) => s + r)((s, _) => s >= 6)
+    assert(converged == Lineage.Fixpoint(6, 3, converged = true)) // 1 + 2 + 3
+    val capped = Lineage.iterate(0, 2)((s, r) => s + r)((s, _) => s >= 6)
+    assert(capped == Lineage.Fixpoint(3, 2, converged = false))
+    // done sees the round: a check on even rounds only
+    var checks = 0
+    val even = Lineage.iterate(0, 10)((s, _) => s + 1) { (_, r) => (r % 2 == 0) && { checks += 1; r >= 3 } }
+    assert(even == Lineage.Fixpoint(4, 4, converged = true) && checks == 2)
+    assert(Lineage.iterate("x", 0)((_, _) => fail("no round runs"))((_, _) => true) == Lineage.Fixpoint("x", 0, converged = false))
+  }
+
+  /** Spark jobs that `body` launches, counted by a test-local listener; the
+    * listener bus is drained before the listener is added and before the
+    * count is read, because job events arrive asynchronously.
+    */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(sc)
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fixpoint loops: Spark jobs per call and CC rounds stay pinned") {
+    // A guard, not a closed form: the pinned numbers are the jobs each call
+    // launches through the collect of its result. A loop rewrite that adds or
+    // drops a per-round action (or changes how rounds share a job) moves them.
+    val sinks = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 9L), (2L, 9L), (4L, 9L)).toDF("src", "dst")
+    val weighted = Seq((1L, 2L, 3L), (1L, 3L, 1L), (2L, 1L, 2L), (3L, 1L, 1L), (3L, 9L, 4L)).toDF("src", "dst", "w")
+    val pathBase = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (8L, 9L))
+    val path = (pathBase ++ pathBase.map(_.swap)).toDF("src", "dst")
+    val kEdges = Seq(
+      (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (6L, 7L),
+    ).toDF("src", "dst")
+    val chain = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    var lpRounds, starRounds = -1
+    val got = Seq(
+      "pageRank" -> jobsOf(Graph.pageRank(sinks, "src", "dst", 3).collect()),
+      "pageRank danglingMass" -> jobsOf(Graph.pageRank(sinks, "src", "dst", 3, danglingMass = true).collect()),
+      "pageRank weighted" -> jobsOf(Graph.pageRank(weighted, "src", "dst", 3, weightCol = Some("w")).collect()),
+      "labelPropagation" -> jobsOf(Graph.labelPropagation(sinks, "src", "dst", 3).collect()),
+      "bfsHops" -> jobsOf(Graph.bfsHops(path, "src", "dst", Seq(1L).toDF("node"), "node", 4).collect()),
+      "harmonicCentrality" ->
+        jobsOf(Graph.harmonicCentrality(path, "src", "dst", Seq(1L, 5L).toDF("lm"), "lm", maxHops = 3).collect()),
+      "kCore" -> jobsOf(Graph.kCore(kEdges, "src", "dst", k = 2).collect()),
+      "CC label propagation" -> jobsOf {
+        val (labels, r) = Dedup.connectedComponentsCounted(chain)
+        lpRounds = r
+        labels.collect()
+      },
+      "CC star" -> jobsOf {
+        val (labels, r) = Dedup.connectedComponentsStarCounted(chain)
+        starRounds = r
+        labels.collect()
+      },
+    )
+    assert(
+      got == Seq(
+        "pageRank" -> 21,
+        "pageRank danglingMass" -> 35,
+        "pageRank weighted" -> 21,
+        "labelPropagation" -> 14,
+        "bfsHops" -> 30,
+        "harmonicCentrality" -> 25,
+        "kCore" -> 23,
+        "CC label propagation" -> 56,
+        "CC star" -> 42,
+      )
+    )
+    assert(lpRounds == 9 && starRounds == 6, s"lpRounds=$lpRounds starRounds=$starRounds")
+  }
+
+  test("pageRank: a node whose out-weights sum to 0 is dangling, never a division by zero") {
+    // 1 -> 2 carries w = 0, so node 1 has no positive out-weight: it moves
+    // no rank and, under danglingMass, its rank is shared over both nodes.
+    val edges = Seq((1L, 2L, 0L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    def run(iters: Int, dangling: Boolean): Map[Long, Long] =
+      Graph.pageRank(edges, "src", "dst", iters, weightCol = Some("w"), danglingMass = dangling)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // round 1: node 1 = 150000 + 85 * 1000000 div 100; node 2 gets nothing
+    assert(run(1, dangling = false) == Map(1L -> 1000000L, 2L -> 150000L))
+    // dang = 1000000, |V| = 2: node 1 = 150000 + 85 * (1000000 + 500000) div 100
+    assert(run(1, dangling = true) == Map(1L -> 1425000L, 2L -> 575000L))
+    assert(run(3, dangling = false).keySet == Set(1L, 2L))
+    assert(run(3, dangling = true).keySet == Set(1L, 2L))
   }
 }
